@@ -3,7 +3,7 @@
     python3 perfbench/run.py --workload crawl_bfs --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. Builds its inputs from ``--seed``, sets up
-``setups`` times (session, inputs, warm-up; ``setup_s`` is the median),
+``SETUPS`` times (session, inputs, warm-up; ``setup_s`` is the median),
 then repeats the workload's operation until ``--seconds`` of it have been
 measured, checking every output against an oracle computed from the
 generated inputs. ``--trace 0`` reports the end-to-end metrics of
@@ -12,7 +12,8 @@ traced and reports the per-layer metrics. The last line of standard output
 is one JSON object: ``{"correct", "attempted", "failed", "metrics"}``.
 
 Everything the run writes stays under ``.perfbench_work/`` (deleted at
-exit) and ``.perfbench_out/`` (span files of traced runs).
+exit) and ``.perfbench_out/`` (span files of traced runs). Every process
+the run starts has ended before it exits.
 """
 
 from __future__ import annotations
@@ -21,7 +22,9 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -30,7 +33,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUPS = 3
 
-END_TO_END = ("setup_s", "throughput_per_s", "peak_rss_mb")
+END_TO_END = ("setup_s", "cpu_ms_per_item", "peak_rss_mb")
 # a layer that a workload does not run reports 0
 PER_LAYER = (
     "extract.kernel_pages_per_s", "extract.decode_us_per_page",
@@ -50,7 +53,7 @@ PER_LAYER = (
     "textops.lsh_pairs_s", "textops.verify_s", "graph.components_s",
     "textops.decontam_s", "textops.candidate_pairs", "textops.lsh_precision",
     "textops.planted_recall", "spark.jobs", "spark.tasks", "spark.gc_s",
-    "spark.task_s", "trace.overhead_s",
+    "spark.task_s", "trace.overhead_s", "wall.items_per_s",
 )
 
 
@@ -107,6 +110,54 @@ def configure(work: str, events: str | None, cores: int, mem: str) -> None:
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
+
+
+def stop_engine(spark) -> None:
+    """Stop the session, the JVM it runs in and every process started under
+    this one (the JVM's Python worker daemon and its workers), and wait
+    until each has ended, so nothing of a run outlives it."""
+    from pyspark import SparkContext
+
+    from spans import alive, descendants
+
+    if spark is not None:
+        spark.stop()
+    procs = descendants(os.getpid())
+    gateway = SparkContext._gateway
+    jvm = getattr(gateway, "proc", None)
+    if jvm is not None:
+        try:
+            gateway.shutdown()
+        except Exception:  # the gateway may already be closed
+            pass
+        # the gateway JVM exits when its standard input closes
+        if jvm.stdin is not None:
+            jvm.stdin.close()
+        try:
+            jvm.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            jvm.kill()
+            jvm.wait()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+    for sig, grace in ((signal.SIGTERM, 10.0), (signal.SIGKILL, 10.0)):
+        procs = [p for p in procs if alive(p)]
+        for p in procs:
+            try:
+                os.kill(p, sig)
+            except ProcessLookupError:
+                pass
+        deadline = time.monotonic() + grace
+        while procs and time.monotonic() < deadline:
+            time.sleep(0.05)
+            procs = [p for p in procs if alive(p)]
+    if procs:
+        raise RuntimeError(f"processes still running after stop: {procs}")
+
+
+def on_sigterm(signum, frame):
+    """A terminated run still stops what it started (see ``main``)."""
+    raise SystemExit(128 + signum)
 
 
 def declared() -> dict:
@@ -180,7 +231,7 @@ class Run:
         log({"samples": {"setups": len(setups), "ops": len(ops)}})
         return {
             "setup_s": statistics.median(setups),
-            "throughput_per_s": statistics.median(o["items"] / o["seconds"] for o in ops),
+            "cpu_ms_per_item": statistics.median(1e3 * o["cpu_s"] / o["items"] for o in ops),
             "peak_rss_mb": peak,
         }
 
@@ -196,7 +247,7 @@ class Run:
         self.attempted += 1
         layers = wl.traced_op(tracer)
         self.record(layers.pop("_checks"))
-        self.spark.stop()  # flushes the event log
+        stop_engine(self.spark)  # flushes the event log
         self.spark = None
         tracer.self_times()
         per_group = read_event_log(events)
@@ -211,6 +262,7 @@ class Run:
             "spark.gc_s": everything["gc_s"],
             "spark.task_s": everything["task_s"],
             "trace.overhead_s": layers.pop("_wall") - plain["seconds"],
+            "wall.items_per_s": plain["items"] / plain["seconds"],
         })
         if "crawl.rounds" in layers:
             rounds = layers["crawl.rounds"]
@@ -274,6 +326,7 @@ def main(argv=None) -> int:
 
     from workloads import WORKLOADS
 
+    signal.signal(signal.SIGTERM, on_sigterm)
     cores, mem = machine()
     work = os.path.join(ROOT, ".perfbench_work", f"{args.workload}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
@@ -288,8 +341,7 @@ def main(argv=None) -> int:
         else:
             values = run.end_to_end(wl)
     finally:
-        if run.spark is not None:
-            run.spark.stop()
+        stop_engine(run.spark)
         shutil.rmtree(work, ignore_errors=True)
     units = spec[args.trace]
     if set(values) != set(units):

@@ -183,7 +183,8 @@ def _status_kb(pid: int, key: str) -> int:
     return 0
 
 
-def _descendants(root: int) -> List[int]:
+def descendants(root: int) -> List[int]:
+    """Every process under ``root``."""
     parent: Dict[int, int] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
@@ -203,8 +204,34 @@ def _descendants(root: int) -> List[int]:
     return out
 
 
+def alive(pid: int) -> bool:
+    """True while ``pid`` runs; an ended process not yet reaped (a zombie)
+    counts as ended."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] not in ("Z", "X")
+    except (OSError, IndexError):
+        return False
+
+
+def engine_cpu_s() -> float:
+    """CPU time (user + system) used so far by this process and every
+    process under it (the JVM, its Python worker daemon and workers),
+    children already ended and reaped included. Time the host took the
+    CPUs away (steal) is not in it."""
+    total = 0
+    for pid in [os.getpid()] + descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process ended between listing and reading
+            continue
+        total += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def engine_peak_rss_mb(jvm_pid: int) -> float:
     """Sum of the peak resident set (VmHWM) of the JVM and every process
     it spawned (the Python worker daemon and its workers), in MiB."""
-    pids = [jvm_pid] + _descendants(jvm_pid)
+    pids = [jvm_pid] + descendants(jvm_pid)
     return sum(_status_kb(p, "VmHWM") for p in pids) / 1024.0

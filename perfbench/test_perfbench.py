@@ -5,6 +5,7 @@
 
 import json
 import os
+from types import SimpleNamespace
 
 import gen
 import run
@@ -26,12 +27,11 @@ def _size(corpus):
 
 
 def test_same_seed_same_inputs_other_seed_other_inputs():
-    for spec in (workloads.BFS_SPEC, workloads.DEEP_SPEC):
-        a, b, c = (gen.make_corpus(spec, s) for s in (7, 7, 8))
-        assert gen.fingerprint(a) == gen.fingerprint(b)
-        assert gen.fingerprint(a) != gen.fingerprint(c)
-        assert len(a.pages) == len(c.pages)
-        assert abs(_size(a) - _size(c)) / _size(a) < 0.1
+    a, b, c = (gen.make_corpus(workloads.BFS_SPEC, s) for s in (7, 7, 8))
+    assert gen.fingerprint(a) == gen.fingerprint(b)
+    assert gen.fingerprint(a) != gen.fingerprint(c)
+    assert len(a.pages) == len(c.pages)
+    assert abs(_size(a) - _size(c)) / _size(a) < 0.1
     a, b, c = (gen.make_docs(workloads.DOCS_SPEC, s) for s in (7, 7, 8))
     assert gen.fingerprint(a) == gen.fingerprint(b)
     assert gen.fingerprint(a) != gen.fingerprint(c)
@@ -49,10 +49,13 @@ def test_printed_metric_names_match_benchmark_json():
 
 
 def _crawl_workload(spec):
-    wl = workloads.CrawlWorkload(3, "unused", 4, spec, durable=False)
+    wl = workloads.CrawlWorkload(3, "unused", 4, spec)
     wl.corpus = gen.make_corpus(spec, 3)
     o = wl.oracle
-    out = {"trace": list(o.trace), "data": list(o.data), "metrics": [None] * o.rounds}
+    metrics = [SimpleNamespace(deferred=0) for _ in range(o.rounds)]
+    metrics[0].deferred = o.deferred
+    out = {"trace": list(o.trace), "data": list(o.data), "metrics": metrics,
+           "committed": True}
     return wl, out
 
 
@@ -65,6 +68,14 @@ def test_oracle_crawl_passes_and_a_wrong_trace_fails():
     assert not wl.checks(swapped)["trace_equals_bfs"]
     dropped = dict(out, trace=out["trace"][1:])
     assert not wl.checks(dropped)["trace_equals_bfs"]
+    undeferred = dict(out, metrics=[SimpleNamespace(deferred=0)] * wl.oracle.rounds)
+    assert not wl.checks(undeferred)["deferred_equal_bfs"]
+
+
+def test_bench_crawl_defers_over_budget_hosts():
+    wl, _ = _crawl_workload(workloads.BFS_SPEC)
+    assert wl.oracle.deferred > 0
+    assert wl.oracle.rounds == 5
 
 
 def test_oracle_gates_robots_and_strips_fragments():

@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 import gen
-from spans import Tracer
+from spans import Tracer, engine_cpu_s
 
 # -- shared helpers -----------------------------------------------------------
 
@@ -89,31 +89,27 @@ def _scraper():
     return app
 
 
-# Wide shallow web: 16 hosts x 48 pages (~60 KB html each, zlib at rest),
-# link trees of fanout 16, so 4 rounds that widen to ~1000 URLs. The
-# hybrid frontier cap is scaled down with the corpus so every round but
-# the seed round takes the distributed path, as wide rounds do on a
-# full-size crawl.
+# Wide shallow web: 6 hosts x 48 pages (~45 KB html each, zlib at rest),
+# link trees of fanout 16, so rounds that widen to ~400 URLs. The hybrid
+# frontier cap is scaled down with the corpus so the widest rounds take the
+# distributed path, as wide rounds do on a full-size crawl, and the narrow
+# ones the driver-side path.
+# A 96 s politeness window puts the crawl-delay-2 hosts over budget in the
+# wide rounds, so ranking and deferral run and the crawl takes 5 rounds; a
+# 100-host robots dim puts robots past the inline tier (driver-compiled).
 BFS_SPEC = gen.CrawlSpec(
-    hosts=16, pages_per_host=48, fanout=16, pad=160, robots_hosts=16,
-    round_seconds=3600, max_delay=2, driver_frontier_max=256,
-)
-# Deep narrow web: 4 hosts x 3 tiny pages; a 4 s politeness window lets
-# the crawl-delay hosts fetch only 2-4 URLs per round, so the crawl runs
-# 5 rounds of a few URLs, ranking and deferring over-budget hosts and
-# committing its state to disk every round. 100 robots hosts put the dim past the inline tier.
-DEEP_SPEC = gen.CrawlSpec(
-    hosts=4, pages_per_host=3, fanout=2, pad=0, robots_hosts=100,
-    round_seconds=4, max_delay=2, driver_frontier_max=65536,
+    hosts=6, pages_per_host=48, fanout=16, pad=120, robots_hosts=100,
+    round_seconds=96, max_delay=2, driver_frontier_max=256,
 )
 
 
 class CrawlWorkload(Workload):
-    def __init__(self, seed, work_dir, cores, spec: gen.CrawlSpec, durable: bool):
+    """A BFS crawl that commits its state to ``state_dir`` every round."""
+
+    def __init__(self, seed, work_dir, cores, spec: gen.CrawlSpec):
         super().__init__(seed, work_dir, cores)
         self.spec = spec
-        self.durable = durable
-        self.state_dir = os.path.join(work_dir, "state") if durable else None
+        self.state_dir = os.path.join(work_dir, "state")
         self._oracle = None
 
     def setup(self, spark) -> None:
@@ -145,8 +141,7 @@ class CrawlWorkload(Workload):
         # machinery, on the first round of the same crawl
         keep = _persistent_rdd_ids(spark)
         warm_cfg = CrawlConfig(**{**self.config.__dict__, "max_rounds": 1})
-        if self.durable:
-            warm_cfg.state_dir = os.path.join(self.work, "warm-state")
+        warm_cfg.state_dir = os.path.join(self.work, "warm-state")
         res = CrawlJob(spark, self.app, self.pages, robots=self.robots,
                        config=warm_cfg).run(self.corpus.seeds)
         self._materialize(res)
@@ -174,17 +169,18 @@ class CrawlWorkload(Workload):
 
     def _run(self):
         job = self._job()
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), engine_cpu_s()
         res = job.run(self.corpus.seeds)
         rows = self._materialize(res)
-        return res, rows, time.perf_counter() - t0
+        return res, rows, time.perf_counter() - t0, engine_cpu_s() - c0
 
     def op(self) -> dict:
         return self._collect(*self._run())
 
-    def _collect(self, res, rows: list, wall: float) -> dict:
+    def _collect(self, res, rows: list, wall: float, cpu: float) -> dict:
         out = {
             "seconds": wall,
+            "cpu_s": cpu,
             "items": sum(m.fetched for m in res.metrics),
             "steps": [m.seconds for m in res.metrics],
             "metrics": res.metrics,
@@ -196,27 +192,24 @@ class CrawlWorkload(Workload):
                 ((r["page_url"], r["title"], r["item_href"]) for r in rows), key=str
             ),
         }
-        if self.durable:
-            rounds = len(res.metrics)
-            out["committed"] = all(
-                os.path.exists(os.path.join(self.state_dir, kind, f"round={r}", "_SUCCESS"))
-                for kind in ("frontier", "extracted")
-                for r in range(rounds)
-            )
-            out["state_files"], out["state_bytes"] = _dir_stats(self.state_dir)
+        out["committed"] = all(
+            os.path.exists(os.path.join(self.state_dir, kind, f"round={r}", "_SUCCESS"))
+            for kind in ("frontier", "extracted")
+            for r in range(len(res.metrics))
+        )
+        out["state_files"], out["state_bytes"] = _dir_stats(self.state_dir)
         _release_since(self.spark, self._keep)
         return out
 
     def checks(self, out: dict) -> Dict[str, bool]:
         o = self.oracle
-        c = {
+        return {
             "trace_equals_bfs": out["trace"] == o.trace,
             "rounds_equal_bfs": len(out["metrics"]) == o.rounds,
+            "deferred_equal_bfs": sum(m.deferred for m in out["metrics"]) == o.deferred,
             "data_rows_equal_bfs": out["data"] == o.data,
+            "every_round_committed": out["committed"],
         }
-        if self.durable:
-            c["every_round_committed"] = out["committed"]
-        return c
 
     def traced_op(self, tracer: Tracer) -> dict:
         import dude_spark.crawl as crawl
@@ -237,19 +230,18 @@ class CrawlWorkload(Workload):
             tracer.patch(crawl, attr, name)
         try:
             with tracer.span("crawl.CrawlJob.run") as root:
-                res, rows, wall = self._run()
+                res, rows, wall, cpu = self._run()
         finally:
             tracer.unpatch()
         layers = {"_root": root["id"], "_wall": wall}
-        if not self.durable:
-            with tracer.span("flatten.flatten") as s:
-                flat = flatten(res.results).cache()
-                _noop(flat)
-            layers["flatten.s"] = s["end"] - s["start"]
-            with tracer.span("sinks.save_distributed") as s:
-                save_distributed(flat, os.path.join(self.work, "sink"), mode="overwrite")
-            layers["sinks.write_s"] = s["end"] - s["start"]
-        out = self._collect(res, rows, wall)
+        with tracer.span("flatten.flatten") as s:
+            flat = flatten(res.results).cache()
+            _noop(flat)
+        layers["flatten.s"] = s["end"] - s["start"]
+        with tracer.span("sinks.save_distributed") as s:
+            save_distributed(flat, os.path.join(self.work, "sink"), mode="overwrite")
+        layers["sinks.write_s"] = s["end"] - s["start"]
+        out = self._collect(res, rows, wall, cpu)
         m = out["metrics"]
         fetched = sum(x.fetched for x in m)
         rounds = len(m)
@@ -263,9 +255,8 @@ class CrawlWorkload(Workload):
             / (fetched + sum(x.deferred for x in m)),
             "_checks": self.checks(out),
         })
-        if self.durable:
-            layers["crawl.state_bytes_per_url"] = out["state_bytes"] / fetched
-            layers["crawl.state_files_per_round"] = out["state_files"] / rounds
+        layers["crawl.state_bytes_per_url"] = out["state_bytes"] / fetched
+        layers["crawl.state_files_per_round"] = out["state_files"] / rounds
         layers.update(self._kernel_replay(tracer, pages_hit, wall))
         return layers
 
@@ -376,15 +367,15 @@ class TextopsWorkload(Workload):
         return self._oracles
 
     def op(self) -> dict:
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), engine_cpu_s()
         reps = self._dedup(self.train)
         t1 = time.perf_counter()
         contam = self._decontam(self.train)
-        t2 = time.perf_counter()
+        t2, c2 = time.perf_counter(), engine_cpu_s()
         _release_since(self.spark, self._keep)
         n = len(self.docs.train)
         return {
-            "seconds": t2 - t0, "items": n,
+            "seconds": t2 - t0, "cpu_s": c2 - c0, "items": n,
             "dedup_s": t1 - t0, "decontam_s": t2 - t1,
             "reps": reps, "contam": contam,
         }
@@ -475,9 +466,6 @@ class TextopsWorkload(Workload):
 
 
 WORKLOADS = {
-    "crawl_bfs": lambda seed, work, cores: CrawlWorkload(seed, work, cores, BFS_SPEC, False),
-    "crawl_deep_durable": lambda seed, work, cores: CrawlWorkload(
-        seed, work, cores, DEEP_SPEC, True
-    ),
+    "crawl_bfs": lambda seed, work, cores: CrawlWorkload(seed, work, cores, BFS_SPEC),
     "textops_dedup": TextopsWorkload,
 }
