@@ -47,7 +47,6 @@ BENCH_QUERIES = [
     "link_graph",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "dedup_minhash_lsh_xx",
     "dedup_simhash",
     "ann_cosine_topk",
     "ann_ivf_topk",

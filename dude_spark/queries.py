@@ -27,8 +27,11 @@ from .frontier import canonicalize
 from .politeness import budget_rank, compile_robots, robots_gate
 from .textops import duckdb_hash32
 from .textops.dedup import (
+    MINHASH_PRIME,
     exact_duplicates,
     minhash_lsh_pairs,
+    minhash_permutations,
+    minhash_signature,
     ngram_jaccard_pairs,
     simhash,
 )
@@ -1345,32 +1348,34 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_minhash_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of ``dedup_minhash_lsh``: identical pipeline and
-    corpus, ``hash_fn='xxhash64'`` (Spark-native codegen'd hash) instead of
-    the DuckDB-portable md5 chain. No oracle_sql entry by design — DuckDB
-    has no xxhash64 twin, so the driver records the rows-only check; family
-    equivalence (same duplicate pair-set as the md5 path) is pinned by
-    tests/test_textops.py::test_minhash_hash_families_same_pairs, and the
-    md5-vs-xxhash64 throughput gap is a headline bench row."""
-    pairs = minhash_lsh_pairs(
-        _docs_with_copies(spark, sf_dir, modulus=20), k=8, bands=2,
-        hash_fn="xxhash64",
+def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash signature VALUES (textops/dedup.py minhash_signature): one
+    portable hash per distinct shingle, k=8 seeded permutations. The LSH
+    queries only compare pair-sets, which exact copies reproduce whatever
+    the hash; this pins every signature value against DuckDB."""
+    sig = minhash_signature(_docs_with_copies(spark, sf_dir, modulus=1), k=8)
+    return sig.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.concat_ws(",", F.col("sig").cast("array<string>")).alias("sig"),
     )
-    return pairs.filter(F.col("n_bands_matched") >= 2).select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-        F.col("n_bands_matched").cast("long").alias("n_bands_matched"),
+
+
+def _oracle_minhash_signature(k: int = 8) -> str:
+    sig = ", ".join(f"h{i}" for i in range(k))
+    return _minhash_ctes(k, bands=1, modulus=1) + (
+        f"SELECT doc_id, concat_ws(',', {sig}) AS sig FROM sigs"
     )
 
 
 def _minhash_ctes(k: int, bands: int, modulus: int) -> str:
     """Shared DuckDB CTE chain: docs2 (with shifted copies) → sh (distinct
-    word shingles) → sigs (k portable min-hashes) → banded (LSH band keys)."""
+    word shingles) → sigs (one portable hash per shingle, then k min-hashes
+    over the seeded permutations) → banded (LSH band keys; a doc without
+    shingles has NULL keys and never joins)."""
     rows = k // bands
     hashes = ", ".join(
-        f"list_min(list_transform(sh, s -> {duckdb_hash32('s', salt=str(i))})) AS h{i}"
-        for i in range(k)
+        f"list_min(list_transform(hs, x -> (x * {a} + {b}) % {MINHASH_PRIME})) AS h{i}"
+        for i, (a, b) in enumerate(minhash_permutations(k))
     )
     band_keys = []
     for b in range(bands):
@@ -1386,7 +1391,8 @@ def _minhash_ctes(k: int, bands: int, modulus: int) -> str:
         "    generate_series(1, greatest(len(t) - 2, 0)),\n"
         "    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh\n"
         "  FROM (SELECT doc_id, regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t FROM docs2)\n"
-        f"), sigs AS (SELECT doc_id, {hashes} FROM sh)\n"
+        f"), sigs AS (SELECT doc_id, {hashes}\n"
+        f"  FROM (SELECT doc_id, list_transform(sh, s -> {duckdb_hash32('s')}) AS hs FROM sh))\n"
         ", banded AS (" + " UNION ALL ".join(band_keys) + ")\n"
     )
 
@@ -2646,7 +2652,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         # training-data pipeline
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_lsh": q_dedup_minhash,
-        "dedup_minhash_lsh_xx": q_dedup_minhash_xx,
+        "minhash_signature": q_minhash_signature,
         "dedup_lsh_jaccard": q_dedup_lsh_jaccard,
         "dedup_simhash": q_dedup_simhash,
         "ngram_jaccard": q_ngram_jaccard,
@@ -2710,6 +2716,7 @@ def oracle_sql() -> Dict[str, str]:
         "setup_rule": ORACLE_SETUP_RULE,
         "dedup_exact": ORACLE_DEDUP_EXACT,
         "dedup_minhash_lsh": _oracle_minhash(),
+        "minhash_signature": _oracle_minhash_signature(),
         "dedup_lsh_jaccard": _oracle_lsh_jaccard(),
         "dedup_simhash": _oracle_simhash(),
         "ngram_jaccard": ORACLE_NGRAM_JACCARD,

@@ -23,19 +23,6 @@ def portable_hash32(col: Column, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
 
 
-def fast_hash32(col: Column, salt: str = "") -> Column:
-    """32-bit hash via Spark's native ``xxhash64`` (whole-stage-codegen'd
-    JVM hash — no md5 digest, no hex string materialization, no conv).
-
-    The production twin of :func:`portable_hash32`: same signature, same
-    value range [0, 2^32), NOT the same values — use it wherever results
-    are internal (LSH bucketing, MinHash signatures) and the md5 path only
-    where a DuckDB oracle must reproduce the numbers bit-exactly.
-    """
-    s = F.concat(F.lit(salt), F.lit(":"), col) if salt else col
-    return F.shiftrightunsigned(F.xxhash64(s), 32).cast("bigint")
-
-
 def duckdb_hash32(expr: str, salt: str = "") -> str:
     """The DuckDB SQL twin of :func:`portable_hash32` (for oracle strings)."""
     s = f"concat('{salt}', ':', {expr})" if salt else expr

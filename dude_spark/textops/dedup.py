@@ -1,39 +1,75 @@
 """Deduplication operators over a document table (doc_id, text, ...).
 
 All variants are single-pass column pipelines + one hash aggregate — the
-shapes that survive a 100 TB corpus:
+shapes that survive a 100 TB corpus. Every n-gram operator tokenizes a
+document ONCE and slices its grams out of that one token array.
 
 - **exact**: md5 of normalized text, groupBy hash. One shuffle on a 32-byte
   key; map-side partial agg free from Catalyst.
-- **MinHash + LSH**: word-shingles → K portable min-hashes per doc (computed
-  inside one projection — no explode), banded into B buckets; candidate
-  pairs only materialize per-bucket (self-join within tiny buckets).
+- **MinHash + LSH**: ONE portable 32-bit hash per distinct word shingle →
+  K min-hashes over the permutations ``(a_i·h + b_i) mod p`` of that hash
+  array (Broder's MinHash; no explode), banded into B buckets; candidate
+  pairs only materialize per bucket (self-join within tiny buckets).
 - **SimHash**: per-token 32-bit hashes, bit-majority vote computed as 32
   conditional aggregates in ONE groupBy — no per-bit row explosion.
-- **n-gram Jaccard**: exact pair verification via distinct (doc, shingle)
-  explode + equi-join on shingle — the standard verify stage after LSH.
+- **n-gram Jaccard**: exact verification — behind LSH, ``array_intersect``
+  of each candidate pair's shingle arrays; standalone, a distinct
+  (doc, shingle) explode + equi-join on shingle within buckets.
 
-Hashes are md5-derived (portable_hash32) so DuckDB oracles reproduce them.
+Hashes are md5-derived (portable_hash32) and the permutations are bigint
+math, so DuckDB oracles reproduce every value.
 """
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import Column, DataFrame, functions as F
 
-from . import fast_hash32, portable_hash32
+from . import portable_hash32
 
 DEFAULT_K = 16        # minhash signature length
 DEFAULT_BANDS = 4     # LSH bands (rows per band = K / BANDS)
 
-# hash family registry for the MinHash pipeline: 'md5' is the DuckDB-
-# portable oracle path (one md5 digest + hex substring + base conversion
-# per (salt, shingle) — CPU-heavy); 'xxhash64' is the production path
-# (Spark's native codegen'd hash, no digest/string materialization —
-# measured several× faster, same minhash/LSH statistics). Both map a
-# shingle to a uniform 32-bit value, so candidate quality is identical;
-# only the concrete hash values differ (tests/test_textops pins that both
-# families resolve the same duplicate pair-set on a seeded corpus).
-HASH_FNS = {"md5": portable_hash32, "xxhash64": fast_hash32}
+# MinHash permutations h -> (a*h + b) mod p of a 32-bit shingle hash h:
+# p is the least prime above 2^32 and a < 2^31, so a*h + b < 2^63 — exact
+# bigint math with no overflow (ANSI-safe) that DuckDB reproduces.
+MINHASH_PRIME = 4294967311
+_MINHASH_SEED = 0x5EED
+
+
+def minhash_permutations(k: int) -> list:
+    """The first ``k`` ``(a_i, b_i)`` pairs of one fixed seeded table."""
+    rng = random.Random(_MINHASH_SEED)
+    return [
+        (rng.randrange(1, 2**31), rng.randrange(MINHASH_PRIME)) for _ in range(k)
+    ]
+
+
+def _perm(a: int, b: int, p: int):
+    # a factory, not ``lambda x, a=a: ...``: F.transform counts a defaulted
+    # parameter as the element index and would bind it to a Column
+    return lambda x: (x * a + b) % p
+
+
+def _let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` evaluated ONCE per row: Spark re-evaluates
+    an expression referenced inside a lambda for every element, so arrays
+    read per element (tokens, shingle hashes) are bound here."""
+    return F.transform(F.array(value), body)[0]
+
+
+def _grams(t: Column, n: int) -> Column:
+    """Word ``n``-grams of the token array ``t``, one slice per position.
+    ``sequence(1, x)`` is descending for x < 1 in Spark, so the when-guard
+    (not ``greatest``) is what gives docs shorter than ``n`` no grams."""
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.array_join(F.slice(t, i, n), " "),
+        ),
+    ).otherwise(F.expr("array()").cast("array<string>"))
 
 
 def normalize_text(col: Column) -> Column:
@@ -47,23 +83,9 @@ def tokens(col: Column) -> Column:
 
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the normalized text (array<string>).
-
-    Docs shorter than ``n`` tokens yield an EMPTY array — ``sequence(1, x)``
-    is descending for x < 1 in Spark, so the when-guard (not ``greatest``)
-    is what keeps short docs from indexing ``element_at(t, 0)``.
-    """
-    t = tokens(col)
-    idx = F.sequence(F.lit(1), F.size(t) - (n - 1))
-    sh = F.when(
-        F.size(t) >= n,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, (i + j).cast("int")) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.expr("array()").cast("array<string>"))
-    return F.array_distinct(sh)
+    Docs shorter than ``n`` tokens (None and "" included) yield an EMPTY
+    array."""
+    return _let(tokens(col), lambda t: F.array_distinct(_grams(t, n)))
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -109,23 +131,21 @@ def latest_snapshot(
 
 def minhash_signature(
     docs: DataFrame, text_col: str = "text", k: int = DEFAULT_K, shingle_n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
-    """(doc_id, sig array<bigint>[k]) — min over shingle hashes per function.
+    """(doc_id, sig array<bigint>[k]) — Broder's MinHash of the shingle set.
 
-    K hash functions = one hash per (salt i, shingle); all inside a single
-    projection over the shingle array (no explode, no shuffle).
-    ``hash_fn``: 'md5' (DuckDB-portable, oracle path) or 'xxhash64'
-    (native codegen'd hash, the production path — see HASH_FNS).
+    Each distinct shingle is hashed ONCE (``portable_hash32``); value i is
+    ``min over shingles of (a_i·h + b_i) mod MINHASH_PRIME`` with the
+    ``minhash_permutations`` table. One projection over the hash array, no
+    explode, no shuffle. A doc with no shingles gets an all-NULL signature.
     """
-    h = HASH_FNS[hash_fn]
-    sh = word_shingles(F.col(text_col), shingle_n)
-    sig = F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s, i=i: h(s, salt=str(i))))
-            for i in range(k)
-        ]
+    hashes = F.transform(
+        word_shingles(F.col(text_col), shingle_n), lambda s: portable_hash32(s)
     )
+    sig = _let(hashes, lambda hs: F.array(*[
+        F.array_min(F.transform(hs, _perm(a, b, MINHASH_PRIME)))
+        for a, b in minhash_permutations(k)
+    ]))
     return docs.select("doc_id", sig.alias("sig"))
 
 
@@ -135,36 +155,33 @@ def minhash_lsh_pairs(
     k: int = DEFAULT_K,
     bands: int = DEFAULT_BANDS,
     shingle_n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH on the minhash signature.
 
     A pair is emitted once per matching band then distinct'd; output
     (doc_a, doc_b, n_bands_matched). The per-band bucket join shuffles on
     the band signature string — tiny keys, broadcast-able dimension-free.
+    Docs without shingles never pair: their all-NULL signatures would give
+    every one of them the same empty band key.
     """
-    sig = minhash_signature(docs, text_col, k, shingle_n, hash_fn=hash_fn)
-    rows_per_band = k // bands
-    band_cols = []
-    for b in range(bands):
-        part = F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *[
-                F.element_at(part, j + 1).cast("string") for j in range(rows_per_band)
-            ]).alias("key"))
-        )
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
+    sig = minhash_signature(docs, text_col, k, shingle_n).filter(
+        F.col("sig")[0].isNotNull()
+    )
+    rows = k // bands
+    band_cols = [
+        F.struct(F.lit(b).alias("band"), F.concat_ws(
+            "_", F.slice("sig", b * rows + 1, rows).cast("array<string>")
+        ).alias("key"))
+        for b in range(bands)
+    ]
+    banded = sig.select("doc_id", F.inline(F.array(*band_cols)))
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
         a.join(b, on=["band", "key"])
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_bands_matched"))
     )
-    return pairs
 
 
 def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFrame:
@@ -205,37 +222,30 @@ def ngram_jaccard_pairs(
     Two modes:
 
     - ``candidates`` given (``doc_a``/``doc_b`` columns, e.g. the output of
-      :func:`minhash_lsh_pairs`): shingles are exploded ONLY for docs that
-      appear in a candidate pair and joined pair-wise — work is bounded by
-      the candidate set, never by corpus size. **This is the 100 TB path**:
-      a shingle-equi-join across a whole corpus bucket blows up on any hot
-      shingle, a candidate-bounded join cannot.
+      :func:`minhash_lsh_pairs`): each pair is joined to both documents'
+      shingle arrays, which are intersected in place (``array_intersect``)
+      — one row per candidate pair past the joins, nothing per shingle.
+      **This is the 100 TB path**: a shingle-equi-join across a whole
+      corpus bucket blows up on any hot shingle, a per-pair intersect
+      cannot.
     - no candidates: shingle equi-join within ``bucket_cols`` buckets
       (same lang+source by default) — safe only on pre-bucketed/small data.
 
-    Pure relational either way; one hash aggregate for the intersection.
+    Pairs sharing no shingle are never returned.
     """
     if candidates is not None:
-        cand = candidates.select("doc_a", "doc_b")
-        involved = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        base = docs.join(involved, "doc_id", "left_semi").select(
-            "doc_id", word_shingles(F.col(text_col), shingle_n).alias("sh")
-        )
-        sizes = base.select("doc_id", F.size("sh").alias("n_sh"))
-        ex = base.select("doc_id", F.explode("sh").alias("s"))
-        inter = (
-            cand.join(
-                ex.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a"
+        sh = docs.select("doc_id", word_shingles(F.col(text_col), shingle_n))
+        pairs = (
+            candidates.select("doc_a", "doc_b")
+            .join(sh.toDF("doc_a", "sa"), "doc_a")
+            .join(sh.toDF("doc_b", "sb"), "doc_b")
+            .select(
+                "doc_a", "doc_b",
+                F.size(F.array_intersect("sa", "sb")).alias("inter"),
+                F.size("sa").alias("na"),
+                F.size("sb").alias("nb"),
             )
-            .join(
-                ex.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"]
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
+            .filter(F.col("inter") > 0)
         )
     else:
         base = docs.select(
@@ -250,12 +260,11 @@ def ngram_jaccard_pairs(
             .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
             .agg(F.count("*").alias("inter"))
         )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+        pairs = inter.join(sa, "doc_a").join(sb, "doc_b")
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
+        pairs.withColumn(
             "jaccard",
             F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
         )
@@ -287,25 +296,14 @@ def transitive_representatives(
     )
 
 
-def _gram_hash_array(text_col: str, k: int, hash_fn) -> Column:
+def _gram_hash_array(text_col: str, k: int) -> Column:
     """DISTINCT hashed token ``k``-grams of the normalized text, as one
     array column — grams + hashes built inside a single projection (no
     per-position rows are materialized). Shared by the span-dedup anchor
     path and benchmark decontamination."""
-    t = tokens(F.col(text_col))
-    # sequence(1, 0) is DESCENDING in Spark ([1, 0]) — docs shorter than k
-    # tokens must yield an empty gram list, not two bogus indices.
-    idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-    grams = F.when(
-        F.size(t) >= k,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, (i + j).cast("int")) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.expr("array()").cast("array<string>"))
-    return F.transform(F.array_distinct(grams), lambda g: hash_fn(g, "span"))
+    return _let(tokens(F.col(text_col)), lambda t: F.transform(
+        F.array_distinct(_grams(t, k)), lambda g: portable_hash32(g, "span")
+    ))
 
 
 def decontaminate(
@@ -313,7 +311,6 @@ def decontaminate(
     benchmark: DataFrame,
     k: int = 8,
     text_col: str = "text",
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Benchmark decontamination: per-document count of DISTINCT verbatim
     ``k``-token grams shared with an evaluation/benchmark set — the GPT-3
@@ -331,14 +328,12 @@ def decontaminate(
     rows reach the final per-doc aggregation (partial-agg combined), so
     shuffle volume tracks contamination, not corpus size. Gram hashing and
     normalization are byte-identical to :func:`duplicated_span_docs`
-    (shared kernel), 'xxhash64' is the production hash twin.
+    (shared kernel).
     """
-    hash_fn = HASH_FNS[hash_family]
-
     def gram_rows(df: DataFrame) -> DataFrame:
         return df.select(
             F.col("doc_id"),
-            F.explode(_gram_hash_array(text_col, k, hash_fn)).alias("gh"),
+            F.explode(_gram_hash_array(text_col, k)).alias("gh"),
         )
 
     bench_dim = gram_rows(benchmark).select("gh").distinct()
@@ -355,7 +350,6 @@ def duplicated_span_docs(
     text_col: str = "text",
     k: int = 8,
     select_mod: int = 4,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Exact duplicated-span detection via content-defined anchor
     fingerprints (winnowing-style, Schleimer et al. 2003 — the scalable
@@ -383,15 +377,12 @@ def duplicated_span_docs(
     shuffle on a bigint key) and one hash-aggregate by doc — ONE corpus
     scan total; a self-join against a duplicated-anchor dim would plan the
     gram pipeline twice. Shuffle volume ≈ total_tokens / select_mod longs
-    — no pairwise comparison, no suffix array, no driver
-    state. ``hash_family='xxhash64'`` is the production twin (same
-    statistics, no md5 digest per gram); 'md5' is the DuckDB-oracle path.
+    — no pairwise comparison, no suffix array, no driver state.
 
     Reference parity: the reference engine has no corpus-dedup surface;
     this extends SURVEY §2's training-data-pipeline set.
     """
-    hash_fn = HASH_FNS[hash_family]
-    hashes = _gram_hash_array(text_col, k, hash_fn)
+    hashes = _gram_hash_array(text_col, k)
     anchors = F.array_distinct(
         F.filter(hashes, lambda h: h % select_mod == F.lit(0))
     )

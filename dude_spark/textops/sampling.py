@@ -80,9 +80,7 @@ def dsir_importance(
     counted together via a conditional sum — no second corpus pass); the
     bucket→ratio dim broadcasts back onto the per-document bucket bag; one
     final per-document integer sum. Bigram hashing is portable_hash32
-    (md5-derived) so the oracle reproduces bucket assignment bit-exactly;
-    swap fast_hash32 for the xxhash64 production twin where no oracle is
-    needed (same trade as MinHash — textops/dedup.py:28-36).
+    (md5-derived) so the oracle reproduces bucket assignment bit-exactly.
     """
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     bigrams = F.zip_with(
