@@ -13,11 +13,17 @@ driver-side per-node state; the only driver scalar is |V| (one count job
 up front). Lineage grows linearly with iterations — for big iteration
 counts callers should localCheckpoint/checkpoint every ~10 rounds, same
 policy as the crawl loop's seen-set folds (crawl.py).
+
+Connected components (the transitive closure behind near-dup collapse)
+alternate large-star and small-star steps; each step takes a node's
+smallest neighbour from a window on the node id, so a round is two
+shuffles plus one convergence action, and the loop stops on the first
+round whose output is a star forest (see :func:`connected_components`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def pagerank(
@@ -70,46 +76,45 @@ def pagerank(
     return ranks
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round: every node connects its strictly-larger
-    neighbors to the minimum of its closed neighborhood (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", alternating algorithm).
-    One symmetric explode + one hash aggregate + one equi-join — all keyed
-    on the node id, no driver state."""
-    nbrs = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    m = (
-        nbrs.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select("src", F.least(F.col("src"), F.col("mn")).alias("m"))
-    )
-    return (
-        nbrs.join(m, "src")
-        .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+def _neighbourhoods(edges: DataFrame) -> DataFrame:
+    """Every edge in both directions, deduplicated and hash-partitioned on
+    ``src``, with each node's smallest (``mn``) and largest (``mx``)
+    neighbour attached. One shuffle: both directions come out of one
+    ``inline`` (the upstream plan is read once), the two windows share it,
+    and the distinct runs on top of the window's partitioning."""
+    both = edges.select(F.inline(F.array(
+        F.struct("src", "dst"),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+    )))
+    w = Window.partitionBy("src")
+    return both.select(
+        "src", "dst", F.min("dst").over(w).alias("mn"), F.max("dst").over(w).alias("mx")
+    ).distinct()
+
+
+def _large_star(nbhd: DataFrame) -> DataFrame:
+    """One large-star step (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", alternating algorithm) over
+    :func:`_neighbourhoods` output: every node connects its larger
+    neighbours to the minimum of its closed neighbourhood. A self-loop row
+    also emits, so a node whose only edge is a self-loop keeps it. No
+    shuffle of its own and no distinct: :func:`_neighbourhoods` after the
+    small-star step removes the duplicates."""
+    return nbhd.filter(F.col("dst") >= F.col("src")).select(
+        F.col("dst").alias("src"), F.least("src", "mn").alias("dst")
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round: orient edges toward the smaller endpoint, then
-    every node rewires its smaller neighbors (and itself) to the minimum."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    )
-    m = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    return (
-        oriented.join(m, "src")
-        .select(
-            F.when(F.col("dst") == F.col("m"), F.col("src"))
-            .otherwise(F.col("dst"))
-            .alias("src"),
-            F.col("m").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+    """One small-star step over edges oriented ``src >= dst`` (large-star's
+    output is): every node rewires its smaller neighbours (and itself) to
+    the minimum of them. One shuffle, for the window on ``src``."""
+    m = F.min("dst").over(Window.partitionBy("src"))
+    return edges.select("src", "dst", m.alias("m")).select(
+        F.when(F.col("dst") == F.col("m"), F.col("src"))
+        .otherwise(F.col("dst"))
+        .alias("src"),
+        F.col("m").alias("dst"),
     )
 
 
@@ -125,46 +130,39 @@ def connected_components(
     closure maps the whole chain to one).
 
     Returns ``(node, component)`` for every node in the edge set, where
-    ``component`` is the minimum node id of the component.
+    ``component`` is the minimum node id of the component; a node whose
+    only edge is a self-loop is its own component. Edges with a NULL end
+    are ignored.
 
-    100 TB shape: each round is a bounded number of hash-partitioned
-    joins/aggregates on the node id (the same BSP shape as :func:`pagerank`);
-    the edge set contracts toward star graphs in O(log n) rounds regardless
-    of component diameter — unlike naive min-label propagation, whose round
-    count is the graph DIAMETER (a 10^6-long url chain would need 10^6
-    rounds). Convergence is detected with one scalar action per round
-    (count + order-independent xor-of-xxhash64 checksum of the edge set); lineage
-    is truncated per round with localCheckpoint, the crawl loop's policy.
-    The only driver state is that scalar pair.
+    100 TB shape: a round is two shuffles on the node id — the small-star
+    window, and the one that rebuilds each node's neighbourhood — plus one
+    convergence action; the edge set contracts toward star graphs in
+    O(log n) rounds regardless of component diameter — unlike naive
+    min-label propagation, whose round count is the graph DIAMETER (a
+    10^6-long url chain would need 10^6 rounds). Convergence is a local
+    test on the round's output: it is a star forest when every node has
+    only larger neighbours or exactly one neighbour, so the loop stops on
+    the round that converges. Each round's output is localCheckpointed
+    (lineage truncated, the crawl loop's policy), and the answer is read
+    off the last one: each node's component is the smaller of itself and
+    its smallest neighbour. Raises ``RuntimeError`` when ``max_iters``
+    rounds do not reach a star forest, rather than return a partial
+    closure.
     """
-    cur = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
+    nbhd = _neighbourhoods(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).dropna()
     )
-    prev_sig = None
+    not_star = (F.col("mn") < F.col("src")) & (F.col("mx") != F.col("mn"))
     for _ in range(max_iters):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        # bit_xor (not sum): order-independent, cannot overflow under ANSI
-        # mode, and the edge set is distinct so xor-cancellation is moot
-        row = cur.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        sig = (row["n"], row["h"])
-        if sig == prev_sig:
+        nbhd = _neighbourhoods(_small_star(_large_star(nbhd))).localCheckpoint(
+            eager=False
+        )
+        if nbhd.filter(not_star).isEmpty():
             break
-        prev_sig = sig
-    # converged edge set is a star forest: (node → component-min) for every
-    # non-root node; add the roots themselves
-    roots = (
-        cur.select(F.col("dst").alias("node"))
-        .distinct()
-        .join(cur.select(F.col("src").alias("node")).distinct(), "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    return (
-        cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-        .unionByName(roots)
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iters={max_iters} rounds"
+        )
+    return nbhd.filter(F.col("dst") == F.col("mn")).select(
+        F.col("src").alias("node"), F.least("src", "mn").alias("component")
     )

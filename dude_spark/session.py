@@ -88,11 +88,15 @@ def _ship_package(spark: SparkSession) -> None:
     """Ship dude_spark to executor Python workers (≙ spark-submit
     --py-files): UDF closures are cloudpickled *by reference* to the module,
     so workers must be able to import it regardless of their cwd."""
+    import hashlib
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    # one zip per checkout: two checkouts on one box must not ship each
+    # other's package to their workers
+    tag = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
     zip_path = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), "dude_spark_pyfiles.zip"
+        os.environ.get("TMPDIR", "/tmp"), f"dude_spark_pyfiles_{tag}.zip"
     )
     src_mtime = max(
         os.path.getmtime(os.path.join(root, fn))

@@ -158,9 +158,11 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH on the minhash signature.
 
-    A pair is emitted once per matching band then distinct'd; output
-    (doc_a, doc_b, n_bands_matched). The per-band bucket join shuffles on
-    the band signature string — tiny keys, broadcast-able dimension-free.
+    Output (doc_a, doc_b, n_bands_matched), doc_a < doc_b. The signature
+    table is scanned once: each (band, key) bucket is grouped into its
+    sorted id list, which emits its i<j pairs in place (``transform``), and
+    one aggregate counts the bands each pair matched in. A self-join on the
+    bucket would plan the signature pipeline on both join sides.
     Docs without shingles never pair: their all-NULL signatures would give
     every one of them the same empty band key.
     """
@@ -174,12 +176,19 @@ def minhash_lsh_pairs(
         ).alias("key"))
         for b in range(bands)
     ]
-    banded = sig.select("doc_id", F.inline(F.array(*band_cols)))
-    a, b = banded.alias("a"), banded.alias("b")
+    buckets = (
+        sig.select("doc_id", F.inline(F.array(*band_cols)))
+        .groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+    )
+    ids = F.col("ids")
+    pairs = F.flatten(F.transform(ids, lambda a, i: F.transform(
+        F.slice(ids, i + 2, F.size(ids) - i - 1),
+        lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b")),
+    )))
     return (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        buckets.select(F.inline(pairs))
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_bands_matched"))
     )
 

@@ -1,5 +1,6 @@
-"""Round-3 operators: PageRank, latest-snapshot dedupe, Gopher repetition,
-URL canonicalization — behavior tests beyond the DuckDB hash-parity gate."""
+"""Round-3 operators: PageRank, connected components, latest-snapshot
+dedupe, Gopher repetition, URL canonicalization — behavior tests beyond the
+DuckDB hash-parity gate."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,6 +46,71 @@ def test_pagerank_tree_mass_and_order(spark):
     assert got["3"] > got["1"] > got["0"]
     assert got["3"] == pytest.approx(a + 0.85 * (a + 0.85 * a / 2) / 2, abs=1e-12)
     assert sum(got.values()) < 1.0
+
+
+def _union_find(edges):
+    """{node: min node id of its component} — the reference closure."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _shuffled_path(rng, n):
+    ids = list(range(n))
+    rng.shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+def test_connected_components_match_union_find(spark):
+    """One graph that combines a shuffled 4,000-node path (about ten star
+    rounds), random trees, reversed and duplicate edges, and self-loops —
+    on linked nodes and on nodes with no other edge."""
+    import random
+
+    from dude_spark.graph import connected_components
+
+    rng = random.Random(7)
+    edges = _shuffled_path(rng, 4000)
+    first = 10_000
+    for _ in range(30):
+        ids = list(range(first, first + rng.randint(2, 60)))
+        first += len(ids) + 10
+        rng.shuffle(ids)
+        edges += [(ids[i], ids[rng.randrange(i)]) for i in range(1, len(ids))]
+    edges += [(b, a) for a, b in rng.sample(edges, 300)]
+    edges += rng.sample(edges, 300)
+    edges += [(x, x) for x in rng.sample(range(4000), 20)] + [(90_000, 90_000)] * 2
+    rng.shuffle(edges)
+    df = spark.createDataFrame(edges, "a long, b long")
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(df, src_col="a", dst_col="b").collect()
+    }
+    want = _union_find(edges)
+    assert got == want
+    assert want[90_000] == 90_000 and len(set(want.values())) == 32
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A shuffled 4,000-node path needs about ten rounds; with two, the edge
+    set is not yet a star forest and must not be returned as the closure."""
+    import random
+
+    from dude_spark.graph import connected_components
+
+    df = spark.createDataFrame(_shuffled_path(random.Random(3), 4000), "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iters=2).collect()
 
 
 def test_latest_snapshot_keeps_newest_and_breaks_ties_high(spark):

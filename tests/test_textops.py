@@ -63,6 +63,40 @@ def test_minhash_lsh_short_docs_never_pair(spark):
     assert pairs == {(5, 6): 4}
 
 
+def test_minhash_lsh_pairs_match_python_banding(spark, docs):
+    """(doc_a, doc_b, n_bands_matched) equals a Python banding of the
+    collected signatures: the pair values are pinned, not just their count."""
+    from collections import Counter, defaultdict
+    from itertools import combinations
+
+    from dude_spark.textops.dedup import minhash_lsh_pairs, minhash_signature
+
+    base = docs.filter("doc_id < 40").select("doc_id", "text")
+    corpus = base.unionByName(
+        base.withColumn("doc_id", F.col("doc_id") + 1_000_000)
+        .withColumn("text", F.concat(F.col("text"), F.lit(" zzz")))
+    ).unionByName(
+        base.withColumn("doc_id", F.col("doc_id") + 2_000_000)
+        .withColumn("text", F.concat(F.lit("yyy "), F.col("text")))
+    ).unionByName(spark.createDataFrame([(3_000_000, "hi")], "doc_id long, text string"))
+    k, bands = 16, 4
+    rows = k // bands
+    buckets = defaultdict(list)
+    for r in minhash_signature(corpus, k=k).collect():
+        if r["sig"][0] is not None:
+            for b in range(bands):
+                buckets[b, tuple(r["sig"][b * rows:(b + 1) * rows])].append(r["doc_id"])
+    want = Counter(p for ids in buckets.values() for p in combinations(sorted(ids), 2))
+    got = {
+        (r["doc_a"], r["doc_b"]): r["n_bands_matched"]
+        for r in minhash_lsh_pairs(corpus, k=k, bands=bands).collect()
+    }
+    assert got == dict(want)
+    # the corpus exercises buckets of three and partial band matches
+    assert max(map(len, buckets.values())) >= 3
+    assert {1, bands} <= set(want.values())
+
+
 def test_minhash_signature_matches_definition(spark):
     """Each value is min over distinct shingles of (a_i*h + b_i) mod p, with
     h the md5-derived 32-bit hash of the shingle — computed here in Python."""
@@ -292,9 +326,10 @@ def test_transitive_closure_collapses_neardup_chain(spark):
         [(k, " ".join(words[3 * k : 3 * k + 30])) for k in range(4)],
         "doc_id bigint, text string",
     )
+    # cached: read three times below, and the job budget is the closure's own
     pairs = ngram_jaccard_pairs(
         docs, threshold=0.7, bucket_cols=(), candidates=None
-    ).select("doc_a", "doc_b")
+    ).select("doc_a", "doc_b").cache()
     got_pairs = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     assert got_pairs == {(0, 1), (1, 2), (2, 3)}
 
@@ -306,12 +341,20 @@ def test_transitive_closure_collapses_neardup_chain(spark):
     }
     assert one_hop == {1: 0, 2: 1, 3: 2}  # 3 does NOT reach 0
 
-    # transitive closure: the whole chain collapses onto doc 0
-    reps = {
-        r["doc_id"]: r["keep_doc_id"]
-        for r in transitive_representatives(pairs).collect()
-    }
+    # transitive closure: the whole chain collapses onto doc 0, in two
+    # star rounds of at most four Spark jobs each plus the collect
+    sc = spark.sparkContext
+    sc.setJobGroup("transitive_closure_chain", "chain closure job budget")
+    try:
+        reps = {
+            r["doc_id"]: r["keep_doc_id"]
+            for r in transitive_representatives(pairs).collect()
+        }
+        jobs = sc.statusTracker().getJobIdsForGroup("transitive_closure_chain")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert reps == {0: 0, 1: 0, 2: 0, 3: 0}
+    assert len(jobs) <= 10, len(jobs)
 
 
 def test_pii_scrub_order_contract(spark):
