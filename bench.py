@@ -192,14 +192,6 @@ def run_crawl_bench(spark, sf_dir: str, replicate: int) -> dict:
     ).run(seeds(n_hosts))
 
     cfg_overrides = {}
-    for env_key, field_name in (
-        ("SPARK_GRAFT_BROADCAST_SEEN_MAX", "broadcast_seen_max"),
-        ("SPARK_GRAFT_DRIVER_FRONTIER_MAX", "driver_frontier_max"),
-        ("SPARK_GRAFT_BROADCAST_FETCH_MAX", "broadcast_fetch_max"),
-        ("SPARK_GRAFT_SEEN_PARTITIONS", "seen_partitions"),
-    ):
-        if os.environ.get(env_key):
-            cfg_overrides[field_name] = int(os.environ[env_key])
     # durable-commit leg: per-round parquet state commits instead of
     # localCheckpoint (the real-cluster default posture, crawl.py state_dir)
     state_dir = os.environ.get("SPARK_GRAFT_BENCH_STATE_DIR")
@@ -640,7 +632,7 @@ local[8] 9-round leg 60.2s → 51.1s.)
 `tools/round_floor.py`: a chain corpus (page i links only to page i+1)
 makes every BFS round fetch exactly ONE page, so round wall time is pure
 per-round machinery with negligible parallel work. Measured floor,
-itemized by crawl-loop stage (`DUDE_SPARK_DEBUG_TIMING` labels):
+itemized by crawl-loop stage (`RoundMetrics.stages`):
 
 | parallelism | sec/round | top stages (ms/round) |
 |---|---|---|

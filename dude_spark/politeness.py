@@ -64,8 +64,8 @@ def parse_robots_txt(txt: Optional[str]):
 
 
 def compile_robots_rows(raw_rows) -> list:
-    """Driver-side compile of a SMALL robots dim (≤ :data:`INLINE_ROBOTS_MAX`
-    hosts, already ``take``-bounded): parsing ~dozens of 3-line files is
+    """Driver-side compile of a robots dim of ≤ :data:`LOCAL_ROBOTS_MAX`
+    hosts (already ``take``-bounded): parsing ~dozens of 3-line files is
     microseconds of driver CPU, while routing them through a pandas-UDF
     Spark job costs two single-task sub-jobs (~5s measured at local[32] on
     a pickled-parallelize input) — pure serial floor on every crawl."""

@@ -507,33 +507,119 @@ def test_assign_global_seq_key_bounds_path(spark):
     )
 
 
-def test_seen_compaction_cadence_invariant(spark):
-    """The LSM-style seen fold (delta append + compact every k) must yield
-    identical crawl order and seen set at any compaction cadence."""
-    pages = pages_df(spark, SF).select("url", "html")
-    outs = []
+def _trace(res):
+    return [
+        (r["url"], r["depth"], r["seq"])
+        for r in res.trace.orderBy("seq").collect()
+    ]
+
+
+def test_seen_compaction_cadence_invariant(spark, crawl_result, monkeypatch):
+    """The distributed seen fold (delta append + compact every k) must yield
+    the default crawl's order and seen set at any compaction cadence.
+    broadcast_seen_max=0 puts the seen set in its distributed form from the
+    first round, so every round folds a delta: k=1 compacts every round,
+    k=100 never does."""
+    import dude_spark.crawl as crawl_mod
+
+    res_default, pages = crawl_result
+    expected = (_trace(res_default), res_default.seen.count())
     for k in (1, 100):
+        monkeypatch.setattr(crawl_mod, "SEEN_COMPACT_EVERY", k)
         res = CrawlJob(
             spark, make_scraper(), pages, robots=robots_df(spark),
             config=CrawlConfig(
-                max_rounds=40, round_seconds=3600, seen_compact_every=k
+                max_rounds=40, round_seconds=3600, broadcast_seen_max=0
             ),
         ).run(seeds())
-        outs.append(
-            (
-                [r["url"] for r in res.trace.orderBy("seq").collect()],
-                res.seen.count(),
-            )
+        assert (_trace(res), res.seen.count()) == expected, f"k={k}"
+
+
+def test_seen_promotion_mid_crawl_and_resume(spark, crawl_result, tmp_path, monkeypatch):
+    """The fixture crawl's seen set grows 20 → 99 → 260 → 575 → ..., so at
+    broadcast_seen_max=300 the driver-resident seen set is promoted to the
+    distributed one after round 2, exactly once. With and without the Bloom
+    sidecar, and for a durable crawl cut at round 3 whose resume opens the
+    seen set already distributed (575 committed URLs > 300), the trace and
+    seen set must equal the default crawl's."""
+    import dude_spark.crawl as crawl_mod
+
+    res_default, pages = crawl_result
+    expected_trace = _trace(res_default)
+    expected_seen = res_default.seen.count()
+    promotions = []
+    promote = crawl_mod._DriverSeen.promote
+
+    def counting_promote(self, bloom_bits):
+        promotions.append(bloom_bits)
+        return promote(self, bloom_bits)
+
+    monkeypatch.setattr(crawl_mod._DriverSeen, "promote", counting_promote)
+
+    def job(**kw):
+        return CrawlJob(
+            spark, make_scraper(), pages, robots=robots_df(spark),
+            config=CrawlConfig(
+                round_seconds=3600, broadcast_seen_max=300, **kw
+            ),
         )
-    assert outs[0] == outs[1]
+
+    for bloom_bits in (None, 1 << 20):
+        promotions.clear()
+        res = job(max_rounds=40, bloom_bits=bloom_bits).run(seeds())
+        assert promotions == [bloom_bits]
+        assert _trace(res) == expected_trace, f"bloom_bits={bloom_bits}"
+        assert res.seen.count() == expected_seen
+
+    state = str(tmp_path / "state")
+    partial = job(max_rounds=3, state_dir=state).run(seeds())
+    assert len(partial.metrics) == 3
+    opened = []
+    open_seen = crawl_mod._open_seen
+
+    def recording_open_seen(*a, **kw):
+        opened.append(open_seen(*a, **kw))
+        return opened[-1]
+
+    monkeypatch.setattr(crawl_mod, "_open_seen", recording_open_seen)
+    promotions.clear()
+    rest = job(max_rounds=40, state_dir=state).run(seeds(), resume=True)
+    assert [type(s) for s in opened] == [crawl_mod._DistributedSeen]
+    assert promotions == []
+    assert sorted(_trace(partial) + _trace(rest), key=lambda t: t[2]) == expected_trace
+    assert rest.seen.count() == expected_seen
+
+
+def test_crawl_spark_job_budget(spark, crawl_result):
+    """Spark jobs launched by one fixture crawl, counted from the test side
+    with a job group: warm, at the default config (driver-path rounds: one
+    job each) and at driver_frontier_max=0 (every round distributed)."""
+    _, pages = crawl_result
+    sc = spark.sparkContext
+    for cap, budget in ((65536, 11), (0, 53)):
+        group = f"crawl_job_budget_{cap}"
+        job = CrawlJob(
+            spark, make_scraper(), pages, robots=robots_df(spark),
+            config=CrawlConfig(
+                max_rounds=40, round_seconds=3600, driver_frontier_max=cap
+            ),
+        )
+        sc.setJobGroup(group, "crawl job budget")
+        try:
+            job.run(seeds())
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) <= budget, (cap, len(jobs))
 
 
 def test_hybrid_frontier_parity(spark, crawl_result):
     """The driver-resident small-round path (CrawlConfig.driver_frontier_max)
     must yield byte-identical traces and result counts to the fully
     distributed path — including mid-crawl transitions: cap=6 forces wide
-    rounds to overflow back to distributed numbering (and flips the seen
-    mirror off) while narrow rounds stay driver-side."""
+    rounds to overflow back to distributed numbering (anti-joined against
+    the driver-resident seen set's hashes, whose delta then folds back in)
+    while narrow rounds stay driver-side."""
     res_default, pages = crawl_result
     base_trace = [
         (r["url"], r["depth"], r["seq"])

@@ -17,21 +17,18 @@ Usage: python tools/round_floor.py [cpus=8] [n_pages=16]
 Prints one JSON line:
   {"cpus": N, "rounds": R, "seconds": S, "sec_per_round": S/R,
    "ms_per_round_by_stage": {...}}
-The per-stage itemization re-parses the crawl loop's
-DUDE_SPARK_DEBUG_TIMING lines for the timed run, so the floor is
-attributed to named loop stages (plan analysis, the one materializing
-job, checkpoint folds) rather than asserted.
+The per-stage itemization averages the timed run's
+``RoundMetrics.stages`` over its rounds, so the floor is attributed to the
+crawl round's named stages (budget, fetch_extract, expand, number, commit,
+fold) rather than asserted.
 Warm-up: one full chain crawl (JIT + python-worker fork excluded), then the
 timed crawl on the same session.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import os
-import re
 import sys
 import time
 
@@ -43,7 +40,6 @@ def main() -> None:
     n_pages = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
     os.environ["SPARK_GRAFT_CPUS"] = cpus
-    os.environ["DUDE_SPARK_DEBUG_TIMING"] = "1"
     from dude_spark.api import Scraper
     from dude_spark.crawl import CrawlConfig, CrawlJob
     from dude_spark.session import get_spark
@@ -61,7 +57,7 @@ def main() -> None:
     pages = spark.createDataFrame(rows, "url string, html string").cache()
     pages.count()
 
-    def run() -> tuple[int, float]:
+    def run() -> tuple[list, float]:
         app = Scraper()
 
         @app.select(css="p.t")
@@ -74,27 +70,22 @@ def main() -> None:
                 follow_urls=True, max_rounds=n_pages + 2, round_seconds=3600
             ),
         )
-        t0 = time.time()
+        t0 = time.perf_counter()
         res = job.run(["https://chain.test/page-0.html"])
         res.results.count()
-        return len(res.metrics), time.time() - t0
+        return res.metrics, time.perf_counter() - t0
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        run()  # warm-up: python-worker fork + JIT + first-plan costs
-        rounds, secs = run()
-    # attribute the timed run's floor to the crawl loop's named stages
-    hits = re.findall(r"\[(\w+)\] ([0-9.]+)s", buf.getvalue())
-    timed = hits[len(hits) // 2 :]  # second (timed) crawl's lines
+    run()  # warm-up: python-worker fork + JIT + first-plan costs
+    metrics, secs = run()
+    rounds = len(metrics)
     sums: dict = {}
-    counts: dict = {}
-    for label, sec in timed:
-        sums[label] = sums.get(label, 0.0) + float(sec)
-        counts[label] = counts.get(label, 0) + 1
+    for m in metrics:
+        for label, sec in m.stages.items():
+            sums[label] = sums.get(label, 0.0) + sec
     by_stage = {
-        k: round(sums[k] / counts[k] * 1000)
+        k: round(sums[k] / rounds * 1000)
         for k in sorted(sums, key=lambda k: -sums[k])
-        if sums[k] / counts[k] >= 0.001
+        if sums[k] / rounds >= 0.001
     }
     print(
         json.dumps(
