@@ -252,7 +252,8 @@ def assign_global_seq(
     df: DataFrame, order_cols: Sequence[str], start: int, out_col: str = "seq",
     rows_hint: Optional[int] = None,
     count_hosts: Optional[Sequence[str]] = None,
-    key_bounds: Optional[tuple] = None,
+    *,
+    key_bounds: tuple,
 ) -> tuple[DataFrame, int, Optional[dict]]:
     """Dense global sequence in ``order_cols`` order, starting at ``start``.
 
@@ -261,20 +262,15 @@ def assign_global_seq(
     row_number inside mapInPandas. O(n/p) per task — no global single
     partition, unlike ``row_number() over (ORDER BY ...)``.
 
-    Two partitioning strategies:
-
-    - ``key_bounds=(lo, hi)`` (inclusive bounds of ``order_cols[0]``, known
-      driver-side): rows bucket by ``floor((key - lo) * n / width)`` — a
-      DETERMINISTIC contiguous range split with no sampling pass, so the
-      upstream pipeline is planned and evaluated exactly once (the sizing
-      aggregation below is the single materializing job). The crawl loop
-      always knows its parents' seq bounds, so this is its path: one job
-      per round instead of sample-job + sizing-job. Buckets are hash-placed
-      into partitions (a partition may hold several buckets, each bucket
-      whole); the numbering pass re-seeds its offset at bucket boundaries.
-    - otherwise: ``repartitionByRange``, which SAMPLES its input to pick
-      boundaries — the pipeline is evaluated twice, so callers should hand
-      in a plan anchored on checkpointed/cached data.
+    ``key_bounds=(lo, hi)`` are the inclusive bounds of ``order_cols[0]``,
+    known driver-side: rows bucket by ``floor((key - lo) * n / width)`` — a
+    DETERMINISTIC contiguous range split with no sampling pass, so the
+    upstream pipeline is planned and evaluated exactly once (the sizing
+    aggregation below is the single materializing job). The crawl loop
+    always knows its parents' seq bounds, so a round costs one job instead
+    of sample-job + sizing-job. Buckets are hash-placed into partitions (a
+    partition may hold several buckets, each bucket whole); the numbering
+    pass re-seeds its offset at bucket boundaries.
 
     Returns ``(numbered_df, total_rows, host_counts)`` — the total comes
     free from the sizing pass, so callers never need a separate ``count()``.
@@ -291,32 +287,21 @@ def assign_global_seq(
         # a serialized handshake through the single pyspark daemon (~20ms),
         # so 32 near-empty numbering tasks cost more than 2 full ones.
         n_part = max(1, min(n_part, rows_hint // 4096 + 1))
-    order_exprs = [F.col(c) for c in order_cols]
-    if key_bounds is not None:
-        lo, hi = int(key_bounds[0]), int(key_bounds[1])
-        width = max(1, hi - lo + 1)
-        key = F.col(order_cols[0]).cast("bigint")
-        bucket = F.least(
-            F.lit(n_part - 1),
-            F.greatest(
-                F.lit(0),
-                ((key - F.lit(lo)) * F.lit(n_part) / F.lit(width)).cast("int"),
-            ),
-        )
-        parted = (
-            df.withColumn("_rid", bucket)
-            .repartition(n_part, "_rid")
-            .sortWithinPartitions("_rid", *order_exprs)
-        )
-    else:
-        parted = df.repartitionByRange(n_part, *order_exprs).sortWithinPartitions(
-            *order_exprs
-        )
-        # The partition id must travel WITH the rows: when the numbered
-        # output is later composed into a bigger plan (e.g. unioned with
-        # another DataFrame) TaskContext.partitionId() is re-indexed and
-        # would misalign the offsets.
-        parted = parted.withColumn("_rid", F.spark_partition_id())
+    lo, hi = int(key_bounds[0]), int(key_bounds[1])
+    width = max(1, hi - lo + 1)
+    key = F.col(order_cols[0]).cast("bigint")
+    bucket = F.least(
+        F.lit(n_part - 1),
+        F.greatest(
+            F.lit(0),
+            ((key - F.lit(lo)) * F.lit(n_part) / F.lit(width)).cast("int"),
+        ),
+    )
+    parted = (
+        df.withColumn("_rid", bucket)
+        .repartition(n_part, "_rid")
+        .sortWithinPartitions("_rid", *[F.col(c) for c in order_cols])
+    )
     # lazy checkpoint: the sizing collect below is the materializing action —
     # one job instead of an eager-checkpoint job plus a count job. The
     # numbering pass then reads the stored blocks with pinned partitioning.

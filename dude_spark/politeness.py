@@ -19,10 +19,10 @@ both with set operations:
 
 Skew note (north_rule "salted, host-bucketed repartitioning"): ranking
 partitions by host; a hot host concentrates its frontier rows in one task.
-Budgets are bounded (≤ budget rows matter per host per round), so before the
-window we pre-prune each host to its budget's worth of rows using a cheap
-salted two-phase top-k when the frontier is very large — see
-``budget_rank(..., presort_salt=...)``.
+So only hosts that can be over budget pay the full-row window:
+``budget_rank`` first counts pending rows per host and ranks only the hosts
+past their budget, and ``fast_budget_rank`` ranks only the delay-carrying
+hosts the driver already knows. Every other host passes through unranked.
 """
 
 from __future__ import annotations

@@ -21,7 +21,9 @@ def get_spark(
     - Arrow enabled end-to-end: every Python crossing is a batched pandas UDF.
     - UTC session TZ for DuckDB-oracle comparability.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = cpus if cpus != "*" else os.cpu_count() or 8
@@ -45,9 +47,10 @@ def get_spark(
         # capped at 8: the JVM defaults to ~23 on a 32-core box and at 32
         # mutator threads they contend for the same saturated memory
         # controllers — capping measured +20% wide-round throughput at
-        # local[32] (3/3 interleaved A/B wins; BENCH/BASELINE.md "8→32
-        # gap"). A real cluster's 4-8-core executor JVMs default to ≤8 GC
-        # threads anyway — local mode was uniquely mis-defaulted.
+        # local[32] (3/3 interleaved A/B wins on a 32-core host) and was
+        # neutral in the 9-round regime (BASELINE.md, scaling history). A
+        # real cluster's 4-8-core executor JVMs default to ≤8 GC threads
+        # anyway — local mode was uniquely mis-defaulted.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:+UseParallelGC -XX:ParallelGCThreads=8",

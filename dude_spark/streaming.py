@@ -102,24 +102,9 @@ def windowed_event_counts(
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
     )
-    agg = (
-        ev.groupBy(
-            F.window("ts", window).alias("w"),
-            (F.col("user_id") % 10).alias("user_bucket"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            "user_bucket",
-            F.col("w.start").cast("long").alias("window_start"),
-            "n_events",
-            "total_value",
-        )
-    )
     q = (
-        agg.writeStream.format("memory")
+        _windowed_agg(ev, window)
+        .writeStream.format("memory")
         .queryName(sink_table)
         .trigger(availableNow=True)
         .outputMode("complete")
@@ -130,7 +115,7 @@ def windowed_event_counts(
 
 
 def _windowed_agg(ev: DataFrame, window: str) -> DataFrame:
-    agg = (
+    return (
         ev.groupBy(
             F.window("ts", window).alias("w"),
             (F.col("user_id") % 10).alias("user_bucket"),
@@ -146,7 +131,6 @@ def _windowed_agg(ev: DataFrame, window: str) -> DataFrame:
             "total_value",
         )
     )
-    return agg
 
 
 def windowed_event_counts_append(

@@ -124,16 +124,6 @@ def test_flatten_spark_matches_reference_shape(spark, crawl_result):
     assert row[0]["data"]["item_href"] == "item-1-1.html"
 
 
-def test_assign_global_seq_dense_and_ordered(spark):
-    df = spark.range(1000).selectExpr("id AS a", "(999 - id) AS b")
-    out, total, _ = assign_global_seq(df, ["b"], start=100)
-    assert total == 1000
-    rows = out.orderBy("seq").collect()
-    assert [r["seq"] for r in rows[:3]] == [100, 101, 102]
-    # seq follows the order column
-    assert rows[0]["b"] == 0 and rows[-1]["b"] == 999
-
-
 def test_resume_continues_from_checkpoint(spark, tmp_path):
     app = make_scraper()
     pages = pages_df(spark, SF).select("url", "html")
@@ -489,9 +479,21 @@ def test_follow_cycle_dedupes_without_follow_urls(spark):
     assert {r["url"] for r in res.seen.collect()} == set(fetched)
 
 
+def test_assign_global_seq_dense_and_ordered(spark):
+    """Single order key that runs against the row order: dense from
+    ``start`` and in order-column order."""
+    df = spark.range(1000).selectExpr("id AS a", "(999 - id) AS b")
+    out, total, hc = assign_global_seq(df, ["b"], start=100, key_bounds=(0, 999))
+    assert total == 1000 and hc is None
+    rows = out.orderBy("seq").collect()
+    assert [r["seq"] for r in rows] == list(range(100, 1100))
+    # seq follows the order column
+    assert [r["b"] for r in rows] == list(range(1000))
+
+
 def test_assign_global_seq_key_bounds_path(spark):
-    """Deterministic range-split path (key_bounds): dense, ordered, no
-    sampling job — must agree exactly with the sampling path's output."""
+    """Deterministic range-split numbering (key_bounds): dense from
+    ``start`` and in (a, b) lexicographic order, with host counts."""
     df = spark.range(1000).selectExpr("(id % 100) AS a", "id AS b", "'h' AS host")
     out, total, hc = assign_global_seq(
         df, ["a", "b"], start=7, rows_hint=1000, key_bounds=(0, 99),

@@ -1,20 +1,16 @@
-"""No-Spark scaling control for BENCH/BASELINE.md.
+"""No-Spark scaling control for ``bench.py --scaling``.
 
-Measures the parse+extract kernel's multiprocessing speedup curve on the
-same synthetic pages the crawl bench uses — zero Spark, zero coordination,
-fork-shared input (no IPC in the measured window). Pages are per-page
-zlib-compressed and inflated inside the kernel, matching the engine bench
-posture (CrawlConfig.page_codec="zlib") byte-for-byte in per-page work.
-Usage: scaling_control.py [replicate] [pad] [levels] — e.g. `8 450 2,8`
-runs only the 2- and 8-proc levels (a cheap in-window control leg).
-This isolates the
-HARDWARE's contribution to the local[8]→local[32] efficiency number: HTML
-parsing is allocation-heavy, and a single socket's memory bandwidth
-saturates well before 32 cores. A real N→4N executor scale-out adds a
-memory subsystem per node, which threads on one box cannot model.
+Measures the parse+extract kernel's multiprocessing throughput on the
+bench corpus bench.py materializes — the same per-page zlib-compressed
+pages, inflated inside the kernel exactly as the engine's extraction kernel
+does (CrawlConfig.page_codec="zlib") — with zero Spark, zero coordination
+and fork-shared input (no IPC in the measured window). Run inside the same
+drift window as an engine pair, it prices what the hardware itself delivers
+at those parallelism levels; the caller computes the efficiency.
 
-Usage: python tools/scaling_control.py [replicate] [pad]
-Prints one JSON line: {"procs": {...pages/sec...}, "speedup_1_to_8": ...}
+Usage: python tools/scaling_control.py LEVELS   (e.g. ``1,4``), after
+bench.py has run at the same ``$SPARK_GRAFT_SF_DIR``.
+Prints one JSON line: {"pages": N, "pad": P, "pages_per_sec_by_procs": {...}}
 """
 
 from __future__ import annotations
@@ -27,11 +23,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 ROWS: list = []
 
 
 def _parse_range(args):
     lo, hi, step = args
+    import zlib
+
     from dude_spark.api import Scraper
     from dude_spark.extract import extract_page_rows
 
@@ -47,15 +47,8 @@ def _parse_range(args):
         return {"item_href": element.get("href")}
 
     plan = app.compile()
-    import zlib
-
     n = 0
     for i in range(lo, hi, step):
-        # identical per-page work to the engine's extraction kernel in the
-        # bench posture (CrawlConfig.page_codec="zlib"): pages rest
-        # compressed and every parse pays the zlib inflate — the inflate's
-        # memory writes are a real slice of the bandwidth pressure the
-        # 2→8→32 curve measures, so the control must pay it too
         extract_page_rows(
             plan, "https://x.test/p.html", zlib.decompress(ROWS[i]),
             follow_urls=True,
@@ -64,49 +57,21 @@ def _parse_range(args):
     return n
 
 
-def _load_rows(replicate: int, pad: int) -> list:
-    """Synthesized compressed-page corpus, disk-cached per (sf, replicate,
-    pad) so a per-window control invocation costs zero Spark-session
-    startup (~30s) — the whole point of the control is to sit INSIDE the
-    same drift window as the engine pair it calibrates."""
-    import pickle
-    import zlib
+def _load_rows() -> list:
+    """The bench corpus's compressed pages, read straight from the parquet
+    an engine leg (bench.py) writes."""
+    import pyarrow.parquet as pq
 
-    import bench
-
-    cache = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"),
-        f"ctl_rows_{os.path.basename(bench.SF_DIR)}_{replicate}_{pad}.pkl",
-    )
-    if os.path.exists(cache):
-        with open(cache, "rb") as f:
-            return pickle.load(f)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # light session, synth only
-    from dude_spark.session import get_spark
-
-    spark = get_spark(app_name="scaling_control")
-    pages = bench.replicated_pages(spark, bench.SF_DIR, replicate, pad=pad)
-    rows = [
-        zlib.compress(bytes(r["html"]), 1)
-        for r in pages.select("html").collect()
-    ]
-    spark.stop()
-    with open(cache, "wb") as f:
-        pickle.dump(rows, f)
-    return rows
+    path = bench.pages_path(bench.SF_DIR, bench.REPLICATE)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        sys.exit(f"{path} is missing: run bench.py at this scale factor first")
+    return pq.read_table(path, columns=["html"]).column("html").to_pylist()
 
 
 def main() -> None:
     global ROWS
-    replicate = int(sys.argv[1]) if len(sys.argv) > 1 else 4
-    pad = int(sys.argv[2]) if len(sys.argv) > 2 else int(os.environ.get("SPARK_GRAFT_PAD", "150"))
-    levels = (
-        [int(x) for x in sys.argv[3].split(",")]
-        if len(sys.argv) > 3
-        else [1, 2, 4, 8, 16, 32]
-    )
-
-    ROWS = _load_rows(replicate, pad)
+    levels = [int(x) for x in sys.argv[1].split(",")]
+    ROWS = _load_rows()
 
     mp.set_start_method("fork", force=True)
     n = len(ROWS)
@@ -115,17 +80,8 @@ def main() -> None:
         t0 = time.time()
         with mp.Pool(procs) as p:
             done = sum(p.map(_parse_range, [(i, n, procs) for i in range(procs)]))
-        dt = time.time() - t0
-        out[procs] = round(done / dt, 1)
-    res = {"pages": n, "pad": pad, "pages_per_sec_by_procs": out}
-    if 1 in out and 8 in out:
-        res["speedup_1_to_8"] = round(out[8] / out[1], 2)
-    if 2 in out and 8 in out:
-        res["eff_2_to_8"] = round(out[8] / out[2] / 4, 3)
-    if 8 in out and 32 in out:
-        res["speedup_8_to_32"] = round(out[32] / out[8], 2)
-        res["eff_8_to_32"] = round(out[32] / out[8] / 4, 3)
-    print(json.dumps(res))
+        out[procs] = round(done / (time.time() - t0), 1)
+    print(json.dumps({"pages": n, "pad": bench.PAD, "pages_per_sec_by_procs": out}))
 
 
 if __name__ == "__main__":
