@@ -40,6 +40,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import _local_relation
+
 N_HOSTS = 20
 
 
@@ -157,4 +159,6 @@ def robots_df(spark: SparkSession, n_hosts: int = N_HOSTS) -> DataFrame:
         disallow = "Disallow: /page-7.html\n" if m % 4 == 0 else ""
         txt = f"User-Agent: *\n{disallow}Crawl-Delay: {m % 3}\n"
         rows.append((f"host-{m}.test", txt, m % 3))
-    return spark.createDataFrame(rows, "host string, robots_txt string, crawl_delay int")
+    return _local_relation(
+        spark, rows, "host string, robots_txt string, crawl_delay int"
+    )

@@ -42,10 +42,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
 from collections import Counter
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Union
 from urllib.parse import urlparse
@@ -76,10 +74,12 @@ from .politeness import (
     inline_robots_cols,
     robots_gate,
 )
+from .session import _conf_override, _local_relation, worker_setup
 
 # the extraction kernel's output with the fetched row's depth/seq passed through
 EXTRACTED_SCHEMA = EXTRACT_SCHEMA + ", depth int, seq bigint"
 RESULT_SCHEMA = EXTRACTED_SCHEMA + ", round int"
+TRACE_DDL = "url string, depth int, seq bigint, method string, round int"
 # the crawl frontier carries crawl_delay, attached once at append time by the
 # robots gate, so the per-round politeness budget needs no robots join
 CRAWL_COLS = FRONTIER_COLS + ["crawl_delay"]
@@ -188,6 +188,8 @@ class RoundMetrics:
     seconds: float
     # wall seconds per round stage (see the module docstring), perf_counter
     stages: Dict[str, float] = field(default_factory=dict)
+    # where the number stage ran: "driver" or "distributed"
+    path: str = ""
 
 
 @dataclass
@@ -196,56 +198,6 @@ class CrawlResult:
     trace: DataFrame              # fetched URLs: url, depth, seq, round (FIFO order = seq)
     seen: DataFrame               # url, url_hash
     metrics: List[RoundMetrics] = field(default_factory=list)
-
-
-_CONF_OVERRIDE_LOCK = threading.RLock()
-
-
-@contextmanager
-def _conf_override(spark: SparkSession, pairs: dict):
-    """Set runtime SQL confs for one driver-side operation, then restore.
-
-    Spark's runtime-conf is session-global, so any concurrent planner
-    thread COULD observe the temporary value. A module lock serializes all
-    dude_spark override sections (two concurrent crawls on one session
-    can't interleave set/restore); the residual assumption — user driver
-    threads outside dude_spark don't plan Arrow conversions mid-override —
-    is documented per ADVICE r4 and holds for the single-threaded driver
-    the engine targets."""
-    conf = spark.conf
-    _CONF_OVERRIDE_LOCK.acquire()
-    old = {k: conf.get(k, None) for k in pairs}
-    for k, v in pairs.items():
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        try:
-            for k, v in old.items():
-                if v is not None:
-                    conf.set(k, v)
-                else:
-                    conf.unset(k)
-        finally:
-            _CONF_OVERRIDE_LOCK.release()
-
-
-def _local_relation(spark: SparkSession, pdf, ddl: str) -> DataFrame:
-    """True LocalRelation (``LocalTableScan``) from a pandas frame.
-
-    The list-based ``createDataFrame`` path parallelizes to a pickled
-    Python RDD — every later scan of it (broadcast builds, the fetch join)
-    then launches Python-worker tasks, which is exactly the per-round
-    overhead the hybrid frontier exists to remove. The Arrow path converts
-    driver-side into JVM rows: scans are JVM-only and a broadcast of it
-    builds with NO Spark job. The Arrow batch size is raised for the one
-    conversion (the session default of 128 rows exists for ~150 KB page
-    payloads, not 10-column frontier rows; at 128 a 15k-row frontier would
-    shred into ~120 batches/partitions)."""
-    with _conf_override(
-        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "8388608"}
-    ):
-        return spark.createDataFrame(pdf, ddl)
 
 
 def assign_global_seq(
@@ -344,6 +296,7 @@ def assign_global_seq(
     def number(batches):
         import numpy as np
 
+        worker_setup()
         cur_rid = None
         off = 0
         for pdf in batches:
@@ -537,6 +490,7 @@ class _Round:
 
     rnd: int
     stages: Dict[str, float] = field(default_factory=dict)
+    path: str = ""                        # RoundMetrics.path
     fetch_set: Optional[DataFrame] = None
     deferred: Optional[DataFrame] = None  # over-budget rows, next round
     n_fetched: int = 0
@@ -746,11 +700,7 @@ class CrawlJob:
                 seed_pdf = pd.DataFrame(
                     [tuple(r) for r in frontier.collect()], columns=CRAWL_COLS
                 )
-                frontier = (
-                    _local_relation(spark, seed_pdf, CRAWL_DDL)
-                    if len(seed_pdf)
-                    else spark.createDataFrame([], CRAWL_DDL)
-                )
+                frontier = _local_relation(spark, seed_pdf, CRAWL_DDL)
                 if cfg.state_dir:
                     self._commit_local_frontier(seed_pdf, -1)
                 self.seen = _open_seen(spark, seed_pdf, cfg)
@@ -924,7 +874,10 @@ class CrawlJob:
         st.links = links.withColumn("priority", self._prio_col)
 
     def _number(self, st: _Round) -> None:
-        if not self._number_on_driver(st):
+        if self._number_on_driver(st):
+            st.path = "driver"
+        else:
+            st.path = "distributed"
             self._number_distributed(st)
 
     def _number_on_driver(self, st: _Round) -> bool:
@@ -1063,20 +1016,15 @@ class CrawlJob:
             # exactly this round's delta (tightens the range-split bound)
             self.frontier_lo = st.prev_max + 1
             if st.new_frontier is None:
-                frontier = self.spark.createDataFrame([], self.frontier.schema)
-                local = True
-            else:
-                frontier, local = st.new_frontier, st.local_pdf is not None
+                st.local_pdf = pd.DataFrame(columns=CRAWL_COLS)
+                st.new_frontier = _local_relation(self.spark, st.local_pdf, CRAWL_DDL)
+            frontier, local = st.new_frontier, st.local_pdf is not None
         elif st.new_frontier is None:
             frontier = st.deferred
         else:
             frontier = st.deferred.unionByName(st.new_frontier)
         if cfg.state_dir and local:
-            self._commit_local_frontier(
-                st.local_pdf if st.local_pdf is not None
-                else pd.DataFrame(columns=CRAWL_COLS),
-                st.rnd,
-            )
+            self._commit_local_frontier(st.local_pdf, st.rnd)
         elif cfg.state_dir or not local:
             frontier = self._persist(frontier, "frontier", st.rnd, eager=False)
         self.frontier = frontier
@@ -1121,8 +1069,8 @@ class CrawlJob:
         if len(self.allowed) <= INLINE_ALLOWED_MAX:
             self._in_allowed = F.col("host").isin(self.allowed)
         else:
-            self._allowed_df = spark.createDataFrame(
-                [(h,) for h in self.allowed], "host string"
+            self._allowed_df = _local_relation(
+                spark, [(h,) for h in self.allowed], "host string"
             )
         self._abp = (
             adblock_blocked_expr(cfg.adblock_rules, source_col="source_url")
@@ -1184,6 +1132,7 @@ class CrawlJob:
                     deferred=st.n_deferred,
                     seconds=time.perf_counter() - t0,
                     stages=st.stages,
+                    path=st.path,
                 )
             )
             if cfg.state_dir:
@@ -1193,12 +1142,10 @@ class CrawlJob:
                     json.dump(metrics[-1].__dict__, f)
 
         self.scraper.run_event("shutdown")
-        results = spark.createDataFrame([], RESULT_SCHEMA)
+        results = _local_relation(spark, [], RESULT_SCHEMA)
         for p in self.results_parts:
             results = results.unionByName(p)
-        trace = spark.createDataFrame(
-            [], "url string, depth int, seq bigint, method string, round int"
-        )
+        trace = _local_relation(spark, [], TRACE_DDL)
         for p in self.trace_parts:
             trace = trace.unionByName(p)
         return CrawlResult(

@@ -29,6 +29,7 @@ import pandas as pd
 from .api import CompiledPlan
 from .dom import Element, parse_html, select
 from .rule import RuleSpec, rule_grouper
+from .session import worker_setup
 
 # Output schema of the extraction stage (kind: 'data' row or 'link' row).
 EXTRACT_SCHEMA = (
@@ -268,6 +269,7 @@ def make_extract_iterator(
         decompress = None
 
     def it(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_setup()
         for pdf in batches:
             out_rows: List[tuple] = []
             extras: List[list] = [[] for _ in passthrough]

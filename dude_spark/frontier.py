@@ -27,6 +27,8 @@ from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .session import _local_relation
+
 FRONTIER_COLS = [
     "url", "url_hash", "host", "depth", "priority", "seq", "method", "status", "round",
 ]
@@ -53,13 +55,13 @@ def seed_frontier(
 ) -> DataFrame:
     """Round-0 frontier from the seed list (reference ``base.py:402-406``:
     ``deque(urls)`` preserves order → ``seq``). ``@start_requests`` seeds are
-    drained *after* plain URLs (``optional/utils.py:48-66``) → higher seq."""
+    drained *after* plain URLs (``optional/utils.py:48-66``) → higher seq.
+    A driver-built LocalRelation: scanning it runs no Python worker."""
     rows = [(u, i, "GET") for i, u in enumerate(urls)]
     base = len(rows)
     for j, req in enumerate(requests or []):
         rows.append((req.url, base + j, req.method))
-    df = spark.createDataFrame(rows, "url string, seq long, method string")
-    df = df.coalesce(max(1, min(len(rows) // 4096 + 1, 32)))
+    df = _local_relation(spark, rows, "url string, seq long, method string")
     return (
         with_url_meta(df)
         .withColumn("depth", F.lit(0))

@@ -34,6 +34,8 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .session import worker_setup
+
 ROBOTS_USER_AGENT = "dude"  # hardcoded in the reference (base.py:381)
 
 
@@ -67,8 +69,7 @@ def compile_robots_rows(raw_rows) -> list:
     """Driver-side compile of a robots dim of ≤ :data:`LOCAL_ROBOTS_MAX`
     hosts (already ``take``-bounded): parsing ~dozens of 3-line files is
     microseconds of driver CPU, while routing them through a pandas-UDF
-    Spark job costs two single-task sub-jobs (~5s measured at local[32] on
-    a pickled-parallelize input) — pure serial floor on every crawl."""
+    Spark job costs at least one job — pure serial floor on every crawl."""
     out = []
     for r in raw_rows:
         delay, rules = parse_robots_txt(r["robots_txt"])
@@ -89,6 +90,7 @@ def compile_robots(robots: DataFrame) -> DataFrame:
     """
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_setup()
         for pdf in batches:
             out_rules, out_delay = [], []
             for txt in pdf["robots_txt"]:
@@ -99,11 +101,9 @@ def compile_robots(robots: DataFrame) -> DataFrame:
                 {"host": pdf["host"], "crawl_delay": out_delay, "rules": out_rules}
             )
 
-    # Keep the input partitioning: a single coalesced task on a pickled-
-    # parallelize input pays the whole python-worker conversion serially
-    # (~5s measured) — parallel tasks amortize it, and downstream
-    # take()/collect() still runs ONE sub-job over all partitions
-    # (spark.sql.limit.initialNumPartitions, session.py).
+    # Keep the input partitioning: the dim is small and, with
+    # session.worker_setup, a Python task costs about what its parse costs,
+    # so neither coalescing nor spreading the input pays.
     return robots.select("host", "robots_txt").mapInPandas(
         parse,
         "host string, crawl_delay int, rules array<struct<path string, allow boolean>>",

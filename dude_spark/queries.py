@@ -25,6 +25,7 @@ from .extract import make_extract_iterator
 from .flatten import flatten
 from .frontier import canonicalize
 from .politeness import budget_rank, compile_robots, robots_gate
+from .session import _local_relation, worker_setup
 from .textops import duckdb_hash32
 from .textops.dedup import (
     MINHASH_PRIME,
@@ -170,6 +171,7 @@ def q_content_identity_zlib(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _compress(batches):
         import zlib
 
+        worker_setup()
         for pdf in batches:
             pdf["html"] = [zlib.compress(bytes(h), 1) for h in pdf["html"]]
             yield pdf
@@ -1033,8 +1035,9 @@ def q_sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["_page_url"], int(r["_group_index"]), r.get("title"), r.get("item_href"))
         for r in rows
     ]
-    return spark.createDataFrame(
-        data, "page_url string, group_index long, title string, item_href string"
+    return _local_relation(
+        spark, data,
+        "page_url string, group_index long, title string, item_href string",
     )
 
 
@@ -1066,8 +1069,9 @@ def q_sink_yaml(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["_page_url"], int(r["_group_index"]), r.get("title"), r.get("item_href"))
         for r in rows
     ]
-    return spark.createDataFrame(
-        data, "page_url string, group_index long, title string, item_href string"
+    return _local_relation(
+        spark, data,
+        "page_url string, group_index long, title string, item_href string",
     )
 
 
@@ -1096,8 +1100,8 @@ def q_sink_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     for fmt, out, per_page in cases:
         rf, hn = resolve_sink(fmt, out, per_page, rules)
         rows.append((fmt, out or "", "Y" if per_page else "N", rf, hn))
-    return spark.createDataFrame(
-        rows,
+    return _local_relation(
+        spark, rows,
         "fmt string, output string, per_page string, resolved_format string, handler string",
     )
 

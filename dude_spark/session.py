@@ -3,8 +3,12 @@
 from __future__ import annotations
 
 import os
+import sys
+import threading
+import zipimport
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -71,7 +75,10 @@ def get_spark(
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "256")
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     env_conf = os.environ.get("SPARK_GRAFT_CONF_JSON")
     if env_conf:
@@ -85,6 +92,21 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half of this machine's RAM, capped at 24g. In local mode the driver
+    JVM runs every task, and a heap sized past the RAM it can actually get
+    grows until the kernel kills it (24g on a 16 GB box reached ~13 GB RSS
+    and lost the JVM mid-run)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(int(line.split()[1]) // 2048, 24 * 1024)}m"
+    except (OSError, ValueError):
+        pass
+    return "24g"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -120,3 +142,135 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:  # already added in this context
         pass
+
+
+_CONF_OVERRIDE_LOCK = threading.RLock()
+
+
+@contextmanager
+def _conf_override(spark: SparkSession, pairs: dict):
+    """Set runtime SQL confs for one driver-side operation, then restore.
+
+    Spark's runtime-conf is session-global, so any concurrent planner
+    thread COULD observe the temporary value. A module lock serializes all
+    dude_spark override sections (two concurrent crawls on one session
+    can't interleave set/restore); the residual assumption — user driver
+    threads outside dude_spark don't plan Arrow conversions mid-override —
+    is documented per ADVICE r4 and holds for the single-threaded driver
+    the engine targets."""
+    conf = spark.conf
+    _CONF_OVERRIDE_LOCK.acquire()
+    old = {k: conf.get(k, None) for k in pairs}
+    for k, v in pairs.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        try:
+            for k, v in old.items():
+                if v is not None:
+                    conf.set(k, v)
+                else:
+                    conf.unset(k)
+        finally:
+            _CONF_OVERRIDE_LOCK.release()
+
+
+def _local_relation(spark: SparkSession, data, schema) -> DataFrame:
+    """True LocalRelation (``LocalTableScan``) of ``data`` — a pandas frame
+    (columns taken by name) or a sequence of row tuples — typed by
+    ``schema``, a DDL string or a StructType. Every frame the engine builds
+    on the driver comes from here.
+
+    The list-based ``createDataFrame`` path, and the pandas path for an
+    EMPTY frame or with Arrow off, parallelize to a pickled PythonRDD:
+    every scan of it launches one Python-worker task per partition, even
+    for one row or none. Here the rows go driver-side
+    into an Arrow table, whatever the session's Arrow conf: scans are
+    JVM-only, a broadcast of it builds with NO Spark job, and an empty
+    ``data`` plans to an empty LocalTableScan (an ``EmptyRDD`` of 0
+    partitions) whose schema is still ``schema``. The Arrow batch size is
+    raised for the one conversion (the session default of 128 rows exists
+    for ~150 KB page payloads, not 10-column frontier rows; at 128 a
+    15k-row frontier would shred into ~120 batches/partitions)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    if not len(data):
+        table = arrow.empty_table()
+    elif hasattr(data, "columns"):
+        table = pa.Table.from_pandas(
+            data[schema.names], schema=arrow, preserve_index=False
+        )
+    else:
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(zip(*data), arrow)],
+            schema=arrow,
+        )
+    with _conf_override(
+        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "8388608"}
+    ):
+        return spark.createDataFrame(table, schema)
+
+
+# -- Python workers ----------------------------------------------------------
+#
+# pyspark calls importlib.invalidate_caches() at the start of every task
+# (worker_util.setup_spark_files). Below Python 3.13 that makes every
+# zipimporter in sys.path_importer_cache — one per imported package
+# directory of pyspark.zip and of the shipped package zip — re-read its
+# whole archive directory (pyspark.zip has 1,328 entries): ~0.1 s of CPU
+# per task with the 14 importers a pyspark worker holds (4-core x86 VM).
+# 3.13's zipimporter only drops the cached entry.
+
+_WORKER_READY = False
+
+
+def worker_setup() -> None:
+    """Once-per-process set-up of a Python worker; the first statement of
+    every engine ``mapInPandas`` body. Installs the stamped
+    zip-invalidation (``_lazy_zip_invalidation``) on workers below Python
+    3.13; does nothing on the driver, on 3.13+ and after the first call."""
+    global _WORKER_READY
+    if _WORKER_READY:
+        return
+    _WORKER_READY = True
+    from pyspark import TaskContext
+
+    if sys.version_info < (3, 13) and TaskContext.get() is not None:
+        _lazy_zip_invalidation()
+
+
+def _zip_stamp(path: str):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _lazy_zip_invalidation() -> None:
+    """Replace ``zipimporter.invalidate_caches`` with one that re-reads an
+    archive's directory only when the archive's ``(st_mtime_ns, st_size)``
+    differs from the stamp stored on that importer (a missing archive is
+    always re-read: the original then empties the importer). Importers
+    alive now are stamped with their archive as it is: this task's
+    ``setup_spark_files`` has just re-read every one of them, and the task's
+    files were fetched before it started. An importer created later is
+    re-read once, by its first invalidation."""
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        stamp = _zip_stamp(self.archive)
+        if stamp is None or stamp != getattr(self, "_dude_stamp", None):
+            reread(self)
+            self._dude_stamp = stamp
+
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            imp._dude_stamp = _zip_stamp(imp.archive)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

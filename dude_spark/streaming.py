@@ -28,6 +28,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import _local_relation
+
 
 def stream_crawl_results(
     spark: SparkSession,
@@ -181,6 +183,6 @@ def windowed_event_counts_append(
     try:
         return spark.read.parquet(out_dir)
     except Exception:
-        return spark.createDataFrame([], _windowed_agg(
+        return _local_relation(spark, [], _windowed_agg(
             spark.read.parquet(events_dir)
             .withColumn("ts", F.col("ts").cast("timestamp")), window).schema)

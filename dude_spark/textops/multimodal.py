@@ -18,6 +18,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import worker_setup
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, mime string, "
     "width int, height int, duration_ms int"
@@ -71,6 +73,7 @@ def decode_features(media: DataFrame, feat_dim: int = 4) -> DataFrame:
     """
 
     def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_setup()
         for pdf in batches:
             feats: list[list[int]] = [[] for _ in range(feat_dim)]
             for payload in pdf["payload"]:

@@ -10,6 +10,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import worker_setup
+
 STOPWORDS = (
     "the a an and or of to in is are was were be been it this that "
     "with for on as at by from"
@@ -233,6 +235,7 @@ def predict_lang(docs: DataFrame, profiles: dict, n: int = 3) -> DataFrame:
         import math
         from collections import Counter
 
+        worker_setup()
         pnorm = {
             lang: math.sqrt(sum(v * v for v in prof.values()))
             for lang, prof in profiles.items()

@@ -31,6 +31,8 @@ from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import _local_relation
+
 __all__ = ["bm25_topk", "TOKEN_SPLIT"]
 
 # whitespace tokenizer — matches ORACLE_TOKEN_COUNT's regexp_split_to_array
@@ -78,7 +80,8 @@ def bm25_topk(
     # document frequency per term (tf is (doc, term)-unique already)
     df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
 
-    q = spark.createDataFrame(
+    q = _local_relation(
+        spark,
         [
             (qid, term)
             for qid, qtext in queries

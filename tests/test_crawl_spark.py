@@ -2,6 +2,7 @@
 reference simulator, flatten semantics, resumability."""
 
 import collections
+import json
 import re
 from urllib.parse import urljoin, urlparse
 
@@ -194,6 +195,9 @@ def test_state_dir_hybrid_parity(spark, tmp_path, crawl_result):
             assert os.path.exists(
                 os.path.join(fdir, f"round={r}", "_SUCCESS")
             ), f"round={r} lacks _SUCCESS at cap={cap}"
+        for m in res.metrics:
+            with open(os.path.join(state, "rounds", f"round={m.round}.json")) as f:
+                assert json.load(f)["path"] == m.path
 
 
 def test_resume_across_frontier_paths(spark, tmp_path):
@@ -595,10 +599,11 @@ def test_seen_promotion_mid_crawl_and_resume(spark, crawl_result, tmp_path, monk
 def test_crawl_spark_job_budget(spark, crawl_result):
     """Spark jobs launched by one fixture crawl, counted from the test side
     with a job group: warm, at the default config (driver-path rounds: one
-    job each) and at driver_frontier_max=0 (every round distributed)."""
+    job each) and at driver_frontier_max=0 (every round distributed); each
+    round's RoundMetrics.path says which."""
     _, pages = crawl_result
     sc = spark.sparkContext
-    for cap, budget in ((65536, 11), (0, 53)):
+    for cap, budget, path in ((65536, 8, "driver"), (0, 52, "distributed")):
         group = f"crawl_job_budget_{cap}"
         job = CrawlJob(
             spark, make_scraper(), pages, robots=robots_df(spark),
@@ -608,11 +613,28 @@ def test_crawl_spark_job_budget(spark, crawl_result):
         )
         sc.setJobGroup(group, "crawl job budget")
         try:
-            job.run(seeds())
+            res = job.run(seeds())
             jobs = sc.statusTracker().getJobIdsForGroup(group)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(jobs) <= budget, (cap, len(jobs))
+        assert [m.path for m in res.metrics] == [path] * 6
+
+
+def test_crawl_results_scan_without_python_workers(spark, crawl_result):
+    """No frame a crawl returns scans a PythonRDD (a list-built
+    createDataFrame): not the fixture crawl's results/trace, and not the
+    empty ones of a crawl that runs no round."""
+    res, pages = crawl_result
+    zero = CrawlJob(
+        spark, make_scraper(), pages, robots=robots_df(spark),
+        config=CrawlConfig(max_rounds=0),
+    ).run(seeds())
+    assert zero.metrics == [] and zero.trace.count() == 0
+    for r in (res, zero):
+        for df in (r.results, r.trace):
+            plan = df._jdf.queryExecution().toRdd().toDebugString()
+            assert "PythonRDD[" not in plan
 
 
 def test_hybrid_frontier_parity(spark, crawl_result):
