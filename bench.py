@@ -54,8 +54,7 @@ BENCH_QUERIES = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
+    "ann_topk",
     "dedup_embedding",
     "token_count",
     "quality_score",

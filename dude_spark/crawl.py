@@ -74,7 +74,7 @@ from .politeness import (
     inline_robots_cols,
     robots_gate,
 )
-from .session import _conf_override, _local_relation, worker_setup
+from .session import _conf_override, _local_relation, _schemas, worker_setup
 
 # the extraction kernel's output with the fetched row's depth/seq passed through
 EXTRACTED_SCHEMA = EXTRACT_SCHEMA + ", depth int, seq bigint"
@@ -519,6 +519,8 @@ class CrawlJob:
         self.pages = pages.select("url", "html")
         self.robots = robots
         self.cfg = config or CrawlConfig()
+        # Arrow twin of CRAWL_DDL for driver-side frontier commits
+        self._frontier_arrow = _schemas(CRAWL_DDL)[1]
 
     # -- state checkpointing ---------------------------------------------
     def _round_dir(self, kind: str, rnd: int) -> str:
@@ -550,15 +552,9 @@ class CrawlJob:
         path = self._round_dir("frontier", rnd)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path, exist_ok=True)
-        schema = pa.schema([
-            ("url", pa.string()), ("url_hash", pa.int64()),
-            ("host", pa.string()), ("depth", pa.int32()),
-            ("priority", pa.int32()), ("seq", pa.int64()),
-            ("method", pa.string()), ("status", pa.string()),
-            ("round", pa.int32()), ("crawl_delay", pa.int32()),
-        ])
+        schema = self._frontier_arrow
         tbl = pa.Table.from_pandas(
-            pdf[list(schema.names)], schema=schema, preserve_index=False
+            pdf[schema.names], schema=schema, preserve_index=False
         )
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
         open(os.path.join(path, "_SUCCESS"), "w").close()

@@ -14,12 +14,13 @@ sides (driver compare hashes values after sorting columns by name).
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .api import Scraper
-from .corpus import N_HOSTS, pages_df, robots_df, seeds
+from .corpus import pages_df, robots_df, seeds
 from .crawl import CrawlConfig, CrawlJob
 from .extract import make_extract_iterator
 from .flatten import flatten
@@ -106,6 +107,15 @@ def _extract_once(spark: SparkSession, sf_dir: str, scraper: Scraper, follow: bo
     return pages.select("url", "html").mapInPandas(it, EXTRACT_SCHEMA)
 
 
+def _tagged(tag: str, frames: Dict[str, DataFrame]) -> DataFrame:
+    """Union of same-schema frames, each row tagged with its frame's key in
+    column ``tag``."""
+    return reduce(
+        DataFrame.unionByName,
+        [df.select(F.lit(key).alias(tag), "*") for key, df in frames.items()],
+    )
+
+
 # ---------------------------------------------------------------------------
 # A. crawl/extract engine queries
 # ---------------------------------------------------------------------------
@@ -133,33 +143,11 @@ FROM (SELECT *, unnest(generate_series(1, n_groups)) AS k FROM layout)
 
 
 def q_content_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-identity invariant: extracted p.content text == documents.text."""
-    app = Scraper()
-
-    @app.select(css="p.content")
-    def content(element):
-        return {"content": element.text_content()}
-
-    ext = _extract_once(spark, sf_dir, app)
-    return (
-        ext.filter(F.col("kind") == "data")
-        .select(
-            F.col("page_url"),
-            F.col("data").getItem("content").alias("content"),
-        )
-    )
-
-
-ORACLE_CONTENT_IDENTITY = LAYOUT_CTE + """
-SELECT url AS page_url, text AS content FROM layout
-"""
-
-
-def q_content_identity_zlib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte identity THROUGH the compressed-payload path: pages zlib-
-    compressed per page (the WARC/100 TB posture, CrawlConfig.page_codec),
-    decoded inside the extraction kernel — extracted text must still equal
-    documents.text byte-for-byte."""
+    """Byte-identity invariant THROUGH the compressed-payload path: pages
+    zlib-compressed per page (the WARC/100 TB posture,
+    CrawlConfig.page_codec), decoded inside the extraction kernel —
+    extracted p.content text must equal documents.text byte-for-byte. The
+    plain codec is the path of every other extraction query."""
     from .extract import EXTRACT_SCHEMA
 
     app = Scraper()
@@ -187,6 +175,11 @@ def q_content_identity_zlib(spark: SparkSession, sf_dir: str) -> DataFrame:
         "page_url",
         F.col("data").getItem("content").alias("content"),
     )
+
+
+ORACLE_CONTENT_IDENTITY = LAYOUT_CTE + """
+SELECT url AS page_url, text AS content FROM layout
+"""
 
 
 def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,10 +212,16 @@ SELECT * FROM items UNION ALL SELECT * FROM kids
 
 
 def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full multi-round crawl; trace filtered to real pages → (url, depth).
+    """Full multi-round crawl → one row per fetched real page:
+    (url, depth, round, n_rows).
 
-    Verifies the BFS frontier, link expansion, seen-set dedupe, and the
-    robots gate in one closed-form-checkable result."""
+    The trace checks the BFS frontier, link expansion, seen-set dedupe and
+    the robots gate; n_rows checks S11 save-per-page (``base.py:125-139``)
+    at page grain: the flattened rows the page put into its round's
+    micro-batch (round = BFS depth on this corpus), so per-round batches
+    are disjoint and union to the full output. The join is full outer: a
+    result row whose (url, round) is no real page of the trace surfaces as
+    a row with a null depth."""
     app = _extraction_scraper()
     pages = pages_df(spark, sf_dir).select("url", "html").cache()
     job = CrawlJob(
@@ -230,17 +229,31 @@ def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         config=CrawlConfig(follow_urls=True, max_rounds=40, round_seconds=3600),
     )
     res = job.run(seeds())
-    out = (
-        res.trace.filter(F.col("url").rlike(r"/page-\d+\.html$"))
-        .select("url", F.col("depth").cast("long").alias("depth"))
+    rows = (
+        res.results
+        .select("round", "page_url", "page_number", "group_index", "group_id", "element_index")
+        .distinct()
+        .groupBy(F.col("page_url").alias("url"), "round")
+        .agg(F.count("*").alias("n_rows"))
     )
-    return out
+    return (
+        res.trace.filter(F.col("url").rlike(r"/page-\d+\.html$"))
+        .join(rows, on=["url", "round"], how="full")
+        .select(
+            "url",
+            F.col("depth").cast("long").alias("depth"),
+            F.col("round").cast("long").alias("round"),
+            F.coalesce(F.col("n_rows"), F.lit(0)).cast("long").alias("n_rows"),
+        )
+    )
 
 
 # blocked subtree: local has ancestor-or-self 7 ⇔ binary repr of (local+1)
 # starts with '1000' (=8): floor((local+1) / 2^(level-3)) = 8 for level ≥ 3
 ORACLE_CRAWL_BFS = LAYOUT_CTE + """
-SELECT url, CAST(floor(log2(local + 1)) AS BIGINT) AS depth
+SELECT url, CAST(floor(log2(local + 1)) AS BIGINT) AS depth,
+       CAST(floor(log2(local + 1)) AS BIGINT) AS round,
+       n_groups::BIGINT AS n_rows
 FROM layout
 WHERE NOT (
   host_id % 4 = 0 AND host_id % 5 != 4
@@ -252,45 +265,10 @@ WHERE NOT (
 
 def q_politeness_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-ranked per-host crawl-delay budgeting (P3) on a static
-    frontier (every page pending, seq = doc_id, round budget 10 s)."""
-    pages = pages_df(spark, sf_dir)
-    frontier = pages.select(
-        "url",
-        F.format_string("host-%d.test", "host_id").alias("host"),
-        F.floor(F.log2(F.col("local") + 1)).cast("int").alias("depth"),
-        F.col("doc_id").alias("seq"),
-    )
-    gated = robots_gate(frontier, compile_robots(robots_df(spark)))
-    ranked = budget_rank(gated, round_seconds=10, exact_ranks=True)
-    return ranked.select(
-        "url",
-        F.col("host_rank").cast("long").alias("host_rank"),
-        F.col("fetch_now"),
-    )
-
-
-ORACLE_POLITENESS = LAYOUT_CTE + """
-, gated AS (
-  SELECT url, host_id,
-         CAST(floor(log2(local+1)) AS BIGINT) AS depth, doc_id AS seq,
-         (CASE WHEN host_id % 5 = 4 THEN 0 ELSE host_id % 3 END) AS delay
-  FROM layout
-  WHERE NOT (host_id % 4 = 0 AND host_id % 5 != 4 AND local = 7)
-), ranked AS (
-  SELECT url,
-         row_number() OVER (PARTITION BY host_id ORDER BY depth, seq) AS host_rank,
-         CASE WHEN delay = 0 THEN 2147483648 ELSE greatest(1, 10 // delay) END AS budget
-  FROM gated
-)
-SELECT url, host_rank, (host_rank <= budget) AS fetch_now FROM ranked
-"""
-
-
-def q_priority_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The frontier priority queue (north_rule): within each host's
-    politeness budget, higher-priority rows rank first (window order
-    priority DESC, depth, seq); FIFO order preserved among equal
-    priorities."""
+    frontier (every page pending, seq = doc_id, round budget 10 s), gated
+    once and ranked twice: mode 'fifo' ranks (depth, seq); mode 'priority'
+    is the frontier priority queue (north_rule) — priority DESC first,
+    FIFO order among equal priorities."""
     pages = pages_df(spark, sf_dir)
     frontier = pages.select(
         "url",
@@ -300,26 +278,30 @@ def q_priority_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("seq"),
     )
     gated = robots_gate(frontier, compile_robots(robots_df(spark)))
-    ranked = budget_rank(gated, round_seconds=10, exact_ranks=True)
-    return ranked.select(
-        "url", F.col("host_rank").cast("long").alias("host_rank"), "fetch_now"
-    )
+    return _tagged("mode", {
+        mode: budget_rank(df, round_seconds=10, exact_ranks=True).select(
+            "url", F.col("host_rank").cast("long").alias("host_rank"), "fetch_now"
+        )
+        for mode, df in (("fifo", gated.drop("priority")), ("priority", gated))
+    })
 
 
-ORACLE_PRIORITY_BUDGET = LAYOUT_CTE + """
+ORACLE_POLITENESS = LAYOUT_CTE + """
 , gated AS (
   SELECT url, host_id, (doc_id % 7) AS prio,
          CAST(floor(log2(local+1)) AS BIGINT) AS depth, doc_id AS seq,
          (CASE WHEN host_id % 5 = 4 THEN 0 ELSE host_id % 3 END) AS delay
   FROM layout
   WHERE NOT (host_id % 4 = 0 AND host_id % 5 != 4 AND local = 7)
-), ranked AS (
-  SELECT url,
-         row_number() OVER (PARTITION BY host_id ORDER BY prio DESC, depth, seq) AS host_rank,
+), modes(mode, use_prio) AS (VALUES ('fifo', 0), ('priority', 1)),
+ranked AS (
+  SELECT mode, url,
+         row_number() OVER (PARTITION BY mode, host_id
+                            ORDER BY use_prio * prio DESC, depth, seq) AS host_rank,
          CASE WHEN delay = 0 THEN 2147483648 ELSE greatest(1, 10 // delay) END AS budget
-  FROM gated
+  FROM gated CROSS JOIN modes
 )
-SELECT url, host_rank, (host_rank <= budget) AS fetch_now FROM ranked
+SELECT mode, url, host_rank, (host_rank <= budget) AS fetch_now FROM ranked
 """
 
 
@@ -345,86 +327,59 @@ FROM layout GROUP BY host_id
 """
 
 
-def q_xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2: the XPath selector engine — ``.//p[@class='title']`` scoped to
-    each ``.custom-group`` (reference lxml backend ``optional/
-    lxml_scraper.py:184-185``); equality with the CSS path is the check."""
+def q_selector_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E2/E3/E4 selector engines in one Scraper, one extraction pass;
+    element_index is per rule and per group, so the rules do not interfere.
+
+    - ``xpath`` — ``.//p[@class='title']`` scoped to each ``.custom-group``
+      (reference lxml backend ``optional/lxml_scraper.py:184-185``);
+      equality with the CSS path is the check.
+    - ``text`` — text-contains selector, lxml translation
+      ``.//*[contains(text(), s)]`` over the FIRST direct text node
+      (``lxml_scraper.py:186-188``). 'Description ' appears only in
+      ``p.description`` first-text nodes (the synthetic document prose is
+      lowercase), so the match set is closed-form.
+    - ``regex`` — lxml translation ``re:test(text(), pat, 'i')`` over the
+      first direct text node, case-insensitive (``lxml_scraper.py:189-193``).
+      The anchored pattern selects exactly the group-2 titles (present when
+      n_groups >= 2)."""
     app = Scraper()
 
     @app.group(css=".custom-group")
     @app.select(xpath=".//p[@class='title']")
-    def title(element):
-        return {"title": element.text_content()}
-
-    ext = _extract_once(spark, sf_dir, app)
-    return ext.filter(F.col("kind") == "data").select(
-        "page_url",
-        F.col("group_index").cast("long").alias("group_index"),
-        F.col("data").getItem("title").alias("title"),
-    )
-
-
-ORACLE_XPATH_EXTRACT = LAYOUT_CTE + """
-SELECT url AS page_url,
-       (k - 1) AS group_index,
-       'Title ' || doc_id || '-' || k AS title
-FROM (SELECT *, unnest(generate_series(1, n_groups)) AS k FROM layout)
-"""
-
-
-def q_text_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3: text-contains selector — lxml translation
-    ``.//*[contains(text(), s)]`` over the FIRST direct text node
-    (``lxml_scraper.py:186-188``). 'Description ' appears only in
-    ``p.description`` first-text nodes (the synthetic document prose is
-    lowercase), so the match set is closed-form."""
-    app = Scraper()
+    def xpath(element):
+        return {"t": "xpath", "v": element.text_content()}
 
     @app.select(text="Description ")
-    def d(element):
-        return {"d": element.text_content()}
-
-    ext = _extract_once(spark, sf_dir, app)
-    return ext.filter(F.col("kind") == "data").select(
-        "page_url",
-        F.col("element_index").cast("long").alias("element_index"),
-        F.col("data").getItem("d").alias("d"),
-    )
-
-
-ORACLE_TEXT_SELECT = LAYOUT_CTE + """
-SELECT url AS page_url,
-       CASE WHEN k = 1 THEN 0 ELSE 1 END AS element_index,
-       'Description ' || doc_id || '-' || k AS d
-FROM (SELECT *, unnest([1, 3]) AS k FROM layout)
-WHERE k <= n_groups
-"""
-
-
-def q_regex_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4: regex selector — lxml translation ``re:test(text(), pat, 'i')``
-    over the first direct text node, case-insensitive
-    (``lxml_scraper.py:189-193``). Anchored pattern selects exactly the
-    group-2 titles (present when n_groups >= 2)."""
-    app = Scraper()
+    def text(element):
+        return {"t": "text", "v": element.text_content()}
 
     @app.select(regex=r"^Title \d+-2$")
-    def t2(element):
-        return {"t2": element.text_content()}
+    def regex(element):
+        return {"t": "regex", "v": element.text_content()}
 
     ext = _extract_once(spark, sf_dir, app)
     return ext.filter(F.col("kind") == "data").select(
         "page_url",
-        F.col("data").getItem("t2").alias("t2"),
+        F.col("data").getItem("t").alias("t"),
+        F.col("group_index").cast("long").alias("group_index"),
+        F.col("element_index").cast("long").alias("element_index"),
+        F.col("data").getItem("v").alias("v"),
     )
 
 
-ORACLE_REGEX_SELECT = LAYOUT_CTE + """
-SELECT url AS page_url,
-       'Title ' || doc_id || '-2' AS t2
-FROM layout WHERE n_groups >= 2
+ORACLE_SELECTOR_EXTRACT = LAYOUT_CTE + """
+, ks AS (SELECT *, unnest(generate_series(1, n_groups)) AS k FROM layout)
+SELECT url AS page_url, 'xpath' AS t, (k - 1) AS group_index,
+       0 AS element_index, 'Title ' || doc_id || '-' || k AS v
+FROM ks
+UNION ALL
+SELECT url, 'text', 0, CASE WHEN k = 1 THEN 0 ELSE 1 END,
+       'Description ' || doc_id || '-' || k
+FROM ks WHERE k IN (1, 3)
+UNION ALL
+SELECT url, 'regex', 0, 0, 'Title ' || doc_id || '-2' FROM layout WHERE n_groups >= 2
 """
-
 
 
 def q_flatten_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1013,44 +968,12 @@ SELECT * FROM seed_rows UNION ALL SELECT * FROM items
 
 
 def q_sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 JSON sink round-trip (``storage.py:8-30``): flatten → dispatch_save
-    (with extension override S10, ``base.py:626-627``: format='csv' but
-    .json output wins) → parse the file back. Single-file sinks are
-    driver-side by design (reference writes one file; the distributed path
-    is save_distributed)."""
+    """S7 JSON and S9 YAML sink round-trips (``storage.py:8-30``, ``:52-67``):
+    one flatten → dispatch_save per format → parse each file back. The
+    requested format is 'csv' both times: the output extension wins (S10,
+    ``base.py:626-627``). Single-file sinks are driver-side by design
+    (reference writes one file; the distributed path is save_distributed)."""
     import json as _json
-    import os
-    import tempfile
-
-    from .sinks import dispatch_save
-
-    ext = _extract_once(spark, sf_dir, _extraction_scraper())
-    flat = flatten(ext, ordered=True)
-    with tempfile.TemporaryDirectory() as td:
-        out = os.path.join(td, "out.json")
-        dispatch_save(flat, format="csv", output=out)  # .json extension wins
-        with open(out) as f:
-            rows = _json.load(f)
-    data = [
-        (r["_page_url"], int(r["_group_index"]), r.get("title"), r.get("item_href"))
-        for r in rows
-    ]
-    return _local_relation(
-        spark, data,
-        "page_url string, group_index long, title string, item_href string",
-    )
-
-
-ORACLE_SINK_ROUNDTRIP = LAYOUT_CTE + """
-SELECT url AS page_url, (k - 1) AS group_index,
-       'Title ' || doc_id || '-' || k AS title,
-       'item-' || doc_id || '-' || k || '.html' AS item_href
-FROM (SELECT *, unnest(generate_series(1, n_groups)) AS k FROM layout)
-"""
-
-
-def q_sink_yaml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9 YAML sink round-trip (``storage.py:52-67``)."""
     import os
     import tempfile
 
@@ -1059,20 +982,32 @@ def q_sink_yaml(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sinks import dispatch_save
 
     ext = _extract_once(spark, sf_dir, _extraction_scraper())
-    flat = flatten(ext, ordered=True)
+    flat = flatten(ext, ordered=True).cache()
+    data = []
     with tempfile.TemporaryDirectory() as td:
-        out = os.path.join(td, "out.yml")
-        dispatch_save(flat, format="yaml", output=out)
-        with open(out) as f:
-            rows = yaml.safe_load(f)
-    data = [
-        (r["_page_url"], int(r["_group_index"]), r.get("title"), r.get("item_href"))
-        for r in rows
-    ]
+        for fmt, load in (("json", _json.load), ("yml", yaml.safe_load)):
+            out = os.path.join(td, f"out.{fmt}")
+            dispatch_save(flat, format="csv", output=out)
+            with open(out) as f:
+                data += [
+                    (fmt, r["_page_url"], int(r["_group_index"]),
+                     r.get("title"), r.get("item_href"))
+                    for r in load(f)
+                ]
+    flat.unpersist()
     return _local_relation(
         spark, data,
-        "page_url string, group_index long, title string, item_href string",
+        "format string, page_url string, group_index long, title string, item_href string",
     )
+
+
+ORACLE_SINK_ROUNDTRIP = LAYOUT_CTE + """
+SELECT format, url AS page_url, (k - 1) AS group_index,
+       'Title ' || doc_id || '-' || k AS title,
+       'item-' || doc_id || '-' || k || '.html' AS item_href
+FROM (SELECT *, unnest(generate_series(1, n_groups)) AS k FROM layout),
+     (VALUES ('json'), ('yml')) AS f(format)
+"""
 
 
 def q_sink_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1117,39 +1052,6 @@ SELECT * FROM (VALUES
   ('nope', '', 'N', 'nope', 'KeyError'),
   ('custom', '', 'Y', 'custom', 'KeyError')
 ) AS t(fmt, output, per_page, resolved_format, handler)
-"""
-
-
-def q_save_per_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S11 save-per-page (``base.py:125-139``): per-round micro-batches are
-    disjoint and union to the full output — one flattened-row count per
-    crawl round (round = BFS depth on this corpus)."""
-    app = _extraction_scraper()
-    pages = pages_df(spark, sf_dir).select("url", "html")
-    job = CrawlJob(
-        spark, app, pages, robots=robots_df(spark),
-        config=CrawlConfig(follow_urls=True, max_rounds=40, round_seconds=3600),
-    )
-    res = job.run(seeds())
-    return (
-        res.results
-        .select("round", "page_url", "page_number", "group_index", "group_id", "element_index")
-        .distinct()
-        .groupBy("round")
-        .agg(F.count("*").alias("n_rows"))
-        .select(F.col("round").cast("long").alias("round"), F.col("n_rows").cast("long").alias("n_rows"))
-    )
-
-
-ORACLE_SAVE_PER_PAGE = LAYOUT_CTE + """
-SELECT CAST(floor(log2(local + 1)) AS BIGINT) AS round, sum(n_groups)::BIGINT AS n_rows
-FROM layout
-WHERE NOT (
-  host_id % 4 = 0 AND host_id % 5 != 4
-  AND floor(log2(local + 1)) >= 3
-  AND floor((local + 1) / pow(2, floor(log2(local + 1)) - 3)) = 8
-)
-GROUP BY 1
 """
 
 
@@ -1410,8 +1312,51 @@ def _oracle_minhash(k: int = 8, bands: int = 2) -> str:
     )
 
 
-def _oracle_lsh_jaccard(k: int = 8, bands: int = 2, threshold: float = 0.8) -> str:
-    """LSH candidates → exact Jaccard verify, all in one SQL chain."""
+def q_dedup_minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION near-dup pipeline end-to-end: banded MinHash-LSH
+    proposes candidate pairs, exact n-gram Jaccard verifies ONLY those
+    pairs (shingles exploded for candidate docs alone — no corpus-wide
+    shingle join), and transitive_representatives collapses the
+    verified-pair graph to one keep_doc_id per component — chained
+    near-dups resolve to ONE representative, unlike the one-hop keep-min
+    of ``dedup_embedding``/``dedup_exact``. Output, tagged by ``t``: each
+    verified pair (doc_a, doc_b, inter, jaccard) as 'pair', and each
+    document of a verified pair (doc_a) with its keep_doc_id as 'doc'.
+
+    100 TB shape: LSH bucket join (no all-pairs) → candidate-bounded
+    shingle join → O(log n) large-star/small-star BSP closure; no stage
+    materializes more than the candidate set."""
+    from .textops.dedup import transitive_representatives
+
+    d = _docs_with_copies(spark, sf_dir, modulus=5)
+    cand = minhash_lsh_pairs(d, k=8, bands=2)
+    verified = ngram_jaccard_pairs(d, threshold=0.8, candidates=cand).localCheckpoint()
+    keep = transitive_representatives(verified.select("doc_a", "doc_b"))
+    null = F.lit(None)
+    return _tagged("t", {
+        "pair": verified.select(
+            F.col("doc_a").cast("long").alias("doc_a"),
+            F.col("doc_b").cast("long").alias("doc_b"),
+            F.col("inter").cast("long").alias("inter"),
+            F.col("jaccard").cast("double").alias("jaccard"),
+            null.cast("long").alias("keep_doc_id"),
+        ),
+        "doc": keep.select(
+            F.col("doc_id").cast("long").alias("doc_a"),
+            null.cast("long").alias("doc_b"),
+            null.cast("long").alias("inter"),
+            null.cast("double").alias("jaccard"),
+            F.col("keep_doc_id").cast("long").alias("keep_doc_id"),
+        ),
+    })
+
+
+def _oracle_minhash_cc(k: int = 8, bands: int = 2, threshold: float = 0.8) -> str:
+    """LSH candidates → exact Jaccard verify → exact connected components,
+    all in one SQL chain. keep_doc_id(doc) = min(id reachable from doc over
+    symmetric verified edges), by a recursive reachability CTE whose UNION
+    (distinct) semantics bound the recursion by the pair count, so it
+    terminates on any cyclic component."""
     return _minhash_ctes(k, bands, modulus=5) + f"""
 , cand AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1425,30 +1370,28 @@ inter AS (
   JOIN exsh a ON a.doc_id = doc_a
   JOIN exsh b ON b.doc_id = doc_b AND b.s = a.s
   GROUP BY 1, 2
+), verified AS (
+  SELECT doc_a, doc_b, inter,
+         round(inter / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard
+  FROM inter
+  JOIN sizes sa ON sa.doc_id = doc_a
+  JOIN sizes sb ON sb.doc_id = doc_b
+  WHERE round(inter / (sa.n_sh + sb.n_sh - inter), 6) >= {threshold}
+), edges AS (
+  SELECT doc_a AS a, doc_b AS b FROM verified
+  UNION ALL SELECT doc_b, doc_a FROM verified
+), reps AS (
+  WITH RECURSIVE reach(doc_id, reached) AS (
+    SELECT DISTINCT a, a FROM edges
+    UNION
+    SELECT r.doc_id, e.b FROM reach r JOIN edges e ON e.a = r.reached
+  )
+  SELECT doc_id, min(reached)::BIGINT AS keep_doc_id FROM reach GROUP BY doc_id
 )
-SELECT doc_a, doc_b, inter,
-       round(inter / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(inter / (sa.n_sh + sb.n_sh - inter), 6) >= {threshold}
+SELECT 'pair' AS t, doc_a, doc_b, inter, jaccard, NULL::BIGINT AS keep_doc_id FROM verified
+UNION ALL
+SELECT 'doc', doc_id, NULL, NULL, NULL, keep_doc_id FROM reps
 """
-
-
-def q_dedup_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The chained near-dup pipeline at its 100 TB shape: banded MinHash-LSH
-    proposes candidate pairs, exact n-gram Jaccard verifies ONLY those pairs
-    (shingles exploded for candidate docs alone — no corpus-wide
-    shingle join)."""
-    d = _docs_with_copies(spark, sf_dir, modulus=5)
-    cand = minhash_lsh_pairs(d, k=8, bands=2)
-    verified = ngram_jaccard_pairs(d, threshold=0.8, candidates=cand)
-    return verified.select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-        F.col("inter").cast("long").alias("inter"),
-        "jaccard",
-    )
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,10 +1453,25 @@ WHERE round(inter / (sa.n_sh + sb.n_sh - inter), 6) >= 0.2
 """
 
 
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-5 cosine neighbours of the vectors vec_id < 10 by three methods
+    with one output schema (textops/similarity.py), tagged by ``method``:
+
+    - ``exact`` — cosine_topk, the brute-force O(Q·N) baseline;
+    - ``lsh`` — lsh_bucketed_topk, 4 sign-LSH planes × 8 tables: only
+      bucket-sharing pairs are scored;
+    - ``ivf`` — ivf_topk, the cell-partitioned scale path: deterministic
+      first-16 centroids, map-side cell assignment, 4-probe query join."""
+    from .textops.similarity import ivf_topk
+
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk(emb, queries, k=5).select(
+    return _tagged("method", {
+        "exact": cosine_topk(emb, queries, k=5),
+        "lsh": lsh_bucketed_topk(emb, queries, k=5, n_planes=4),
+        "ivf": ivf_topk(emb, queries, k=5, n_cells=16, n_probe=4),
+    }).select(
+        "method",
         F.col("query_id").cast("long"),
         F.col("neighbor_id").cast("long"),
         "cosine",
@@ -1521,22 +1479,93 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ANN_COSINE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10),
-b AS (SELECT vec_id AS neighbor_id, embedding AS vec FROM embeddings),
+def _oracle_cosine(a: str, b: str, dim: int = 64) -> str:
+    """Unrounded cosine of two embedding lists: float64 dot product over
+    both L2 norms (the twin of textops.similarity.with_cosine)."""
+    return (
+        f"list_sum(list_transform(generate_series(1, {dim}),"
+        f" i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
+        f" / (sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
+        f" * sqrt(list_sum(list_transform({b}, x -> x::DOUBLE * x::DOUBLE))))"
+    )
+
+
+def _oracle_lsh_buckets(n_planes: int, n_tables: int, dim: int = 64) -> str:
+    """(vec_id, tbl, bucket) of every row of CTE ``e`` in ``n_tables``
+    sign-LSH tables. The hyperplanes are deterministic portable-hash math
+    (sign = md5('lsh{t}:{p}:{i}')[:8] % 2 * 2 - 1, the Python twin of
+    textops.portable_hash32), so the sign matrix is computed here — apart
+    from the engine's own — and inlined as literal arrays; DuckDB then
+    reproduces the buckets exactly."""
+    import hashlib
+
+    def sign(t: int, p: int, i: int) -> int:
+        h = hashlib.md5(f"lsh{t}:{p}:{i}".encode()).hexdigest()[:8]
+        return (int(h, 16) % 2) * 2 - 1
+
+    def bucket_expr(t: int) -> str:
+        parts = []
+        for p in range(n_planes):
+            signs = "[" + ", ".join(str(sign(t, p, i)) for i in range(dim)) + "]"
+            parts.append(
+                f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}),"
+                f" i -> v[i]::DOUBLE * ({signs})[i])) > 0 THEN {2 ** p} ELSE 0 END)"
+            )
+        return " + ".join(parts)
+
+    return " UNION ALL ".join(
+        f"SELECT vec_id, {t} AS tbl, ({bucket_expr(t)}) AS bucket FROM e"
+        for t in range(n_tables)
+    )
+
+
+def _oracle_ann_topk(
+    k: int = 5, n_planes: int = 4, n_tables: int = 8, n_cells: int = 16,
+    n_probe: int = 4, dim: int = 64,
+) -> str:
+    """Each method builds its candidate (query_id, neighbor_id) set — every
+    pair (exact), pairs sharing a bucket in any LSH table (lsh), pairs in
+    one of the query's n_probe nearest cells (ivf) — then all share one
+    cosine and one rank tail. IVF centroids are data rows
+    (vec_id < n_cells), so DuckDB recomputes assignment and probing
+    exactly; ties break by cell id in both engines (Spark:
+    array_position → first max / struct sort)."""
+    return f"""
+WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+bb AS ({_oracle_lsh_buckets(n_planes, n_tables, dim)}),
+cells AS (
+  SELECT e.vec_id, cent.vec_id AS cell,
+    row_number() OVER (
+      PARTITION BY e.vec_id
+      ORDER BY list_sum(list_transform(generate_series(1, {dim}),
+                        i -> e.v[i]::DOUBLE * cent.v[i]::DOUBLE))
+               / sqrt(list_sum(list_transform(cent.v, x -> x::DOUBLE * x::DOUBLE))) DESC,
+               cent.vec_id) AS rn
+  FROM e CROSS JOIN e cent WHERE cent.vec_id < {n_cells}
+),
+cand AS (
+  SELECT 'exact' AS method, q.vec_id AS query_id, b.vec_id AS neighbor_id
+  FROM e q CROSS JOIN e b WHERE q.vec_id < 10
+  UNION ALL
+  SELECT DISTINCT 'lsh', q.vec_id, b.vec_id
+  FROM bb b JOIN bb q USING (tbl, bucket) WHERE q.vec_id < 10
+  UNION ALL
+  SELECT 'ivf', p.vec_id, a.vec_id
+  FROM cells p JOIN cells a USING (cell)
+  WHERE p.vec_id < 10 AND p.rn <= {n_probe} AND a.rn = 1
+),
 pairs AS (
-  SELECT query_id, neighbor_id,
-    list_sum(list_transform(generate_series(1, len(qvec)),
-             i -> qvec[i]::DOUBLE * vec[i]::DOUBLE))
-    / (sqrt(list_sum(list_transform(qvec, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(vec, x -> x::DOUBLE * x::DOUBLE)))) AS cos
-  FROM b, q WHERE neighbor_id != query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 6) DESC, neighbor_id) AS rank
-  FROM pairs
+  SELECT method, query_id, neighbor_id,
+         round({_oracle_cosine("qe.v", "be.v", dim)}, 6) AS cosine
+  FROM cand
+  JOIN e qe ON qe.vec_id = query_id
+  JOIN e be ON be.vec_id = neighbor_id
+  WHERE neighbor_id != query_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
+SELECT method, query_id, neighbor_id, cosine, rank FROM (
+  SELECT *, row_number() OVER (PARTITION BY method, query_id
+                               ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM pairs) WHERE rank <= {k}
 """
 
 
@@ -1822,87 +1851,10 @@ FROM documents WHERE doc_id < 1000 AND doc_id % 3 = 2
 """
 
 
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 10)
-    return lsh_bucketed_topk(emb, queries, k=5, n_planes=4).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("neighbor_id").cast("long").alias("neighbor_id"),
-        "cosine",
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse-quantizer ANN (the cell-partitioned scale path next to
-    sign-LSH; textops.similarity.ivf_topk): deterministic first-16
-    centroids, map-side cell assignment, 4-probe query join."""
-    from .textops.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, queries, k=5, n_cells=16, n_probe=4).select(
-        F.col("query_id").cast("long"),
-        F.col("neighbor_id").cast("long"),
-        "cosine",
-        F.col("rank").cast("long"),
-    )
-
-
-def _oracle_ann_ivf(
-    k: int = 5, n_cells: int = 16, n_probe: int = 4, dim: int = 64
-) -> str:
-    """IVF oracle: centroids are data rows (vec_id < n_cells), so DuckDB
-    recomputes assignment/probing/scoring exactly — ties broken by cell id
-    in both engines (Spark: array_position→first max / struct sort)."""
-    return f"""
-WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {n_cells}),
-scores AS (
-  SELECT e.vec_id, cent.cid,
-    list_sum(list_transform(generate_series(1, {dim}),
-             i -> e.v[i]::DOUBLE * cent.cv[i]::DOUBLE))
-    / sqrt(list_sum(list_transform(cent.cv, x -> x::DOUBLE * x::DOUBLE))) AS s
-  FROM e CROSS JOIN cent
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-    FROM scores) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-    FROM scores WHERE vec_id < 10) WHERE rn <= {n_probe}
-),
-cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id
-  FROM probes p JOIN assign a USING (cell)
-  WHERE a.vec_id != p.query_id
-),
-pairs AS (
-  SELECT query_id, neighbor_id, round(
-    list_sum(list_transform(generate_series(1, {dim}),
-             i -> qe.v[i]::DOUBLE * be.v[i]::DOUBLE))
-    / (sqrt(list_sum(list_transform(qe.v, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(be.v, x -> x::DOUBLE * x::DOUBLE)))), 6) AS cosine
-  FROM cand
-  JOIN e qe ON qe.vec_id = query_id
-  JOIN e be ON be.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM pairs) WHERE rank <= {k}
-"""
-
-
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup collapse: sign-LSH candidate pairs →
     cosine ≥ τ → keep-min representative per duplicate (the dedup twin of
-    ann_lsh_topk; see textops.similarity.embedding_near_dup). τ=0.42 /
+    ann_topk's lsh method; see textops.similarity.embedding_near_dup). τ=0.42 /
     6 planes × 8 tables sized to the synthetic embeddings' near-random
     cosine spread (max pairwise ≈ 0.51)."""
     from .textops.similarity import embedding_near_dup
@@ -1918,41 +1870,17 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_dedup_embedding(
     threshold: float = 0.42, n_planes: int = 6, n_tables: int = 8, dim: int = 64
 ) -> str:
-    """Same precomputed sign-matrix trick as :func:`_oracle_ann_lsh`, but a
-    self-join + keep-min collapse instead of per-query top-k."""
-    import hashlib
-
-    def sign(t: int, p: int, i: int) -> int:
-        h = hashlib.md5(f"lsh{t}:{p}:{i}".encode()).hexdigest()[:8]
-        return (int(h, 16) % 2) * 2 - 1
-
-    def bucket_expr(t: int) -> str:
-        parts = []
-        for p in range(n_planes):
-            signs = "[" + ", ".join(str(sign(t, p, i)) for i in range(dim)) + "]"
-            parts.append(
-                f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}),"
-                f" i -> v[i]::DOUBLE * ({signs})[i])) > 0 THEN {2 ** p} ELSE 0 END)"
-            )
-        return " + ".join(parts)
-
-    bb = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, ({bucket_expr(t)}) AS bucket FROM e"
-        for t in range(n_tables)
-    )
+    """The sign-LSH tables of ``ann_topk``'s oracle, but a self-join +
+    keep-min collapse instead of per-query top-k."""
     return f"""
 WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-bb AS ({bb}),
+bb AS ({_oracle_lsh_buckets(n_planes, n_tables, dim)}),
 cand AS (
   SELECT DISTINCT a.vec_id AS keep_cand, b.vec_id AS dup_id
   FROM bb a JOIN bb b USING (tbl, bucket)
   WHERE a.vec_id < b.vec_id
 ), pairs AS (
-  SELECT keep_cand, dup_id, round(
-    list_sum(list_transform(generate_series(1, {dim}),
-             i -> ae.v[i]::DOUBLE * be.v[i]::DOUBLE))
-    / (sqrt(list_sum(list_transform(ae.v, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(be.v, x -> x::DOUBLE * x::DOUBLE)))), 6) AS cos
+  SELECT keep_cand, dup_id, round({_oracle_cosine("ae.v", "be.v", dim)}, 6) AS cos
   FROM cand
   JOIN e ae ON ae.vec_id = keep_cand
   JOIN e be ON be.vec_id = dup_id
@@ -1961,65 +1889,6 @@ SELECT dup_id AS vec_id, min(keep_cand) AS keep_vec_id,
        arg_min(cos, keep_cand) AS cosine
 FROM pairs WHERE cos >= {threshold}
 GROUP BY dup_id
-"""
-
-
-def _oracle_ann_lsh(
-    k: int = 5, n_planes: int = 4, n_tables: int = 8, dim: int = 64
-) -> str:
-    """sign-LSH top-k oracle. The hyperplanes are deterministic portable-hash
-    math (sign = md5('lsh{t}:{p}:{i}')[:8] % 2 * 2 - 1 — the Python twin of
-    textops.portable_hash32), so the sign matrix is precomputed here and
-    inlined as literal arrays; DuckDB then reproduces buckets, candidate
-    pairs, cosines, and ranks exactly."""
-    import hashlib
-
-    def sign(t: int, p: int, i: int) -> int:
-        h = hashlib.md5(f"lsh{t}:{p}:{i}".encode()).hexdigest()[:8]
-        return (int(h, 16) % 2) * 2 - 1
-
-    def bucket_expr(t: int) -> str:
-        parts = []
-        for p in range(n_planes):
-            signs = "[" + ", ".join(str(sign(t, p, i)) for i in range(dim)) + "]"
-            parts.append(
-                f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}),"
-                f" i -> v[i]::DOUBLE * ({signs})[i])) > 0 THEN {2 ** p} ELSE 0 END)"
-            )
-        return " + ".join(parts)
-
-    qb = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, ({bucket_expr(t)}) AS bucket FROM e WHERE vec_id < 10"
-        for t in range(n_tables)
-    )
-    bb = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, ({bucket_expr(t)}) AS bucket FROM e"
-        for t in range(n_tables)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-qb AS ({qb}),
-bb AS ({bb}),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, b.vec_id AS neighbor_id
-  FROM bb b JOIN qb q USING (tbl, bucket)
-  WHERE b.vec_id != q.vec_id
-), pairs AS (
-  SELECT query_id, neighbor_id,
-    list_sum(list_transform(generate_series(1, {dim}),
-             i -> qe.v[i]::DOUBLE * be.v[i]::DOUBLE))
-    / (sqrt(list_sum(list_transform(qe.v, x -> x::DOUBLE * x::DOUBLE)))
-       * sqrt(list_sum(list_transform(be.v, x -> x::DOUBLE * x::DOUBLE)))) AS cos
-  FROM cand
-  JOIN e qe ON qe.vec_id = query_id
-  JOIN e be ON be.vec_id = neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY round(cos, 6) DESC, neighbor_id) AS rank
-  FROM pairs
-)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
 """
 
 
@@ -2250,57 +2119,6 @@ ORACLE_DEDUP_CC = """
 SELECT doc_id::BIGINT AS doc_id, ((doc_id // 10) * 10)::BIGINT AS keep_doc_id
 FROM documents WHERE doc_id < 500
 """
-
-
-def q_dedup_minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION near-dup pipeline end-to-end (VERDICT r4 #4): banded
-    MinHash-LSH proposes candidate pairs on the documents corpus, exact
-    n-gram Jaccard verifies them, and transitive_representatives collapses
-    the verified-pair graph to one keep_doc_id per involved document —
-    chained near-dups resolve to ONE representative, unlike the one-hop
-    keep-min of ``dedup_embedding``/``dedup_exact``.
-
-    100 TB shape: LSH bucket join (no all-pairs) → candidate-bounded
-    shingle join → O(log n) large-star/small-star BSP closure; no stage
-    materializes more than the candidate set."""
-    from .textops.dedup import transitive_representatives
-
-    d = _docs_with_copies(spark, sf_dir, modulus=5)
-    cand = minhash_lsh_pairs(d, k=8, bands=2)
-    verified = ngram_jaccard_pairs(d, threshold=0.8, candidates=cand)
-    return transitive_representatives(verified.select("doc_a", "doc_b")).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("keep_doc_id").cast("long").alias("keep_doc_id"),
-    )
-
-
-def _oracle_minhash_cc(k: int = 8, bands: int = 2, threshold: float = 0.8) -> str:
-    """Verified LSH pairs (same CTE chain as dedup_lsh_jaccard) → exact
-    connected components in DuckDB via a recursive reachability CTE:
-    keep_doc_id(doc) = min(id reachable from doc over symmetric verified
-    edges). UNION (distinct) semantics bound the recursion by the pair
-    count, so it terminates on any cyclic component."""
-    verified = _oracle_lsh_jaccard(k, bands, threshold)
-    # the CTE chain must be RECURSIVE for the reachability CTE appended below
-    head, body = verified.split("WITH ", 1)
-    return head + "WITH RECURSIVE " + body.replace(
-        "SELECT doc_a, doc_b, inter,",
-        "-- verified pairs (identical to dedup_lsh_jaccard's final SELECT)\n"
-        ", verified AS (\nSELECT doc_a, doc_b,", 1,
-    ).replace(
-        f">= {threshold}\n",
-        f">= {threshold}\n"
-        "), edges AS (\n"
-        "  SELECT doc_a AS a, doc_b AS b FROM verified\n"
-        "  UNION ALL SELECT doc_b, doc_a FROM verified\n"
-        "), reach(doc_id, reached) AS (\n"
-        "  SELECT DISTINCT a, a FROM edges\n"
-        "  UNION\n"
-        "  SELECT r.doc_id, e.b FROM reach r JOIN edges e ON e.a = r.reached\n"
-        ")\n"
-        "SELECT doc_id::BIGINT AS doc_id, min(reached)::BIGINT AS keep_doc_id\n"
-        "FROM reach GROUP BY doc_id\n", 1,
-    )
 
 
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2627,15 +2445,11 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         # crawl/extract engine
         "extract_flat": q_extract_flat,
         "content_identity": q_content_identity,
-        "content_identity_zlib": q_content_identity_zlib,
         "link_graph": q_link_graph,
         "crawl_bfs": q_crawl_bfs,
         "politeness_budget": q_politeness_budget,
-        "priority_budget": q_priority_budget,
         "robots_gate": q_robots_gate,
-        "xpath_extract": q_xpath_extract,
-        "text_select": q_text_select,
-        "regex_select": q_regex_select,
+        "selector_extract": q_selector_extract,
         "flatten_merge": q_flatten_merge,
         "pivot_extract": q_pivot_extract,
         "frontier_dedupe": q_frontier_dedupe,
@@ -2647,9 +2461,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         "start_requests": q_start_requests,
         "follow_url": q_follow_url,
         "sink_json": q_sink_json,
-        "sink_yaml": q_sink_yaml,
         "sink_dispatch": q_sink_dispatch,
-        "save_per_page": q_save_per_page,
         "output_order": q_output_order,
         "adblock_gate": q_adblock_gate,
         "setup_rule": q_setup_rule,
@@ -2657,10 +2469,10 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_lsh": q_dedup_minhash,
         "minhash_signature": q_minhash_signature,
-        "dedup_lsh_jaccard": q_dedup_lsh_jaccard,
+        "dedup_minhash_cc": q_dedup_minhash_cc,
         "dedup_simhash": q_dedup_simhash,
         "ngram_jaccard": q_ngram_jaccard,
-        "ann_cosine_topk": q_ann_cosine_topk,
+        "ann_topk": q_ann_topk,
         "token_count": q_token_count,
         "quality_score": q_quality_score,
         "doc_fingerprint": q_fingerprint,
@@ -2670,16 +2482,13 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_decode": q_multimodal_decode,
         "stream_event_windows": q_stream_event_windows,
         "frame_sample": q_frame_sample,
-        "ann_lsh_topk": q_ann_lsh,
         "dedup_embedding": q_dedup_embedding,
-        "ann_ivf_topk": q_ann_ivf,
         "warc_latest": q_warc_latest,
         "quality_gopher": q_quality_gopher,
         "pii_scrub": q_pii_scrub,
         "pagerank": q_pagerank,
         "url_canonical": q_url_canonical,
         "dedup_cc": q_dedup_cc,
-        "dedup_minhash_cc": q_dedup_minhash_cc,
         "dedup_span": q_dedup_span,
         "topk_ngrams": q_top_ngrams,
         "bm25_search": q_bm25_search,
@@ -2693,15 +2502,11 @@ def oracle_sql() -> Dict[str, str]:
     return {
         "extract_flat": ORACLE_EXTRACT_FLAT,
         "content_identity": ORACLE_CONTENT_IDENTITY,
-        "content_identity_zlib": ORACLE_CONTENT_IDENTITY,
         "link_graph": ORACLE_LINK_GRAPH,
         "crawl_bfs": ORACLE_CRAWL_BFS,
         "politeness_budget": ORACLE_POLITENESS,
-        "priority_budget": ORACLE_PRIORITY_BUDGET,
         "robots_gate": ORACLE_ROBOTS_GATE,
-        "xpath_extract": ORACLE_XPATH_EXTRACT,
-        "text_select": ORACLE_TEXT_SELECT,
-        "regex_select": ORACLE_REGEX_SELECT,
+        "selector_extract": ORACLE_SELECTOR_EXTRACT,
         "flatten_merge": ORACLE_FLATTEN_MERGE,
         "pivot_extract": ORACLE_PIVOT_EXTRACT,
         "frontier_dedupe": ORACLE_FRONTIER_DEDUPE,
@@ -2712,19 +2517,17 @@ def oracle_sql() -> Dict[str, str]:
         "start_requests": ORACLE_START_REQUESTS,
         "follow_url": ORACLE_FOLLOW_URL,
         "sink_json": ORACLE_SINK_ROUNDTRIP,
-        "sink_yaml": ORACLE_SINK_ROUNDTRIP,
         "sink_dispatch": ORACLE_SINK_DISPATCH,
-        "save_per_page": ORACLE_SAVE_PER_PAGE,
         "output_order": ORACLE_OUTPUT_ORDER,
         "adblock_gate": ORACLE_ADBLOCK,
         "setup_rule": ORACLE_SETUP_RULE,
         "dedup_exact": ORACLE_DEDUP_EXACT,
         "dedup_minhash_lsh": _oracle_minhash(),
         "minhash_signature": _oracle_minhash_signature(),
-        "dedup_lsh_jaccard": _oracle_lsh_jaccard(),
+        "dedup_minhash_cc": _oracle_minhash_cc(),
         "dedup_simhash": _oracle_simhash(),
         "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-        "ann_cosine_topk": ORACLE_ANN_COSINE,
+        "ann_topk": _oracle_ann_topk(),
         "token_count": ORACLE_TOKEN_COUNT,
         "quality_score": ORACLE_QUALITY,
         "doc_fingerprint": ORACLE_FINGERPRINT,
@@ -2734,16 +2537,13 @@ def oracle_sql() -> Dict[str, str]:
         "multimodal_decode": _oracle_multimodal(),
         "stream_event_windows": ORACLE_STREAM_WINDOWS,
         "frame_sample": ORACLE_FRAME_SAMPLE,
-        "ann_lsh_topk": _oracle_ann_lsh(),
         "dedup_embedding": _oracle_dedup_embedding(),
-        "ann_ivf_topk": _oracle_ann_ivf(),
         "warc_latest": ORACLE_WARC_LATEST,
         "quality_gopher": ORACLE_QUALITY_GOPHER,
         "pii_scrub": _pii_oracle(),
         "pagerank": _oracle_pagerank(),
         "url_canonical": ORACLE_URL_CANONICAL,
         "dedup_cc": ORACLE_DEDUP_CC,
-        "dedup_minhash_cc": _oracle_minhash_cc(),
         "dedup_span": ORACLE_DEDUP_SPAN,
         "topk_ngrams": ORACLE_TOP_NGRAMS,
         "bm25_search": _oracle_bm25(),

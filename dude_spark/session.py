@@ -176,6 +176,18 @@ def _conf_override(spark: SparkSession, pairs: dict):
             _CONF_OVERRIDE_LOCK.release()
 
 
+def _schemas(schema):
+    """(StructType, Arrow schema) of a DDL string or StructType: the one
+    DDL → Arrow conversion behind driver-built frames and driver-side
+    parquet writes, so both carry the column types Spark gives the DDL."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    return schema, to_arrow_schema(schema)
+
+
 def _local_relation(spark: SparkSession, data, schema) -> DataFrame:
     """True LocalRelation (``LocalTableScan``) of ``data`` — a pandas frame
     (columns taken by name) or a sequence of row tuples — typed by
@@ -194,12 +206,8 @@ def _local_relation(spark: SparkSession, data, schema) -> DataFrame:
     for ~150 KB page payloads, not 10-column frontier rows; at 128 a
     15k-row frontier would shred into ~120 batches/partitions)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType, _parse_datatype_string
 
-    if not isinstance(schema, StructType):
-        schema = _parse_datatype_string(schema)
-    arrow = to_arrow_schema(schema)
+    schema, arrow = _schemas(schema)
     if not len(data):
         table = arrow.empty_table()
     elif hasattr(data, "columns"):

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -40,6 +39,19 @@ def with_cosine(pairs: DataFrame, a_col: str = "qvec", b_col: str = "vec") -> Da
     return pairs.withColumn("cosine", F.round(cos, 6))
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Rank each query's scored candidates (cosine DESC, ties by
+    neighbor_id) and keep ranks 1..k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     base: DataFrame,
     queries: DataFrame,
@@ -61,15 +73,7 @@ def cosine_topk(
     pairs = b.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = with_cosine(pairs)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(with_cosine(pairs), k)
 
 
 def _plane_signs(seed: str, p: int, dim: int) -> list:
@@ -109,6 +113,25 @@ def signlsh_bucket(vec_col, n_planes: int = 8, dim: int = 64, seed: str = "lsh")
         )
         bucket = bucket + F.when(proj > 0, F.lit(2**p).cast("bigint")).otherwise(F.lit(0))
     return bucket
+
+
+def _lsh_tables(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str,
+    n_planes: int, n_tables: int, dim: int,
+) -> DataFrame:
+    """One (out_id, out_vec, table, bucket) row per vector and sign-LSH
+    table; table t hashes with seed ``lsh{t}``."""
+    buckets = F.array(
+        *[
+            signlsh_bucket(F.col(vec_col), n_planes, dim, seed=f"lsh{t}")
+            for t in range(n_tables)
+        ]
+    )
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.col(vec_col).alias(out_vec),
+        F.posexplode(buckets).alias("table", "bucket"),
+    )
 
 
 def ivf_topk(
@@ -195,15 +218,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "qvec", "neighbor_id", "vec")
     )
-    scored = with_cosine(pairs)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(with_cosine(pairs), k)
 
 
 def embedding_near_dup(
@@ -232,16 +247,8 @@ def embedding_near_dup(
     hold per-bucket work constant. Signatures, join, verification and the
     keep-min agg are all JVM-side column expressions.
     """
-    buckets = F.array(
-        *[
-            signlsh_bucket(F.col(vec_col), n_planes, dim, seed=f"lsh{t}")
-            for t in range(n_tables)
-        ]
-    )
-    bucketed = vecs.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.posexplode(buckets).alias("table", "bucket"),
+    bucketed = _lsh_tables(
+        vecs, id_col, vec_col, "vid", "v", n_planes, n_tables, dim
     )
     a = bucketed.alias("a")
     b = bucketed.alias("b")
@@ -283,34 +290,12 @@ def lsh_bucketed_topk(
     cross join at expected cost L·N·Q/2^p). More tables → higher recall;
     more planes → fewer comparisons.
     """
-
-    def with_buckets(df, idc, vc, out_id, out_vec):
-        buckets = F.array(
-            *[
-                signlsh_bucket(F.col(vc), n_planes, dim, seed=f"lsh{t}")
-                for t in range(n_tables)
-            ]
-        )
-        return df.select(
-            F.col(idc).alias(out_id),
-            F.col(vc).alias(out_vec),
-            F.posexplode(buckets).alias("table", "bucket"),
-        )
-
-    b = with_buckets(base, id_col, vec_col, "neighbor_id", "vec")
-    q = with_buckets(queries, id_col, vec_col, "query_id", "qvec")
+    b = _lsh_tables(base, id_col, vec_col, "neighbor_id", "vec", n_planes, n_tables, dim)
+    q = _lsh_tables(queries, id_col, vec_col, "query_id", "qvec", n_planes, n_tables, dim)
     pairs = (
         b.join(F.broadcast(q), on=["table", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "qvec", "neighbor_id", "vec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = with_cosine(pairs)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(with_cosine(pairs), k)

@@ -158,10 +158,14 @@ def test_state_dir_hybrid_parity(spark, tmp_path, crawl_result):
     a Spark write job. Trace/results/seen must be byte-identical to memory
     mode AND to the Spark-written durable path (driver_frontier_max=0),
     and every committed round dir — whichever writer produced it — must
-    carry the _SUCCESS marker `last_committed_round` keys on."""
+    carry the _SUCCESS marker `last_committed_round` keys on and read back
+    with the same schema."""
     import os
 
+    import pyarrow.parquet as pq
+
     res_default, pages = crawl_result
+    schemas = {}
     base_trace = [
         (r["url"], r["depth"], r["seq"])
         for r in res_default.trace.orderBy("seq").collect()
@@ -198,6 +202,20 @@ def test_state_dir_hybrid_parity(spark, tmp_path, crawl_result):
         for m in res.metrics:
             with open(os.path.join(state, "rounds", f"round={m.round}.json")) as f:
                 assert json.load(f)["path"] == m.path
+        # round 0: pyarrow-written at cap 65536, Spark-written at cap 0
+        assert res.metrics[0].path == ("driver" if cap else "distributed")
+        r0 = os.path.join(fdir, "round=0")
+        schemas[cap] = (
+            spark.read.parquet(r0).schema,
+            [
+                [(f.name, f.type) for f in pq.read_schema(os.path.join(r0, p))]
+                for p in sorted(os.listdir(r0)) if p.endswith(".parquet")
+            ],
+        )
+    driver_spark, driver_arrow = schemas[65536]
+    dist_spark, dist_arrow = schemas[0]
+    assert driver_spark == dist_spark
+    assert all(a == driver_arrow[0] for a in driver_arrow + dist_arrow)
 
 
 def test_resume_across_frontier_paths(spark, tmp_path):

@@ -40,6 +40,22 @@ def canon(df, float_dp=9):
     return rows
 
 
+def compare(sdf, odf):
+    """None when the Spark and oracle pandas frames agree on column names,
+    row count and order-insensitive values; otherwise what differs."""
+    cols_s, cols_o = sorted(sdf.columns), sorted(odf.columns)
+    if cols_s != cols_o:
+        return f"COLS MISMATCH: spark={cols_s} oracle={cols_o}"
+    if len(sdf) != len(odf):
+        return f"ROWCOUNT MISMATCH: spark={len(sdf)} oracle={len(odf)}"
+    cs, co = canon(sdf), canon(odf)
+    if cs != co:
+        diffs = [i for i, (a, b) in enumerate(zip(cs, co)) if a != b][:3]
+        detail = "; ".join(f"[{i}] spark={cs[i]} oracle={co[i]}" for i in diffs)
+        return f"VALUES MISMATCH ({len(cs)} rows): {detail[:400]}"
+    return None
+
+
 def main():
     import duckdb
 
@@ -52,14 +68,18 @@ def main():
     # engine silently depending on its own session factory's confs
     # (mapKeyDedupPolicy). The driver's gate runs a plain session; so must
     # this replica. Only master/TZ/memory are set (environment, not
-    # semantics); every query must be correct under default SQL confs.
+    # semantics), sized to the cores this process may use and to the
+    # engine's default driver heap; every query must be correct under
+    # default SQL confs.
     from pyspark.sql import SparkSession
 
+    from dude_spark.session import _default_driver_memory
+
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .appName("compare_oracle")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -93,20 +113,9 @@ def main():
             results[name] = f"ORACLE ERROR: {type(e).__name__}: {str(e)[:200]}"
             continue
         t_oracle = time.time() - t0
-        cols_s, cols_o = sorted(sdf.columns), sorted(odf.columns)
-        if cols_s != cols_o:
-            results[name] = f"COLS MISMATCH: spark={cols_s} oracle={cols_o}"
-            continue
-        if len(sdf) != len(odf):
-            results[name] = f"ROWCOUNT MISMATCH: spark={len(sdf)} oracle={len(odf)}"
-            continue
-        cs, co = canon(sdf), canon(odf)
-        if cs != co:
-            diffs = [i for i, (a, b) in enumerate(zip(cs, co)) if a != b][:3]
-            detail = "; ".join(f"[{i}] spark={cs[i]} oracle={co[i]}" for i in diffs)
-            results[name] = f"VALUES MISMATCH ({len(cs)} rows): {detail[:400]}"
-            continue
-        results[name] = f"OK: {len(sdf)} rows (spark {t_spark:.1f}s, oracle {t_oracle:.1f}s)"
+        results[name] = compare(sdf, odf) or (
+            f"OK: {len(sdf)} rows (spark {t_spark:.1f}s, oracle {t_oracle:.1f}s)"
+        )
 
     print()
     width = max(len(k) for k in results)
