@@ -24,26 +24,16 @@ Semantics are pinned to the reference's lxml backend:
   ``~`` — matched with backtracking, bounded to the context subtree),
   and selector groups (``,`` — split at top level only, so commas inside
   ``:is(...)``/``[...]`` nest correctly). Results in document order.
-- XPath — subset: ``.//name``, ``//name``, ``./name``, ``*``/``node()``
-  wildcards, ``..``, explicit axes (``following-sibling:: preceding-
-  sibling:: parent:: self:: child:: descendant:: ancestor::
-  ancestor-or-self::``), top-level ``|`` union (node-sets merge in
-  document order, deduped), chained steps, predicates applied
+- XPath — subset compiled once per expression by one tokenizer and one
+  recursive-descent parser (grammar above :class:`_XPathParser`):
+  ``.//``/``//``/``./`` paths over ``name``/``*``/``node()``/``..``/
+  ``@attr``/``text()`` node tests and explicit axes (``following-sibling::
+  preceding-sibling:: parent:: self:: child:: descendant:: ancestor::
+  ancestor-or-self:: following:: preceding::``), top-level ``|`` union
+  (node-sets merge in document order, deduped), and predicates applied
   sequentially (positional predicates re-rank per parent after earlier
-  filters, lxml parity) with nestable ``or``/``and``/``not()``/parens
-  over atoms ``contains(@a,'s')``, ``contains(text(),'s')``,
-  ``starts-with(@a|text(),'s')``, ``re:test(text(),pat[,flags])``,
-  ``text()='v'``, ``@a='v'``, ``@a!='v'``, ``[@a]``,
-  ``normalize-space(.|text()|@a)`` under ``=``/``!=``/``contains``/
-  ``starts-with``, ``substring(.|text()|@a, start[, len]) = 'v'``
-  (integer positions), ``name()``/``local-name()`` ``=``/``!=`` a string
-  (HTML: both equal the tag), and numeric expressions over the position
-  context
-  (``position()``, ``last()``, ``count(relpath)``,
-  ``string-length(.|text()|@a|normalize-space(...))``, integers,
-  ``+ - * div mod``, parens, comparisons — XPath 1.0 double semantics,
-  numeric predicate values positional per §2.4); plus trailing
-  ``/@attr`` and ``/text()`` value steps.
+  filters, lxml parity) over boolean, string and numeric expressions
+  (XPath 1.0 doubles; a numeric predicate value is positional, §2.4).
 - TEXT selector ``s`` — lxml translation ``.//*[contains(text(), s)]``
   (``lxml_scraper.py:186-188``): *first direct text node* contains ``s``
   (XPath 1.0 node-set→string takes the first node).
@@ -58,6 +48,8 @@ tests/examples: ``.tag``, ``.attrib``, ``.get(name)``, ``.text``,
 
 from __future__ import annotations
 
+import math
+import operator
 import re
 from functools import lru_cache as _lru_cache
 from html import unescape
@@ -161,8 +153,7 @@ class Element:
     def text_content(self) -> str:
         """All descendant text concatenated in document order (lxml)."""
         out: List[str] = []
-        stack: List[Union[Element, str]] = [self]
-        # iterative DFS preserving order
+
         def walk(node: "Element") -> None:
             for c in node.children:
                 if isinstance(c, str):
@@ -346,6 +337,8 @@ _CSS_TOKEN = re.compile(
     re.VERBOSE,
 )
 
+_PSEUDO_ELEMENT = re.compile(r"::([\w-]+)")
+
 _NTH = re.compile(r"^\s*(?:(?P<a>[+-]?\d*)n\s*(?P<b>[+-]\s*\d+)?|(?P<idx>[+-]?\d+))\s*$")
 
 
@@ -374,13 +367,16 @@ def _parse_nth_pseudo(kind: str, arg: str) -> tuple:
     ``An+B of <selector-list>`` form (index counted among siblings
     matching the list) → ``(kind, a, b, [chain, ...])``.
     """
-    parts = _split_top(arg, "of")
-    if len(parts) == 1:
+    cuts = [
+        i for i, c in _css_top(arg)
+        if arg.startswith("of", i) and arg[i - 1:i].isspace() and arg[i + 2:i + 3].isspace()
+    ]
+    if not cuts:
         return (kind, *_parse_nth(arg))
-    if len(parts) != 2:
+    if len(cuts) != 1:
         raise ValueError(f"unsupported :{kind}-child() argument: {arg!r}")
-    a, b = _parse_nth(parts[0])
-    chains = [_parse_css_chain(p) for p in _split_selector_list(parts[1])]
+    a, b = _parse_nth(arg[: cuts[0]])
+    chains = [_parse_css_chain(p) for p in _split_selector_list(arg[cuts[0] + 2:])]
     return (kind, a, b, chains)
 
 
@@ -596,6 +592,41 @@ def _doc_root(el: Element) -> Element:
     return el
 
 
+def _css_top(s: str, start: int = 0) -> Iterator[Tuple[int, str]]:
+    """``(index, char)`` of each character of ``s[start:]`` outside quotes,
+    ``(...)`` and ``[...]``: an opening bracket is reported before its
+    contents and its closer after them (so a ``:not(...)`` argument ends at
+    the next reported ``)``). Parens nest; an attribute selector runs to
+    its first unquoted ``]``."""
+    depth = 0
+    in_attr = False
+    q: Optional[str] = None
+    for i in range(start, len(s)):
+        c = s[i]
+        if q:
+            if c == q:
+                q = None
+            continue
+        if c in "\"'":
+            q = c
+        elif in_attr:
+            if c == "]":
+                in_attr = False
+                yield i, c
+            continue
+        elif c == "(":
+            depth += 1
+            if depth == 1:
+                yield i, c
+            continue
+        elif c == ")":
+            depth -= 1
+        elif c == "[" and depth == 0:
+            in_attr = True
+        if depth == 0:
+            yield i, c
+
+
 def _split_selector_list(expr: str) -> List[str]:
     """Split a selector list on top-level commas only (commas inside
     ``()``/``[]`` — e.g. ``:is(a, b)`` — belong to the nested selector).
@@ -648,6 +679,17 @@ def _parse_compound(s: str) -> _Compound:
     while pos < len(s):
         m = _CSS_TOKEN.match(s, pos)
         if not m:
+            pe = _PSEUDO_ELEMENT.match(s, pos)
+            if pe:
+                # parsel's ::text / ::attr(name) extract VALUES; selectors
+                # here return elements — the handler reads the value
+                hint = {
+                    "text": ": select the element and read its text in the "
+                    "handler (kernels.text / Element.text_content())",
+                    "attr": ": select the element and read the attribute in "
+                    "the handler (kernels.attr / Element.get(name))",
+                }.get(pe.group(1).lower(), "")
+                raise ValueError(f"unsupported CSS pseudo-element ::{pe.group(1)}{hint}")
             raise ValueError(f"unsupported CSS selector fragment: {s[pos:]!r}")
         next_pos = m.end()
         if m.group("tag"):
@@ -684,9 +726,11 @@ def _parse_compound(s: str) -> _Compound:
             if arg is None and next_pos < len(s) and s[next_pos] == "(":
                 # nested parens (e.g. :not(em:nth-child(2))): the token
                 # regex's [^()]* arg can't span them — rescan balanced
-                end = _balanced_arg(s, next_pos)
-                arg = s[next_pos + 1 : end - 1]
-                next_pos = end
+                end = next((i for i, c in _css_top(s, next_pos) if c == ")"), None)
+                if end is None:
+                    raise ValueError(f"unbalanced parens in {s!r}")
+                arg = s[next_pos + 1 : end]
+                next_pos = end + 1
             if name == "root":
                 comp.root = True
             elif name == "first-child":
@@ -746,50 +790,19 @@ def _parse_css_chain(sel: str) -> List[Tuple[str, _Compound]]:
     combinator is the 'self-or-descendant' scope marker.
     """
     parts: List[Tuple[str, _Compound]] = []
-    buf = ""
-    i = 0
     sel = sel.strip()
     combin = " "
-    while i < len(sel):
-        ch = sel[i]
-        if ch == "[":
-            # quote-aware ']' scan: [title="a]b"] must not cut at the
-            # quoted bracket
-            q: Optional[str] = None
-            j = i + 1
-            while j < len(sel):
-                c = sel[j]
-                if q:
-                    if c == q:
-                        q = None
-                elif c in "\"'":
-                    q = c
-                elif c == "]":
-                    break
-                j += 1
-            if j >= len(sel):
-                raise ValueError(f"unbalanced '[' in CSS selector: {sel!r}")
-            buf += sel[i : j + 1]
-            i = j + 1
-        elif ch == "(":
-            # balanced quote-aware scan — :has(em:nth-child(2)) nests
-            # parens, and [x=")"] hides one in a string
-            j = _balanced_arg(sel, i)
-            buf += sel[i:j]
-            i = j
-        elif ch in " >+~":
-            if buf:
-                parts.append((combin, _parse_compound(buf)))
-                buf = ""
+    start = 0  # start of the current compound
+    for i, ch in _css_top(sel):
+        if ch in " >+~":
+            if i > start:
+                parts.append((combin, _parse_compound(sel[start:i])))
                 combin = " "
             if ch in ">+~":
                 combin = ch
-            i += 1
-        else:
-            buf += ch
-            i += 1
-    if buf:
-        parts.append((combin, _parse_compound(buf)))
+            start = i + 1
+    if start < len(sel):
+        parts.append((combin, _parse_compound(sel[start:])))
     if not parts:
         raise ValueError(f"empty CSS selector: {sel!r}")
     if parts[0][0] != " ":  # leading combinator ('> x') unsupported
@@ -851,701 +864,71 @@ def css_select(scope: Element, expr: str) -> List[Element]:
 # ---------------------------------------------------------------------------
 # XPath subset engine
 # ---------------------------------------------------------------------------
+#
+# An expression is tokenized once and compiled by one recursive-descent
+# parser (:class:`_XPathParser`) into location paths whose predicates are
+# closures ``f(el, position, last) -> bool``; string and number
+# sub-expressions compile to closures too. Evaluation walks the compiled
+# tree and never reads the expression text again; off-grammar input raises
+# ValueError at compile time. ``S`` = string, ``N`` = number, ``P`` =
+# relative location path:
+#
+#   Expr     := Path ('|' Path)*           branches start / // ./ .//
+#   Path     := ['.'] ('/'|'//') Step ... | Step (('/'|'//') Step)*
+#   Step     := NodeTest ('[' Pred ']')*
+#   NodeTest := [axis::](name | integer | * | .. | text() | node() | @name)
+#   Pred     := And ('or' And)*    And := Unary ('and' Unary)*
+#               ('and'/'or' with whitespace on both sides)
+#   Unary    := not(Pred) | (Pred) | Atom
+#   Atom     := N [cmp N]                 a bare number is positional
+#             | P ('|' P)*                non-empty node-set; leading / absolute
+#             | @name                     presence
+#             | S ('='|'!=') S            a bare @name side is existential
+#             | contains(S, S) | starts-with(S, S) | boolean(@name|P|N|S)
+#             | name() ('='|'!=') 'lit' | local-name() ...
+#             | re:test(text(), 'pat'[, 'flags'])
+#   N        := N ('+'|'-') N | N ('*'|div|mod) N | (N) | integer
+#             | position() | last() | count(P ('|' P)*) | string-length(S)
+#             | number(S | P)
+#   S        := 'lit' | . | text() | @name | normalize-space(S) | string(S | P)
+#             | concat(S, S, ...) | translate(S, S, S) | substring-before(S, S)
+#             | substring-after(S, S) | substring(S, int[, int])
+#
+# An empty S argument is '.'. In a string context ``text()`` is the first
+# text child and ``.`` the text content; ``string(P)`` is the first node's
+# text content. ``count``/``string``/``number`` paths are relative even
+# with a leading '/'.
 
-_XP_PRED = re.compile(
-    r"""^\s*(?:
-      contains\(\s*@(?P<cattr>[\w-]+)\s*,\s*(?P<q1>["'])(?P<cval>.*?)(?P=q1)\s*\)
-    | contains\(\s*text\(\)\s*,\s*(?P<q2>["'])(?P<tval>.*?)(?P=q2)\s*\)
-    | starts-with\(\s*@(?P<sattr>[\w-]+)\s*,\s*(?P<q6>["'])(?P<sval>.*?)(?P=q6)\s*\)
-    | starts-with\(\s*text\(\)\s*,\s*(?P<q7>["'])(?P<stval>.*?)(?P=q7)\s*\)
-    | re:test\(\s*text\(\)\s*,\s*(?P<q3>["'])(?P<rpat>.*?)(?P=q3)\s*(?:,\s*(?P<q4>["'])(?P<rflags>.*?)(?P=q4)\s*)?\)
-    | text\(\)\s*=\s*(?P<q8>["'])(?P<teq>.*?)(?P=q8)
-    | @(?P<eattr>[\w-]+)\s*(?P<neq>!)?=\s*(?P<q5>["'])(?P<eval>.*?)(?P=q5)
-    | (?P<nsfn>contains|starts-with)\(\s*normalize-space\(\s*(?P<nsarg1>\.|text\(\)|@[\w-]+)?\s*\)\s*,\s*(?P<q9>["'])(?P<nsv1>.*?)(?P=q9)\s*\)
-    | normalize-space\(\s*(?P<nsarg2>\.|text\(\)|@[\w-]+)?\s*\)\s*(?P<nsneq>!)?=\s*(?P<q10>["'])(?P<nsv2>.*?)(?P=q10)
-    | (?P<namefn>name|local-name)\(\s*\)\s*(?P<namneq>!)?=\s*(?P<q11>["'])(?P<namval>.*?)(?P=q11)
-    | @(?P<xattr>[\w-]+)
-    | position\(\)\s*(?P<pcmp><=|>=|<|>|=)\s*(?P<pval>\d+)
-    | (?P<last>last\(\))
-    | (?P<pos>\d+)
-    )\s*$""",
+_XP_TOKEN = re.compile(
+    r"""\s*(?:
+      '(?P<sq>[^']*)' | "(?P<dq>[^"]*)"
+    | (?P<num>\d+)
+    | (?P<step>[^\W\d][\w-]*::(?:[^\W\d][\w-]*|\*|\.\.|text\(\)|node\(\)|@[\w-]+))
+    | (?P<kw>text\(\)|node\(\)|position\(\)|last\(\))
+    | (?P<fn>(?:re:)?[^\W\d][\w-]*)\(
+    | (?P<attr>@[\w-]+)
+    | (?P<name>[^\W\d][\w-]*)
+    | (?P<op>//|\.\.|!=|<=|>=|[./|()\[\],*+=<>-])
+    )""",
     re.VERBOSE,
 )
-
-
-def _split_top(s: str, word: str) -> List[str]:
-    """Split ``s`` on the keyword ``word`` (e.g. 'or'/'and') at top level —
-    outside quotes, parens, and brackets; the keyword must be
-    whitespace-delimited."""
-    out: List[str] = []
-    depth = 0
-    q: Optional[str] = None
-    i = last = 0
-    L = len(s)
-    wl = len(word)
-    while i < L:
-        c = s[i]
-        if q:
-            if c == q:
-                q = None
-        elif c in "\"'":
-            q = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif (
-            depth == 0
-            and s.startswith(word, i)
-            and i > 0
-            and s[i - 1].isspace()
-            and i + wl < L
-            and s[i + wl].isspace()
-        ):
-            out.append(s[last:i])
-            i += wl
-            last = i
-            continue
-        i += 1
-    out.append(s[last:])
-    return out
+# node tests besides names, integers (boolean(1) tests for a child named
+# '1'), @names and axis::tests
+_XP_TESTS = {("op", "*"), ("op", ".."), ("kw", "text()"), ("kw", "node()")}
+_XP_CMP = {
+    "=": operator.eq, "!=": operator.ne, "<": operator.lt, ">": operator.gt,
+    "<=": operator.le, ">=": operator.ge,
+}
+_XP_NUM_LEXEME = re.compile(r"-?(\d+(\.\d*)?|\.\d+)")
 
 
 class _Step:
     __slots__ = ("axis", "name", "preds")
 
-    def __init__(self, axis: str, name: str, preds: List[str]):
+    def __init__(self, axis: str, name: str, preds: list):
         self.axis = axis  # 'child' | 'descendant'
-        self.name = name  # tag name | '*' | '@attr' | 'text()'
-        self.preds = preds
-
-
-def _parse_xpath(expr: str) -> List[_Step]:
-    """Parse + VALIDATE one XPath location path. Predicates are grammar-
-    checked here, at parse time — an off-grammar predicate raises even when
-    no candidate node ever reaches it (lazy-only rejection would let a
-    typo'd selector silently return [] on pages where the step tag doesn't
-    occur). Cached: see :func:`_parsed_xpath`."""
-    s = expr.strip()
-    if s.startswith("."):
-        s = s[1:]
-    steps: List[_Step] = []
-    i = 0
-    while i < len(s):
-        if s.startswith("//", i):
-            axis = "descendant"
-            i += 2
-        elif s.startswith("/", i):
-            axis = "child"
-            i += 1
-        else:
-            raise ValueError(f"unsupported XPath (expected / or //): {expr!r}")
-        # read node test
-        j = i
-        while j < len(s) and s[j] not in "/[":
-            j += 1
-        name = s[i:j].strip()
-        if not name:
-            raise ValueError(f"unsupported XPath step in {expr!r}")
-        i = j
-        preds: List[str] = []
-        while i < len(s) and s[i] == "[":
-            depth = 1
-            k = i + 1
-            while k < len(s) and depth:
-                if s[k] == "[":
-                    depth += 1
-                elif s[k] == "]":
-                    depth -= 1
-                k += 1
-            preds.append(s[i + 1 : k - 1])
-            i = k
-        for p in preds:
-            _validate_pred(p)
-        steps.append(_Step(axis, name, preds))
-    if not steps:
-        raise ValueError(f"empty XPath: {expr!r}")
-    return steps
-
-
-@_lru_cache(maxsize=2048)
-def _parse_xpath_cached(expr: str) -> List[_Step]:
-    """LRU-cached parse: the extraction kernel re-evaluates the same rule
-    selectors on every page, so parse+validate cost is paid once per
-    distinct expression. _Step lists are read-only after construction."""
-    return _parse_xpath(expr)
-
-
-def _validate_pred(pred: str) -> None:
-    """Grammar check of one predicate (same decomposition as _pred_eval:
-    or → and → parens/not → atom); raises ValueError on off-grammar."""
-    ors = _split_top(pred, "or")
-    if len(ors) > 1:
-        for p in ors:
-            _validate_pred(p)
-        return
-    ands = _split_top(pred, "and")
-    if len(ands) > 1:
-        for p in ands:
-            _validate_pred(p)
-        return
-    atom = pred.strip()
-    if atom.startswith("(") and atom.endswith(")"):
-        return _validate_pred(atom[1:-1])
-    if atom.startswith("not(") and atom.endswith(")"):
-        return _validate_pred(atom[4:-1])
-    if _XP_PRED.match(atom) or _XP_SUBSTR.match(atom) or _strcmp_match(atom):
-        return
-    if _numeric_valid(atom):
-        return
-    if _path_pred_ok(atom):
-        return
-    if _generic_str_pred(None, atom, 1, 1, validate=True):
-        return
-    raise ValueError(f"unsupported XPath predicate: {atom!r}")
-
-
-# strict node-test for location-path predicates: (axis::)?(name|*|..|
-# text()|@attr). The main step tokenizer reads names loosely; existence
-# predicates validate each step against THIS so off-grammar atoms still
-# raise loudly instead of silently becoming empty-node-set → False.
-_XP_NODETEST = re.compile(
-    r"^(?:[\w-]+::)?(?:[\w-]+|\*|\.\.|text\(\)|@[\w-]+)$"
-)
-
-
-def _path_pred_ok(atom: str) -> bool:
-    """True iff ``atom`` is a location-path existence predicate (XPath 1.0
-    boolean conversion of a node-set): ``[p]``, ``[a/p[@class='x']]``,
-    ``[.//div]``, ``[//p]`` (absolute), ``[following-sibling::div]``,
-    ``[a | b]``. Validation = full parse of each union branch (nested
-    predicates recurse) + strict node-test check per step."""
-    p = atom.strip()
-    if not p or p.startswith("@"):
-        return False  # bare @attr is _XP_PRED's; '@a=...' isn't a path
-    try:
-        for br in _split_union(p):
-            b = br.strip()
-            if not b:
-                return False
-            b = b if b.startswith((".", "/")) else "./" + b
-            for step in _parse_xpath(b):
-                if not _XP_NODETEST.match(step.name):
-                    return False
-        return True
-    except ValueError:
-        return False
-
-
-def _path_pred_eval(el: Element, atom: str) -> bool:
-    """Evaluate a location-path existence predicate: non-empty node-set →
-    True. Leading ``//`` is ABSOLUTE (from the document root) per XPath
-    1.0; relative forms evaluate from the context node."""
-    truth = False
-    for br in _split_union(atom.strip()):
-        b = br.strip()
-        if b.startswith("/"):
-            base = _doc_root(el)
-            res = xpath_select(base, "." + b)
-        else:
-            res = xpath_select(el, b if b.startswith(".") else "./" + b)
-        if res:
-            truth = True
-    return truth
-
-
-def _numeric_valid(pred: str) -> bool:
-    parts = _NUM_CMP.split(pred, maxsplit=1)
-    exprs = [parts[0], parts[2]] if len(parts) == 3 else [pred]
-    return all(
-        _num_of(e, 1, 1, el=None, validate=True) is not None for e in exprs
-    )
-
-
-def _pred_eval(el: Element, pred: str, position: int, total: int) -> bool:
-    """XPath predicate: top-level ``or`` → any, then ``and`` → all, then
-    atoms (``not(...)`` recurses)."""
-    ors = _split_top(pred, "or")
-    if len(ors) > 1:
-        return any(_pred_eval(el, p, position, total) for p in ors)
-    ands = _split_top(pred, "and")
-    if len(ands) > 1:
-        return all(_pred_eval(el, p, position, total) for p in ands)
-    atom = pred.strip()
-    if atom.startswith("(") and atom.endswith(")"):
-        return _pred_eval(el, atom[1:-1], position, total)
-    if atom.startswith("not(") and atom.endswith(")"):
-        return not _pred_eval(el, atom[4:-1], position, total)
-    return _pred_atom(el, atom, position, total)
-
-
-def _balanced_arg(s: str, start: int) -> int:
-    """Index just past the ')' closing the paren at ``start`` (quote-aware)."""
-    depth = 0
-    q: Optional[str] = None
-    for i in range(start, len(s)):
-        c = s[i]
-        if q:
-            if c == q:
-                q = None
-        elif c in "\"'":
-            q = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    raise ValueError(f"unbalanced parens in {s!r}")
-
-
-def _rel_nodes(el: "Element", path: str) -> List:
-    """Node-set of a RELATIVE location path from ``el`` (the argument form
-    of ``count()``): bare steps (``a``, ``p[...]``, ``*``, explicit axes,
-    ``@attr``, ``text()``) are child-axis per XPath 1.0; ``.//``/``./``//
-    ``//`` forms pass through to :func:`xpath_select` unchanged."""
-    p = path.strip()
-    if not p.startswith((".", "/")):
-        p = "./" + p
-    return xpath_select(el, p)
-
-
-class _NumParse:
-    """XPath 1.0 numeric expressions over the position context:
-    integers, ``position()``, ``last()``, ``count(path)``,
-    ``string-length(arg)``, ``+ - * div mod``, parens."""
-
-    _TOK = re.compile(
-        r"\s*(?:(?P<num>\d+)|(?P<pos>position\(\))|(?P<lst>last\(\))"
-        r"|(?P<cnt>count\()|(?P<slen>string-length\()|(?P<numf>number\()"
-        r"|(?P<op>div|mod|[+\-*()]))"
-    )
-
-    def __init__(self, s: str, position: int, total: int,
-                 el: Optional["Element"] = None, validate: bool = False):
-        self.toks: List = []
-        i = 0
-        while i < len(s):
-            m = self._TOK.match(s, i)
-            if not m:
-                if s[i:].strip():
-                    raise ValueError(s)
-                break
-            if m.group("cnt") or m.group("slen") or m.group("numf"):
-                op = m.end() - 1  # index of the '(' consumed by the token
-                end = _balanced_arg(s, op)
-                arg = s[op + 1 : end - 1]
-                if validate:
-                    # syntax-only: check the argument grammar, value := 1
-                    if m.group("cnt"):
-                        p = arg.strip()
-                        _parse_xpath(p if p.startswith((".", "/")) else "./" + p)
-                    elif m.group("numf"):
-                        # number(X): string-expression OR location path
-                        # (number(node-set) = number(string(node-set)));
-                        # strict node-test so number(frob()) raises instead
-                        # of silently evaluating an empty node-set to NaN
-                        if not _valid_strarg(arg) and not _path_pred_ok(arg):
-                            raise ValueError(s)
-                    elif not _valid_strarg(arg):
-                        raise ValueError(s)
-                    self.toks.append(1)
-                elif el is None:
-                    raise ValueError(s)
-                elif m.group("cnt"):
-                    self.toks.append(len(_rel_nodes(el, arg)))
-                elif m.group("numf"):
-                    self.toks.append(_xpath_number_of(el, arg))
-                else:
-                    self.toks.append(len(_string_value_of(el, arg)))
-                i = end
-                continue
-            i = m.end()
-            if m.group("num"):
-                self.toks.append(int(m.group("num")))
-            elif m.group("pos"):
-                self.toks.append(position)
-            elif m.group("lst"):
-                self.toks.append(total)
-            else:
-                self.toks.append(m.group("op"))
-        self.i = 0
-
-    def _peek(self):
-        return self.toks[self.i] if self.i < len(self.toks) else None
-
-    def expr(self) -> float:
-        v = self.term()
-        while self._peek() in ("+", "-"):
-            op = self.toks[self.i]
-            self.i += 1
-            w = self.term()
-            v = v + w if op == "+" else v - w
-        return v
-
-    def term(self) -> float:
-        v = self.factor()
-        while self._peek() in ("*", "div", "mod"):
-            op = self.toks[self.i]
-            self.i += 1
-            w = self.factor()
-            # XPath 1.0 numbers are doubles: `div` is TRUE division
-            # (`last() div 2` = 2.5, which as a positional predicate
-            # matches nothing — lxml parity); `mod` keeps the sign of the
-            # dividend (math.fmod), unlike Python's `%`
-            if op == "*":
-                v = v * w
-            elif op == "div":
-                v = v / w
-            else:
-                import math
-
-                v = math.fmod(v, w)
-        return v
-
-    def factor(self) -> float:
-        t = self._peek()
-        if t == "(":
-            self.i += 1
-            v = self.expr()
-            if self._peek() != ")":
-                raise ValueError("unbalanced paren")
-            self.i += 1
-            return v
-        if isinstance(t, (int, float)):
-            self.i += 1
-            return t
-        raise ValueError(f"bad numeric token: {t!r}")
-
-
-# XPath 1.0 literals have NO escape mechanism: a '...' literal cannot
-# contain ', so [^'] / [^"] is the exact grammar (and keeps "'a' = 'b'"
-# from matching as ONE literal with an interior quote).
-_STR_LIT = re.compile(r"""^(?:'(?P<v1>[^']*)'|"(?P<v2>[^"]*)")$""")
-_FN_CALL = re.compile(r"^([\w-]+)\(")
-_ATTR_REF = re.compile(r"^@[\w-]+$")
-
-
-def _fn_call(a: str) -> Optional[Tuple[str, str]]:
-    """``(name, inner)`` iff ``a`` is exactly one ``name( ... )`` call whose
-    closing paren is the LAST character (quote-aware balance), else None."""
-    m = _FN_CALL.match(a)
-    if not m:
-        return None
-    try:
-        end = _balanced_arg(a, m.end() - 1)
-    except ValueError:
-        return None
-    if end != len(a):
-        return None
-    return m.group(1), a[m.end() : end - 1]
-
-
-def _split_args(s: str) -> List[str]:
-    """Split a function-argument list on top-level commas (outside quotes,
-    parens, and brackets)."""
-    out: List[str] = []
-    depth = 0
-    q: Optional[str] = None
-    last = 0
-    for i, c in enumerate(s):
-        if q:
-            if c == q:
-                q = None
-        elif c in "\"'":
-            q = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            out.append(s[last:i])
-            last = i + 1
-    out.append(s[last:])
-    return out
-
-
-def _str_of(el: Optional[Element], a: str, validate: bool = False) -> str:
-    """Recursive XPath 1.0 string-expression evaluator (the argument
-    grammar of contains/starts-with/string-length/= comparisons):
-
-    literal | '' | '.' | text() | @attr | normalize-space(X?) |
-    string(X | relative-path) | concat(X, X, ...) | translate(X, X, X) |
-    substring-before(X, X) | substring-after(X, X) | substring(X, int[, int])
-
-    ``validate=True`` grammar-checks without an element (node-valued leaves
-    yield ''). Raises ValueError on off-grammar input either way — parse
-    time and eval time reject identically, so a typo'd selector can never
-    silently become an empty match (same contract as _validate_pred)."""
-    a = a.strip()
-    m = _STR_LIT.match(a)
-    if m:
-        v1 = m.group("v1")
-        return v1 if v1 is not None else m.group("v2")
-    if a in ("", "."):
-        return "" if validate else el.text_content()
-    if a == "text()":
-        return "" if validate else el.first_text()
-    if _ATTR_REF.match(a):
-        return "" if validate else (el.attrib.get(a[1:]) or "")
-    fc = _fn_call(a)
-    if fc is None:
-        raise ValueError(f"unsupported string argument: {a!r}")
-    fn, inner = fc
-    if fn == "normalize-space":
-        return " ".join(_str_of(el, inner, validate).split())
-    if fn == "string":
-        try:
-            return _str_of(el, inner, validate)
-        except ValueError:
-            pass
-        # node-set → string value of the FIRST node in document order
-        # ('' when empty) — XPath 1.0 §4.2 string() conversion. Strict
-        # node-test per step so string(frob()) raises instead of silently
-        # becoming an empty node-set → ''.
-        p = inner.strip()
-        for step in _parse_xpath(p if p.startswith((".", "/")) else "./" + p):
-            if not _XP_NODETEST.match(step.name):
-                raise ValueError(f"unsupported string argument: {a!r}")
-        if validate:
-            return ""
-        nodes = _rel_nodes(el, inner)
-        if not nodes:
-            return ""
-        first = nodes[0]
-        return first.text_content() if isinstance(first, Element) else str(first)
-    if fn == "concat":
-        args = _split_args(inner)
-        if len(args) < 2:
-            raise ValueError(f"concat() needs >=2 arguments: {a!r}")
-        return "".join(_str_of(el, x, validate) for x in args)
-    if fn == "translate":
-        args = _split_args(inner)
-        if len(args) != 3:
-            raise ValueError(f"translate() needs 3 arguments: {a!r}")
-        s, frm, to = (_str_of(el, x, validate) for x in args)
-        out = []
-        for ch in s:
-            j = frm.find(ch)  # first occurrence wins (XPath 1.0 §4.2)
-            if j < 0:
-                out.append(ch)
-            elif j < len(to):
-                out.append(to[j])
-            # else: char is deleted
-        return "".join(out)
-    if fn in ("substring-before", "substring-after"):
-        args = _split_args(inner)
-        if len(args) != 2:
-            raise ValueError(f"{fn}() needs 2 arguments: {a!r}")
-        s = _str_of(el, args[0], validate)
-        t = _str_of(el, args[1], validate)
-        if t == "":
-            # '' occurs at position 0: nothing precedes it, everything
-            # follows it (libxml2 parity)
-            return "" if fn == "substring-before" else s
-        pre, sep, post = s.partition(t)
-        if not sep:
-            return ""
-        return pre if fn == "substring-before" else post
-    if fn == "substring":
-        args = _split_args(inner)
-        if len(args) not in (2, 3):
-            raise ValueError(f"substring() needs 2-3 arguments: {a!r}")
-        s = _str_of(el, args[0], validate)
-        try:
-            start = int(args[1])
-            length = int(args[2]) if len(args) == 3 else None
-        except ValueError:
-            raise ValueError(
-                f"substring() positions must be integers: {a!r}"
-            ) from None
-        return _xpath_substring(s, start, length)
-    raise ValueError(f"unsupported string argument: {a!r}")
-
-
-def _valid_strarg(a: str) -> bool:
-    """Grammar check of one string-expression (see :func:`_str_of`)."""
-    try:
-        _str_of(None, a, validate=True)
-        return True
-    except ValueError:
-        return False
-
-
-_XP_NUM_LEXEME = re.compile(r"-?(\d+(\.\d*)?|\.\d+)")
-
-
-def _xpath_number_of(el: Element, arg: str) -> float:
-    """XPath 1.0 number(): trimmed string that is a numeric lexeme → its
-    IEEE double, anything else → NaN; number(node-set) converts through
-    string() (first node's string value)."""
-    try:
-        s = _str_of(el, arg)
-    except ValueError:
-        s = _str_of(el, f"string({arg})")
-    t = s.strip()
-    return float(t) if _XP_NUM_LEXEME.fullmatch(t) else float("nan")
-
-
-def _num_of(
-    s: str, position: int, total: int, el: Optional["Element"] = None,
-    validate: bool = False,
-) -> Optional[float]:
-    try:
-        p = _NumParse(s, position, total, el, validate)
-        v = p.expr()
-        return v if p.i == len(p.toks) and p.toks else None
-    except (ValueError, ZeroDivisionError, IndexError):
-        return None
-
-
-_NUM_CMP = re.compile(r"(!=|<=|>=|=|<|>)")
-
-
-def _numeric_pred(
-    pred: str, position: int, total: int, el: Optional["Element"] = None
-) -> Optional[bool]:
-    """Arithmetic predicate: ``last() - 1``, ``position() mod 2 = 1``,
-    ``count(.//a) >= 2``, ``string-length(@href) > 10`` ... Returns None
-    if not numeric."""
-    parts = _NUM_CMP.split(pred, maxsplit=1)
-    if len(parts) == 3:
-        lhs, cmp_op, rhs = parts
-        lv = _num_of(lhs, position, total, el)
-        rv = _num_of(rhs, position, total, el)
-        if lv is None or rv is None:
-            return None
-        return {
-            "=": lv == rv, "!=": lv != rv, "<": lv < rv, ">": lv > rv,
-            "<=": lv <= rv, ">=": lv >= rv,
-        }[cmp_op]
-    v = _num_of(pred, position, total, el)
-    # XPath 1.0 §2.4: ANY numeric predicate value is positional —
-    # [count(p)] ≡ [position() = count(p)] (lxml parity)
-    return None if v is None else position == v
-
-
-_XP_SUBSTR = re.compile(
-    r"""^\s*substring\(\s*(?P<arg>\.|text\(\)|@[\w-]+)\s*,
-    \s*(?P<start>-?\d+)\s*(?:,\s*(?P<len>-?\d+)\s*)?\)
-    \s*(?P<neq>!)?=\s*(?P<q>["'])(?P<val>.*?)(?P=q)\s*$""",
-    re.VERBOSE,
-)
-
-# string(...) in comparison position: string(X) = 'v', contains(string(X),
-# 'v'), starts-with(string(X), 'v') — X validated via _valid_strarg (which
-# accepts '', '.', text(), @attr, normalize-space(...), nested string(...),
-# or a relative location path whose FIRST node's string value is taken).
-_XP_STRCMP = re.compile(
-    r"""^\s*(?:
-      (?P<fn>contains|starts-with)\(\s*(?P<farg>string\(.*\))\s*,\s*(?P<q1>["'])(?P<fval>.*?)(?P=q1)\s*\)
-    | (?P<earg>string\(.*\))\s*(?P<neq>!)?=\s*(?P<q2>["'])(?P<eval>.*?)(?P=q2)
-    )\s*$""",
-    re.VERBOSE,
-)
-
-
-def _strcmp_match(atom: str):
-    """``_XP_STRCMP`` match with the string() argument grammar-checked;
-    None when the atom is not a (valid) string()-comparison."""
-    m = _XP_STRCMP.match(atom)
-    if m and _valid_strarg(m.group("farg") or m.group("earg")):
-        return m
-    return None
-
-
-def _string_value_of(el: Element, arg: str) -> str:
-    """String value of a predicate-function argument — full recursive
-    string-expression grammar; see :func:`_str_of`."""
-    return _str_of(el, arg)
-
-
-def _split_eq(s: str) -> Tuple[str, Optional[str], str]:
-    """Split on the first top-level ``=`` / ``!=`` (outside quotes, parens,
-    brackets); ``<=`` / ``>=`` are NOT equality and yield (s, None, '')."""
-    depth = 0
-    q: Optional[str] = None
-    for i, c in enumerate(s):
-        if q:
-            if c == q:
-                q = None
-        elif c in "\"'":
-            q = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "=" and depth == 0:
-            if i > 0 and s[i - 1] == "!":
-                return s[: i - 1], "!=", s[i + 1 :]
-            if i > 0 and s[i - 1] in "<>":
-                return s, None, ""
-            return s[:i], "=", s[i + 1 :]
-    return s, None, ""
-
-
-def _generic_str_pred(
-    el: Optional[Element], atom: str, position: int, total: int,
-    validate: bool = False,
-) -> Optional[bool]:
-    """Generalized string-expression predicate — the grammar tail the
-    fixed-shape regexes (_XP_PRED/_XP_STRCMP) don't reach:
-
-    - ``contains(X, Y)`` / ``starts-with(X, Y)`` with ARBITRARY
-      string-expressions on both sides (the common class-match idiom
-      ``contains(concat(' ', @class, ' '), ' x ')``)
-    - ``X = Y`` / ``X != Y`` over string-expressions (``translate(@c,
-      'ABC', 'abc') = 'x'``)
-    - ``boolean(X)``: node-set form (``@attr`` presence, location path)
-      checked BEFORE the string form — boolean(@a) is true for a PRESENT
-      but empty attribute, where string conversion would say false
-
-    Returns None when ``atom`` is not of this shape or off-grammar (the
-    caller raises its own error); ``validate=True`` grammar-checks only.
-    """
-    try:
-        fc = _fn_call(atom.strip())
-        if fc and fc[0] in ("contains", "starts-with"):
-            args = _split_args(fc[1])
-            if len(args) != 2:
-                return None
-            x = _str_of(el, args[0], validate)
-            y = _str_of(el, args[1], validate)
-            if validate:
-                return True
-            return (y in x) if fc[0] == "contains" else x.startswith(y)
-        if fc and fc[0] == "boolean":
-            inner = fc[1].strip()
-            if _ATTR_REF.match(inner):
-                return True if validate else inner[1:] in el.attrib
-            if _path_pred_ok(inner):
-                return True if validate else _path_pred_eval(el, inner)
-            v = _num_of(inner, position, total, el, validate)
-            if v is not None:
-                import math
-
-                return True if validate else (v != 0 and not math.isnan(v))
-            s = _str_of(el, inner, validate)
-            return True if validate else s != ""
-        lhs, op, rhs = _split_eq(atom)
-        if op is not None:
-            # a bare @attr side is a NODE-SET: comparison is existential
-            # (XPath 1.0 §3.4) — a missing attribute makes BOTH = and !=
-            # false, unlike string coercion which would compare against ''
-            ln = _ATTR_REF.match(lhs.strip()) is not None
-            rn = _ATTR_REF.match(rhs.strip()) is not None
-            x = _str_of(el, lhs, validate)
-            y = _str_of(el, rhs, validate)
-            if validate:
-                return True
-            if ln and lhs.strip()[1:] not in el.attrib:
-                return False
-            if rn and rhs.strip()[1:] not in el.attrib:
-                return False
-            return (x == y) if op == "=" else (x != y)
-    except ValueError:
-        return None
-    return None
+        self.name = name  # tag | '*' | 'node()' | '..' | 'axis::test' | '@attr' | 'text()'
+        self.preds = preds  # compiled predicates, f(el, position, last) -> bool
 
 
 def _xpath_substring(s: str, start: int, length: Optional[int]) -> str:
@@ -1558,121 +941,480 @@ def _xpath_substring(s: str, start: int, length: Optional[int]) -> str:
     return s[begin:end] if end > begin else ""
 
 
-def _pred_atom(el: Element, pred: str, position: int, total: int) -> bool:
-    m = _XP_PRED.match(pred)
-    if not m:
-        ms = _XP_SUBSTR.match(pred)
-        if ms:
-            v = _xpath_substring(
-                _string_value_of(el, ms.group("arg")),
-                int(ms.group("start")),
-                int(ms.group("len")) if ms.group("len") is not None else None,
-            )
-            eq = v == ms.group("val")
-            return not eq if ms.group("neq") else eq
-        mc = _strcmp_match(pred)
-        if mc:
-            v = _string_value_of(el, mc.group("farg") or mc.group("earg"))
-            if mc.group("fn") == "contains":
-                return mc.group("fval") in v
-            if mc.group("fn") == "starts-with":
-                return v.startswith(mc.group("fval"))
-            eq = v == mc.group("eval")
-            return not eq if mc.group("neq") else eq
-        r = _numeric_pred(pred, position, total, el)
-        if r is not None:
-            return r
-        if _path_pred_ok(pred):
-            return _path_pred_eval(el, pred)
-        g = _generic_str_pred(el, pred, position, total)
-        if g is not None:
-            return g
-        raise ValueError(f"unsupported XPath predicate: {pred!r}")
-    if m.group("cattr"):
-        return m.group("cval") in (el.attrib.get(m.group("cattr")) or "")
-    if m.group("tval") is not None:
-        return m.group("tval") in el.first_text()
-    if m.group("sattr"):
-        return (el.attrib.get(m.group("sattr")) or "").startswith(m.group("sval"))
-    if m.group("stval") is not None:
-        return el.first_text().startswith(m.group("stval"))
-    if m.group("rpat") is not None:
-        flags = re.IGNORECASE if "i" in (m.group("rflags") or "") else 0
-        return re.search(m.group("rpat"), el.first_text(), flags) is not None
-    if m.group("teq") is not None:
-        return el.first_text() == m.group("teq")
-    if m.group("eattr"):
-        # bare @attr is a NODE-SET: comparison is existential (XPath 1.0
-        # §3.4, lxml parity) — a MISSING attribute makes both = and !=
-        # false. string(@attr) = 'v' is the coercion form (missing → '').
-        v = el.attrib.get(m.group("eattr"))
-        if v is None:
+def _translate(s: str, frm: str, to: str) -> str:
+    out = []
+    for ch in s:
+        j = frm.find(ch)  # first occurrence wins (XPath 1.0 §4.2)
+        if j < 0:
+            out.append(ch)
+        elif j < len(to):
+            out.append(to[j])
+        # else: char is deleted
+    return "".join(out)
+
+
+def _substring_around(s: str, t: str, before: bool) -> str:
+    if t == "":
+        # '' occurs at position 0: nothing precedes it, everything follows
+        # it (libxml2 parity)
+        return "" if before else s
+    pre, sep, post = s.partition(t)
+    if not sep:
+        return ""
+    return pre if before else post
+
+
+def _first_string(nodes: list) -> str:
+    """node-set → string: the FIRST node's string value, '' when empty
+    (XPath 1.0 §4.2)."""
+    if not nodes:
+        return ""
+    first = nodes[0]
+    return first.text_content() if isinstance(first, Element) else str(first)
+
+
+def _xpath_number(s: str) -> float:
+    """XPath 1.0 number(): trimmed numeric lexeme → its IEEE double,
+    anything else → NaN."""
+    t = s.strip()
+    return float(t) if _XP_NUM_LEXEME.fullmatch(t) else float("nan")
+
+
+def _div(v, w):
+    # XPath 1.0 numbers are doubles: `div` is TRUE division (`last() div 2`
+    # = 2.5, which as a positional predicate matches nothing — lxml parity)
+    try:
+        return v / w
+    except ZeroDivisionError:
+        raise ValueError("XPath division by zero") from None
+
+
+def _arith(op, f, g):
+    return lambda el, pos, last: op(f(el, pos, last), g(el, pos, last))
+
+
+def _or(f, g):
+    return lambda el, pos, last: f(el, pos, last) or g(el, pos, last)
+
+
+def _and(f, g):
+    return lambda el, pos, last: f(el, pos, last) and g(el, pos, last)
+
+
+_XP_ADD = {("op", "+"): operator.add, ("op", "-"): operator.sub}
+_XP_MUL = {
+    ("op", "*"): operator.mul,
+    ("name", "div"): _div,
+    ("name", "mod"): math.fmod,  # keeps the dividend's sign, unlike `%`
+}
+
+
+class _XPathParser:
+    """One expression → compiled tree (grammar above). Methods consume
+    tokens and return closures or ``(absolute, steps)`` paths."""
+
+    def __init__(self, expr: str):
+        self.expr = expr
+        self.toks: List[tuple] = []  # (kind, value, start, end)
+        pos = 0
+        while True:
+            m = _XP_TOKEN.match(expr, pos)
+            if m is None:
+                if expr[pos:].strip():
+                    self.fail()
+                break
+            kind = m.lastgroup
+            val = m.group(kind)
+            if kind in ("sq", "dq"):
+                kind = "str"
+            elif kind == "num":
+                val = int(val)
+            self.toks.append((kind, val, m.start(m.lastgroup), m.end()))
+            pos = m.end()
+        self.i = 0
+
+    def fail(self):
+        raise ValueError(f"unsupported XPath: {self.expr!r}")
+
+    def peek(self, k: int = 0) -> tuple:
+        j = self.i + k
+        return self.toks[j][:2] if j < len(self.toks) else ("end", None)
+
+    def take(self) -> tuple:
+        tok = self.peek()
+        self.i += 1
+        return tok
+
+    def at(self, *ops: str) -> bool:
+        kind, val = self.peek()
+        return kind == "op" and val in ops
+
+    def accept(self, op: str) -> bool:
+        if self.at(op):
+            self.i += 1
+            return True
+        return False
+
+    def expect(self, op: str) -> None:
+        if not self.accept(op):
+            self.fail()
+
+    def word(self, w: str, consume: bool = True) -> bool:
+        """Boolean operator ``and``/``or``: whitespace-delimited as written."""
+        if self.i >= len(self.toks):
             return False
-        return (v != m.group("eval")) if m.group("neq") else (v == m.group("eval"))
-    if m.group("nsfn"):
-        v = _normalize_space_of(el, m.group("nsarg1"))
-        if m.group("nsfn") == "contains":
-            return m.group("nsv1") in v
-        return v.startswith(m.group("nsv1"))
-    if m.group("nsv2") is not None:
-        eq = _normalize_space_of(el, m.group("nsarg2")) == m.group("nsv2")
-        return not eq if m.group("nsneq") else eq
-    if m.group("namefn"):
-        # HTML has no namespaces: name() == local-name() == the tag
-        eq = el.tag == m.group("namval")
-        return not eq if m.group("namneq") else eq
-    if m.group("xattr"):
-        return m.group("xattr") in el.attrib
-    if m.group("pcmp"):
-        v = int(m.group("pval"))
-        return {
-            "=": position == v, "<": position < v, ">": position > v,
-            "<=": position <= v, ">=": position >= v,
-        }[m.group("pcmp")]
-    if m.group("last"):
-        return position == total
-    if m.group("pos"):
-        return position == int(m.group("pos"))
-    return False  # pragma: no cover
+        kind, val, a, b = self.toks[self.i]
+        s = self.expr
+        ok = kind == "name" and val == w and s[a - 1:a].isspace() and s[b:b + 1].isspace()
+        if ok and consume:
+            self.i += 1
+        return ok
+
+    def attempt(self, parse, close: Optional[str] = None):
+        """``parse()`` (then the ``close`` token) or None, rewinding on
+        failure."""
+        save = self.i
+        try:
+            f = parse()
+            if close:
+                self.expect(close)
+            return f
+        except ValueError:
+            self.i = save
+            return None
+
+    # -- location paths -----------------------------------------------------
+    def top(self) -> List[List[_Step]]:
+        branches = [self.path(bare=False)[1]]
+        while self.accept("|"):
+            branches.append(self.path(bare=False)[1])
+        if self.i != len(self.toks):
+            self.fail()
+        return branches
+
+    def path(self, bare: bool) -> Tuple[bool, List[_Step]]:
+        """``bare``: a first step without a leading slash is child-axis."""
+        absolute = self.at("/", "//")
+        dot = self.accept(".")
+        steps: List[_Step] = []
+        while True:
+            if self.accept("//"):
+                axis = "descendant"
+            elif self.accept("/"):
+                axis = "child"
+            elif bare and not steps and not dot and not self.at(".."):
+                axis = "child"
+            else:
+                break
+            kind, name = self.take()
+            if kind not in ("name", "attr", "step", "num") and (kind, name) not in _XP_TESTS:
+                self.fail()
+            preds = []
+            while self.accept("["):
+                preds.append(self.pred())
+                self.expect("]")
+            steps.append(_Step(axis, str(name), preds))
+        if not steps:
+            self.fail()
+        return absolute, steps
+
+    def exists(self):
+        """``P ('|' P)*`` as a boolean: some branch is non-empty (every
+        branch is evaluated); a leading '/' starts at the document root."""
+        branches = [self.path(bare=True)]
+        while self.accept("|"):
+            branches.append(self.path(bare=True))
+
+        def f(el, pos, last):
+            hit = False
+            for absolute, steps in branches:
+                if _walk(_doc_root(el) if absolute else el, steps):
+                    hit = True
+            return hit
+
+        return f
+
+    # -- predicates ---------------------------------------------------------
+    def pred(self):
+        f = self.conj()
+        while self.word("or"):
+            f = _or(f, self.conj())
+        return f
+
+    def conj(self):
+        f = self.unary()
+        while self.word("and"):
+            f = _and(f, self.unary())
+        return f
+
+    def unary(self):
+        if self.peek() == ("fn", "not"):
+            self.i += 1
+            f = self.pred()
+            self.expect(")")
+            return lambda el, pos, last: not f(el, pos, last)
+        if self.at("("):
+            # a parenthesized predicate spans the whole operand; `(N) div 2`
+            # falls through to the numeric atom
+            def group():
+                self.i += 1
+                f = self.pred()
+                self.expect(")")
+                if not (
+                    self.at(")", "]") or self.peek()[0] == "end"
+                    or self.word("and", False) or self.word("or", False)
+                ):
+                    self.fail()
+                return f
+
+            f = self.attempt(group)
+            if f is not None:
+                return f
+        return self.atom()
+
+    def atom(self):
+        kind, val = self.peek()
+        nxt = self.peek(1)
+        eq_next = nxt in (("op", "="), ("op", "!="))
+        if (
+            kind == "num" or (kind, val) in (("kw", "position()"), ("kw", "last()"), ("op", "("))
+            or (kind == "fn" and val in ("count", "string-length", "number"))
+        ):
+            a = self.num()
+            if self.at(*_XP_CMP):
+                cmp = _XP_CMP[self.take()[1]]
+                b = self.num()
+                return lambda el, pos, last: cmp(a(el, pos, last), b(el, pos, last))
+            # XPath 1.0 §2.4: ANY numeric predicate value is positional —
+            # [count(p)] ≡ [position() = count(p)] (lxml parity)
+            return lambda el, pos, last: pos == a(el, pos, last)
+        if kind == "fn" and val in ("name", "local-name"):
+            # HTML has no namespaces: name() == local-name() == the tag
+            self.i += 1
+            self.expect(")")
+            neg = self.at("!=")
+            if not (self.accept("=") or self.accept("!=")):
+                self.fail()
+            kind, lit = self.take()
+            if kind != "str":
+                self.fail()
+            if neg:
+                return lambda el, pos, last: el.tag != lit
+            return lambda el, pos, last: el.tag == lit
+        if kind == "fn" and val == "re:test":
+            self.i += 1
+            if self.take() != ("kw", "text()"):
+                self.fail()
+            self.expect(",")
+            kind, pat = self.take()
+            flags = 0
+            if self.accept(","):
+                fkind, fl = self.take()
+                if fkind != "str":
+                    self.fail()
+                flags = re.IGNORECASE if "i" in fl else 0
+            self.expect(")")
+            if kind != "str":
+                self.fail()
+            try:
+                search = re.compile(pat, flags).search
+            except re.error as e:
+                raise ValueError(f"bad re:test() pattern {pat!r}: {e}") from None
+            return lambda el, pos, last: search(el.first_text()) is not None
+        if kind == "fn" and val in ("contains", "starts-with"):
+            self.i += 1
+            x = self.string()
+            self.expect(",")
+            y = self.string()
+            self.expect(")")
+            if val == "contains":
+                return lambda el, pos, last: y(el) in x(el)
+            return lambda el, pos, last: x(el).startswith(y(el))
+        if kind == "fn" and val == "boolean":
+            return self.boolean()
+        if kind == "attr" and not eq_next:
+            self.i += 1
+            name = val[1:]
+            return lambda el, pos, last: name in el.attrib
+        if (
+            kind in ("name", "step")
+            or (kind == "op" and val in ("/", "//", "*"))
+            or (kind, val) == ("kw", "node()")
+            or ((kind, val) == ("kw", "text()") and not eq_next)
+            or ((kind, val) == ("op", ".") and nxt in (("op", "/"), ("op", "//")))
+        ):
+            return self.exists()
+        # S = S / S != S: a bare @attr side is a NODE-SET, so the
+        # comparison is existential (XPath 1.0 §3.4, lxml parity) — a
+        # missing attribute makes both = and != false
+        xa = val[1:] if kind == "attr" else None
+        x = self.string()
+        neg = self.at("!=")
+        if not (self.accept("=") or self.accept("!=")):
+            self.fail()
+        kind, val = self.peek()
+        ya = val[1:] if kind == "attr" else None
+        y = self.string()
+        if xa is None and ya is None:
+            if neg:
+                return lambda el, pos, last: x(el) != y(el)
+            return lambda el, pos, last: x(el) == y(el)
+
+        def cmp(el, pos, last):
+            attrib = el.attrib
+            if (xa is not None and xa not in attrib) or (ya is not None and ya not in attrib):
+                return False
+            return (x(el) != y(el)) if neg else (x(el) == y(el))
+
+        return cmp
+
+    def boolean(self):
+        """boolean(): @attr presence, then a location path (non-empty),
+        then a number (≠0 and not NaN), then a string (non-empty)."""
+        self.i += 1
+        kind, val = self.peek()
+        if kind == "attr" and self.peek(1) == ("op", ")"):
+            self.i += 2
+            name = val[1:]
+            return lambda el, pos, last: name in el.attrib
+
+        f = None if kind == "attr" else self.attempt(self.exists, ")")
+        if f is not None:
+            return f
+        n = self.attempt(self.num, ")")
+        if n is not None:
+            def nonzero(el, pos, last):
+                v = n(el, pos, last)
+                return v != 0 and not math.isnan(v)
+
+            return nonzero
+        s = self.attempt(self.string, ")")
+        if s is None:
+            self.fail()
+        return lambda el, pos, last: s(el) != ""
+
+    # -- numbers ------------------------------------------------------------
+    def num(self):
+        f = self.term()
+        while self.peek() in _XP_ADD:
+            f = _arith(_XP_ADD[self.take()], f, self.term())
+        return f
+
+    def term(self):
+        f = self.factor()
+        while self.peek() in _XP_MUL:
+            f = _arith(_XP_MUL[self.take()], f, self.factor())
+        return f
+
+    def factor(self):
+        kind, val = self.take()
+        if kind == "num":
+            return lambda el, pos, last: val
+        if (kind, val) == ("kw", "position()"):
+            return lambda el, pos, last: pos
+        if (kind, val) == ("kw", "last()"):
+            return lambda el, pos, last: last
+        if (kind, val) == ("op", "("):
+            f = self.num()
+            self.expect(")")
+            return f
+        if (kind, val) == ("fn", "count"):
+            # later union branches need their own leading / or ./
+            branches = [self.path(bare=True)[1]]
+            while self.accept("|"):
+                branches.append(self.path(bare=False)[1])
+            self.expect(")")
+            return lambda el, pos, last: len(_union(el, branches))
+        if (kind, val) == ("fn", "string-length"):
+            s = self.string()
+            self.expect(")")
+            return lambda el, pos, last: len(s(el))
+        if (kind, val) == ("fn", "number"):
+            s = self.string_or_path(attr_lead=False)
+            return lambda el, pos, last: _xpath_number(s(el))
+        self.fail()
+
+    # -- strings ------------------------------------------------------------
+    def string_or_path(self, attr_lead: bool):
+        """``S)`` or ``P)`` — a single relative path's first node's string
+        value; ``attr_lead``: the path may start with ``@name``."""
+        s = self.attempt(self.string, ")")
+        if s is not None:
+            return s
+        if not attr_lead and self.peek()[0] == "attr":
+            self.fail()
+        steps = self.path(bare=True)[1]
+        self.expect(")")
+        return lambda el: _first_string(_walk(el, steps))
+
+    def string(self):
+        kind, val = self.peek()
+        if kind == "str":
+            self.i += 1
+            return lambda el: val
+        if kind == "attr":
+            self.i += 1
+            name = val[1:]
+            return lambda el: el.attrib.get(name) or ""
+        if (kind, val) == ("kw", "text()"):
+            self.i += 1
+            return Element.first_text
+        if (kind, val) == ("op", "."):
+            self.i += 1
+            return Element.text_content
+        if kind != "fn":
+            return Element.text_content  # an empty argument is '.'
+        self.i += 1
+        if val == "string":
+            return self.string_or_path(attr_lead=True)
+        if val == "substring":
+            s = self.string()
+            self.expect(",")
+            start = self.integer()
+            length = self.integer() if self.accept(",") else None
+            self.expect(")")
+            return lambda el: _xpath_substring(s(el), start, length)
+        arity = {
+            "normalize-space": (1, 1), "concat": (2, None), "translate": (3, 3),
+            "substring-before": (2, 2), "substring-after": (2, 2),
+        }.get(val)
+        if arity is None:
+            self.fail()
+        args = [self.string()]
+        while self.accept(","):
+            args.append(self.string())
+        self.expect(")")
+        lo, hi = arity
+        if len(args) < lo or (hi is not None and len(args) > hi):
+            self.fail()
+        if val == "normalize-space":
+            a = args[0]
+            return lambda el: " ".join(a(el).split())
+        if val == "concat":
+            return lambda el: "".join([a(el) for a in args])
+        if val == "translate":
+            a, b, c = args
+            return lambda el: _translate(a(el), b(el), c(el))
+        a, b = args
+        before = val == "substring-before"
+        return lambda el: _substring_around(a(el), b(el), before)
+
+    def integer(self) -> int:
+        sign = -1 if self.accept("-") else 1
+        if sign == 1:
+            self.accept("+")
+        kind, val = self.take()
+        if kind != "num":
+            self.fail()
+        return sign * val
 
 
-def _normalize_space_of(el: Element, arg: Optional[str]) -> str:
-    """XPath normalize-space(): strip + collapse runs of whitespace.
-
-    Argument subset: '' / '.' (string value of the context node = full text
-    content), 'text()' (first text node — consistent with the text()
-    atoms above), '@attr'.
-    """
-    if arg in (None, "", "."):
-        s = el.text_content()
-    elif arg == "text()":
-        s = el.first_text()
-    else:  # '@attr'
-        s = el.attrib.get(arg[1:]) or ""
-    return " ".join(s.split())
-
-
-def _split_union(s: str) -> List[str]:
-    """Split on top-level '|' (outside quotes/parens/brackets)."""
-    out: List[str] = []
-    depth = 0
-    q: Optional[str] = None
-    last = 0
-    for i, c in enumerate(s):
-        if q:
-            if c == q:
-                q = None
-        elif c in "\"'":
-            q = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "|" and depth == 0:
-            out.append(s[last:i])
-            last = i + 1
-    out.append(s[last:])
-    return out
+@_lru_cache(maxsize=2048)
+def _parse_xpath_cached(expr: str) -> List[List[_Step]]:
+    """Compile once per distinct expression (the extraction kernel
+    re-evaluates the same rule selectors on every page): the ``|`` branches
+    of ``expr``, each a list of read-only steps."""
+    return _XPathParser(expr).top()
 
 
 def _elem_siblings(el: Element) -> List[Element]:
@@ -1681,30 +1423,35 @@ def _elem_siblings(el: Element) -> List[Element]:
     return [c for c in el.parent.children if isinstance(c, Element)]
 
 
+def _union(scope: Element, branches: List[List[_Step]]) -> list:
+    if len(branches) == 1:
+        return _walk(scope, branches[0])
+    results = [_walk(scope, steps) for steps in branches]
+    if all(isinstance(x, Element) for r in results for x in r):
+        # node-set union: document order, deduped (XPath 1.0 '|')
+        seen: set = set()
+        merged: List[Element] = []
+        for el in sorted((e for r in results for e in r), key=lambda e: e.order):
+            if id(el) not in seen:
+                seen.add(id(el))
+                merged.append(el)
+        return merged
+    # strings (attribute/text results) lose node identity in this
+    # engine: concatenate in branch order (documented subset)
+    flat: List = []
+    for r in results:
+        flat.extend(r)
+    return flat
+
+
 def xpath_select(scope: Element, expr: str):
     """Evaluate the XPath subset; returns elements, attribute strings, or
     text strings depending on the final step."""
-    union = _split_union(expr)
-    if len(union) > 1:
-        results = [xpath_select(scope, part) for part in union]
-        if all(isinstance(x, Element) for r in results for x in r):
-            # node-set union: document order, deduped (XPath 1.0 '|')
-            seen: set = set()
-            merged: List[Element] = []
-            for el in sorted(
-                (e for r in results for e in r), key=lambda e: e.order
-            ):
-                if id(el) not in seen:
-                    seen.add(id(el))
-                    merged.append(el)
-            return merged
-        # strings (attribute/text results) lose node identity in this
-        # engine: concatenate in branch order (documented subset)
-        flat: List = []
-        for r in results:
-            flat.extend(r)
-        return flat
-    steps = _parse_xpath_cached(expr)
+    return _union(scope, _parse_xpath_cached(expr))
+
+
+def _walk(scope: Element, steps: List[_Step]) -> list:
+    """Evaluate one compiled location path from ``scope``."""
     nodes: List[Element] = [scope]
     for step in steps:
         if step.name.startswith("@"):
@@ -1774,7 +1521,7 @@ def xpath_select(scope: Element, expr: str):
             elif axis == "self":
                 groups = [[n]]
             else:
-                raise ValueError(f"unsupported XPath axis: {axis!r} in {expr!r}")
+                raise ValueError(f"unsupported XPath axis: {axis!r}")
             for cand in groups:
                 if name in ("node()", "*"):
                     cur = list(cand)
@@ -1785,11 +1532,7 @@ def xpath_select(scope: Element, expr: str):
                 # that list per context
                 for p in step.preds:
                     tot = len(cur)
-                    cur = [
-                        el
-                        for i, el in enumerate(cur, 1)
-                        if _pred_eval(el, p, i, tot)
-                    ]
+                    cur = [el for i, el in enumerate(cur, 1) if p(el, i, tot)]
                 nxt.extend(cur)
         # dedupe preserving document order (descendant axes can overlap)
         seen = set()

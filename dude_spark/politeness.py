@@ -145,33 +145,23 @@ INLINE_ROBOTS_MAX = 64
 LOCAL_ROBOTS_MAX = 65536
 
 
-def inline_robots_gate(df: DataFrame, robots_rows, url_col: str = "url") -> DataFrame:
-    """Constant-folded robots gate for a small compiled-robots dimension.
+def inline_robots_cols(robots_rows, url_col: str = "url"):
+    """Constant-folded robots gate for a small compiled-robots dimension:
+    the (can_fetch, crawl_delay) Column pair.
 
     ``robots_rows`` is the **collected** output of :func:`compile_robots`
     (≤ :data:`INLINE_ROBOTS_MAX` hosts). Instead of broadcast-joining the dim
-    table on every crawl round — each broadcast exchange is an extra Spark
-    sub-job per round — the per-host decision lists are folded into literal
-    CASE/WHEN expression trees evaluated inside whole-stage codegen. Hosts
-    with no rules and no delay are omitted from the chains entirely, so the
-    common case costs one string comparison. Semantics identical to
+    table on every crawl round, the per-host decision lists are folded into
+    literal CASE/WHEN expression trees evaluated inside whole-stage codegen;
+    hosts without rules or delay are left out of the chains. Semantics equal
     :func:`robots_gate`: first matching prefix rule wins, missing host ⇒
-    allow + delay 0 (reference fail-open, ``base.py:387-388``).
+    allow + delay 0 (reference fail-open, ``base.py:387-388``). At warehouse
+    scale use :func:`robots_gate`; the crawl loop picks by dim size.
 
-    Adds ``crawl_delay int`` and drops disallowed rows. At warehouse scale
-    (millions of hosts) use the broadcast-join :func:`robots_gate` instead —
-    the crawl loop picks automatically by dim size.
-    """
-    can_fetch, delay = inline_robots_cols(robots_rows, url_col)
-    return df.filter(can_fetch).withColumn("crawl_delay", delay)
-
-
-def inline_robots_cols(robots_rows, url_col: str = "url"):
-    """The constant-folded (can_fetch, crawl_delay) Column pair behind
-    :func:`inline_robots_gate`. Unresolved Columns are input-independent
-    templates — the crawl loop builds them ONCE and reuses them every round
-    (rebuilding a many-host CASE/WHEN chain is hundreds of py4j round-trips
-    per round, a measurable slice of the per-round scheduling floor)."""
+    Unresolved Columns are input-independent templates — the crawl loop
+    builds them ONCE and reuses them every round (rebuilding a many-host
+    CASE/WHEN chain is hundreds of py4j round-trips per round, a measurable
+    slice of the per-round scheduling floor)."""
     path = F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
     host = F.col("host")
 

@@ -692,7 +692,7 @@ def q_xpath_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pathd(element):
         return {"t": "pathd", "v": element.text_content()}
 
-    # r5 string-expression tail (_str_of grammar): the canonical
+    # r5 string-expression tail (XPath string grammar): the canonical
     # concat class-match idiom — whole-word 'title' in @class
     @app.select(xpath=".//p[contains(concat(' ', @class, ' '), ' title ')]")
     def conc(element):

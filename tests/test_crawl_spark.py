@@ -114,6 +114,27 @@ def test_crawl_results_match_closed_form(crawl_result):
     assert res.results.select("page_url").distinct().count() == 488
 
 
+def test_crawl_results_cover_the_last_round(spark):
+    """A crawl cut by max_rounds at a round that fetches data pages: each
+    round's (page_url, round) results equal that round's fetched pages in the
+    trace, the final round included. (The full crawl's last round fetches
+    only content-less item links, so it cannot show a dropped last round.)"""
+    pages = pages_df(spark, SF).select("url", "html")
+    job = CrawlJob(
+        spark, make_scraper(), pages, robots=robots_df(spark),
+        config=CrawlConfig(follow_urls=True, max_rounds=3, round_seconds=3600),
+    )
+    res = job.run(seeds())
+    page_urls = {r["url"] for r in pages.select("url").collect()}
+    want = {(r["url"], r["round"]) for r in res.trace.collect() if r["url"] in page_urls}
+    got = {
+        (r["page_url"], r["round"])
+        for r in res.results.select("page_url", "round").distinct().collect()
+    }
+    assert max(rnd for _, rnd in want) == 2  # the cut round fetched data pages
+    assert got == want
+
+
 def test_flatten_spark_matches_reference_shape(spark, crawl_result):
     res, _ = crawl_result
     flat = flatten(res.results)

@@ -85,6 +85,11 @@ def test_unsupported_selectors_raise():
         xpath_select(root2, ".//div[$v]")
     with pytest.raises(ValueError):
         xpath_select(root2, ".//div[id('a')]")  # id() unsupported
+    # parsel's value pseudo-elements: rejected with the handler-side recipe
+    with pytest.raises(ValueError, match=r"::text: select the element .*kernels\.text"):
+        css_select(root2, "p::text")
+    with pytest.raises(ValueError, match=r"::attr: select the element .*kernels\.attr"):
+        css_select(root2, "div > p::attr(href)")
 
 
 def test_xpath_string_function():

@@ -19,7 +19,9 @@ Both run on deterministic seeds (no flaky randomness).
 
 from __future__ import annotations
 
+import math
 import random
+import re
 
 import pytest
 
@@ -62,6 +64,35 @@ def gen_tree(rng: random.Random) -> Element:
     return parse_html(f"<html><body>{node(0)}{node(0)}</body></html>")
 
 
+NUMS = ["3", " 4 ", "-1", "2.5", "x", "", "07"]
+
+
+def gen_mixed_tree(rng: random.Random) -> Element:
+    """Like gen_tree, but text runs sit BETWEEN children (several text
+    children per element) and ``data-n`` carries numeric-ish values."""
+    def node(depth: int) -> str:
+        tag = rng.choice(TAGS)
+        attrs = []
+        if rng.random() < 0.5:
+            attrs.append(f'class="{rng.choice(CLASSES)}"')
+        if rng.random() < 0.5:
+            attrs.append(f'data-n="{rng.choice(NUMS)}"')
+        if rng.random() < 0.4:
+            attrs.append(f'{rng.choice(ATTRS)}="{rng.choice(VALS)}"')
+        parts = []
+        n_kids = rng.randint(1, 3) if depth < 3 and rng.random() < 0.7 else 0
+        for _ in range(n_kids):
+            if rng.random() < 0.6:
+                parts.append(rng.choice(["t", "u"]) + str(rng.randint(0, 9)))
+            parts.append(node(depth + 1))
+        if rng.random() < 0.5:
+            parts.append(f"t{rng.randint(0, 9)}")
+        a = (" " + " ".join(attrs)) if attrs else ""
+        return f"<{tag}{a}>{''.join(parts)}</{tag}>"
+
+    return parse_html(f"<html><body>{node(0)}{node(0)}</body></html>")
+
+
 def _elem_children(el: Element):
     return [c for c in el.children if isinstance(c, Element)]
 
@@ -79,6 +110,28 @@ def naive_text_content(el: Element) -> str:
     return "".join(
         naive_text_content(c) if isinstance(c, Element) else c
         for c in el.children
+    )
+
+
+def naive_first_text(el: Element) -> str:
+    """XPath text() in a string context: the FIRST text child ('' if none)."""
+    return next((c for c in el.children if isinstance(c, str)), "")
+
+
+def naive_number(s: str) -> float:
+    """XPath 1.0 number(): a trimmed decimal lexeme, else NaN."""
+    t = s.strip()
+    if re.fullmatch(r"-?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)", t):
+        return float(t)
+    return float("nan")
+
+
+def naive_substring(s: str, start: int, length) -> str:
+    """XPath 1.0 substring() with integer arguments: the characters at
+    1-based positions p with start <= p < start + length."""
+    return "".join(
+        ch for p, ch in enumerate(s, 1)
+        if p >= start and (length is None or p < start + length)
     )
 
 
@@ -407,7 +460,7 @@ def test_css_selector_parity_fuzz(block: int) -> None:
 CMP_OPS = ["=", "!=", "<", ">", "<=", ">="]
 
 
-# -- string-expression sub-grammar (r5: the _str_of tail) -------------------
+# -- string-expression sub-grammar (r5: the S grammar of dom.py) ----------
 
 STR_LITS = ["one", "e", "al", "", "t w"]
 TR_FROM = ["abc", "on", "etw", "o"]
@@ -494,7 +547,9 @@ def _bare_attr_missing(s, el: Element) -> bool:
 def gen_pred(rng: random.Random, depth: int = 0):
     kinds = ["posbare", "poscmp", "last", "attr", "attreq", "contains",
              "count", "strlen", "strpath", "path",
-             "strcmp2", "strfn2", "boolattr", "attrcmp"]
+             "strcmp2", "strfn2", "boolattr", "attrcmp",
+             "retest", "namecmp", "substr", "textfn", "numcmp", "boolpath",
+             "lastminus", "posmod", "lastdiv", "nested", "union"]
     if depth < 1:
         kinds += ["and", "or", "not"]
     k = rng.choice(kinds)
@@ -539,14 +594,48 @@ def gen_pred(rng: random.Random, depth: int = 0):
         # node-set string(): string value of the FIRST child named tag
         return ("strpath", rng.choice(TAGS), rng.choice(["t0", "t1", "t2", "e"]))
     if k == "path":
-        # location-path existence: [tag], [.//tag], [tag1/tag2]
-        form = rng.choice(["child", "desc", "two"])
-        if form == "two":
-            return ("path", form, rng.choice(TAGS), rng.choice(TAGS))
-        return ("path", form, rng.choice(TAGS), None)
+        return gen_pred_path(rng)
+    if k == "retest":
+        return ("retest", rng.choice(["t1", "^t", "T[0-4]", "[5-9]$", "u"]),
+                rng.random() < 0.5)
+    if k == "namecmp":
+        return ("namecmp", rng.choice(["name", "local-name"]), rng.choice(TAGS),
+                rng.random() < 0.4)
+    if k == "substr":
+        return ("substr", rng.choice(["@" + a for a in ATTRS] + ["text()", "."]),
+                rng.choice([-1, 0, 1, 2, 3]),
+                rng.choice([None, -1, 0, 1, 2, 5]),
+                rng.choice(["", "t", "t1", "o", "ne", "al", "1"]),
+                rng.random() < 0.4)
+    if k == "textfn":
+        return ("textfn", rng.choice(["=", "contains", "starts-with"]),
+                rng.choice(["t1", "t", "1", "", "u2"]))
+    if k == "numcmp":
+        return ("numcmp", rng.choice(ATTRS + ["data-n"]), rng.choice(CMP_OPS),
+                rng.randint(0, 4))
+    if k == "boolpath":
+        return ("boolpath", gen_pred_path(rng))
+    if k == "lastminus":
+        return ("lastminus", rng.randint(0, 2))
+    if k == "posmod":
+        return ("posmod", rng.choice([2, 3]), rng.choice(CMP_OPS), rng.randint(0, 2))
+    if k == "lastdiv":
+        return ("lastdiv", rng.choice([1, 2, 3]))
+    if k == "nested":
+        return ("nested", rng.choice(TAGS), rng.choice(ATTRS + ["class"]))
+    if k == "union":
+        return ("union", rng.choice(TAGS), rng.choice(TAGS))
     if k == "not":
         return ("not", gen_pred(rng, depth + 1))
     return (k, gen_pred(rng, depth + 1), gen_pred(rng, depth + 1))
+
+
+def gen_pred_path(rng: random.Random):
+    """Location-path existence AST: [tag], [.//tag], [tag1/tag2]."""
+    form = rng.choice(["child", "desc", "two"])
+    if form == "two":
+        return ("path", form, rng.choice(TAGS), rng.choice(TAGS))
+    return ("path", form, rng.choice(TAGS), None)
 
 
 def render_pred(p) -> str:
@@ -588,6 +677,32 @@ def render_pred(p) -> str:
         if p[1] == "desc":
             return f".//{p[2]}"
         return f"{p[2]}/{p[3]}"
+    if k == "retest":
+        return f"re:test(text(), '{p[1]}'" + (", 'i')" if p[2] else ")")
+    if k == "namecmp":
+        return f"{p[1]}() {'!=' if p[3] else '='} '{p[2]}'"
+    if k == "substr":
+        length = "" if p[3] is None else f", {p[3]}"
+        return (f"substring({p[1]}, {p[2]}{length}) "
+                f"{'!=' if p[5] else '='} '{p[4]}'")
+    if k == "textfn":
+        if p[1] == "=":
+            return f"text() = '{p[2]}'"
+        return f"{p[1]}(text(), '{p[2]}')"
+    if k == "numcmp":
+        return f"number(@{p[1]}) {p[2]} {p[3]}"
+    if k == "boolpath":
+        return f"boolean({render_pred(p[1])})"
+    if k == "lastminus":
+        return f"last() - {p[1]}"
+    if k == "posmod":
+        return f"position() mod {p[1]} {p[2]} {p[3]}"
+    if k == "lastdiv":
+        return f"last() div {p[1]}"
+    if k == "nested":
+        return f"{p[1]}[@{p[2]}]"
+    if k == "union":
+        return f"{p[1]} | .//{p[2]}"
     if k == "not":
         return f"not({render_pred(p[1])})"
     return f"({render_pred(p[1])}) {k} ({render_pred(p[2])})"
@@ -651,6 +766,41 @@ def eval_pred(p, el: Element, pos: int, total: int) -> bool:
             c.tag == p[2] and any(g.tag == p[3] for g in _elem_children(c))
             for c in _elem_children(el)
         )
+    if k == "retest":
+        flags = re.IGNORECASE if p[2] else 0
+        return re.search(p[1], naive_first_text(el), flags) is not None
+    if k == "namecmp":
+        return (el.tag != p[2]) if p[3] else (el.tag == p[2])
+    if k == "substr":
+        src = p[1]
+        if src == "text()":
+            s = naive_first_text(el)
+        elif src == ".":
+            s = naive_text_content(el)
+        else:
+            s = el.attrib.get(src[1:]) or ""  # function argument: coerced
+        eq = naive_substring(s, p[2], p[3]) == p[4]
+        return not eq if p[5] else eq
+    if k == "textfn":
+        t = naive_first_text(el)
+        if p[1] == "=":
+            return t == p[2]
+        return (p[2] in t) if p[1] == "contains" else t.startswith(p[2])
+    if k == "numcmp":
+        return cmp[p[2]](naive_number(el.attrib.get(p[1]) or ""), p[3])
+    if k == "boolpath":
+        return eval_pred(p[1], el, pos, total)
+    if k == "lastminus":
+        return pos == total - p[1]
+    if k == "posmod":
+        return cmp[p[2]](math.fmod(pos, p[1]), p[3])
+    if k == "lastdiv":
+        return pos == total / p[1]
+    if k == "nested":
+        return any(c.tag == p[1] and p[2] in c.attrib for c in _elem_children(el))
+    if k == "union":
+        return (any(c.tag == p[1] for c in _elem_children(el))
+                or any(d.tag == p[2] for d in _descendants(el)))
     if k == "not":
         return not eval_pred(p[1], el, pos, total)
     if k == "and":
@@ -719,6 +869,23 @@ def test_xpath_selector_parity_fuzz(block: int) -> None:
         )
 
 
+@pytest.mark.parametrize("block", range(2))
+def test_xpath_mixed_text_parity_fuzz(block: int) -> None:
+    """The same parity on trees whose elements have several text children
+    and numeric-ish ``data-n`` values (text() = first text child, number())."""
+    rng = random.Random(2500 + block)
+    for it in range(N_ITER):
+        root = gen_mixed_tree(rng)
+        steps = gen_xpath(rng)
+        expr = render_xpath(steps)
+        got = xpath_select(root, expr)
+        want = naive_xpath(root, steps)
+        assert [id(e) for e in got] == [id(e) for e in want], (
+            f"seed={2500 + block}/{it} xpath={expr!r}\n"
+            f"got={[e.tag for e in got]} want={[e.tag for e in want]}"
+        )
+
+
 # --------------------------------------------------------------------------
 # Rejection fuzz: off-grammar must raise ValueError, never mis-select
 # --------------------------------------------------------------------------
@@ -737,6 +904,10 @@ XPATH_UNSUPPORTED = [
     ".//div[string(@x, 'y')]", ".//div[id('a')]", ".//div[string(p]",
     ".//div[translate(@x, 'a') = 'b']",
     ".//div[number(frob()) = 1]", "div/p",  # no leading / or //
+    # location-path steps take one strict node test
+    # ((axis::)?(name|*|..|text()|node()|@name)), main path included
+    ".//div)", ".//d]]iv", ".//@@div", ".//((div", ".//svg:rect", ".//p/.",
+    ".//a/@*", ".//div ::p",
 ]
 
 JUNK_TOKENS = [":!", "[[", "]]", "((", "::", "@@", "$x", "?", "%%", "[a?='v']"]
