@@ -7,7 +7,9 @@ beats default ``:root`` — ``base.py:393-400``), duplicate-``@group`` skip with
 warning (``base.py:226-246``), and rule ordering (``rule.py:56-71``).
 
 ``compile()`` turns the registry into a :class:`CompiledPlan` — the broadcast-
-able logical plan the extraction pandas UDF executes. There is no further
+able logical plan the extraction pandas UDF executes. It also compiles every
+css/any/xpath selector on the driver, so an off-grammar one raises
+ValueError naming it before any Spark job runs. There is no further
 optimizer: like the reference, registration *is* the frontend; Catalyst
 optimizes the relational glue around the UDF.
 """
@@ -19,6 +21,7 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional, Sequence, Tuple, Union
 
+from .dom import compile_selector
 from .rule import RuleSpec, Selector, rule_sorter
 
 logger = logging.getLogger(__name__)
@@ -211,6 +214,11 @@ class Scraper:
 
     def compile(self) -> CompiledPlan:
         rules = self._update_rule_groups()
+        # on the driver: an off-grammar selector fails here, before any
+        # Spark job runs or a state_dir is wiped
+        for r in rules:
+            for sel in (r.group, r.selector):
+                compile_selector(sel.selector_type(), sel.to_str())
         scrape = sorted(
             (r for r in rules if not r.setup and not r.navigate), key=rule_sorter
         )

@@ -9,21 +9,24 @@ on top of ``html.parser``.
 
 Semantics are pinned to the reference's lxml backend:
 
-- CSS (and untyped ``selector=``) — evaluated with *descendant-or-self*
-  scope relative to the context element (lxml's ``Element.cssselect``).
-  Supported subset: tag, ``.class``, ``#id``, ``[attr]`` with operators
+- CSS (and untyped ``selector=``) — subset compiled once per selector
+  list (an LRU cache of 2,048 strings, like XPath's) by one
+  recursive-descent parser into matcher closures (grammar above
+  :class:`_CSSParser`); evaluated with *descendant-or-self* scope relative
+  to the context element (lxml's ``Element.cssselect``). Supported subset:
+  tag, ``.class``, ``#id``, ``[attr]`` with operators
   ``= ~= ^= $= *= |=`` (plus the CSS4 ``[attr=v i]`` ASCII
   case-insensitive flag; ``s`` keeps the default), ``*``, ``:root``,
   structural pseudo-classes (``:first-child :last-child :only-child
-  :empty :nth-child(an+b|odd|even) :nth-last-child :first-of-type
-  :last-of-type :nth-of-type :nth-last-of-type :not(compound)``),
-  ``:is(sel-list)``/``:where(sel-list)`` (any-of over complex selectors,
-  matched document-wide per CSS4), ``:has(rel-sel)`` (relative selector
-  with optional leading ``>``/``+``/``~`` combinator; descendant
-  default), compound selectors, combinators (descendant, ``>``, ``+``,
-  ``~`` — matched with backtracking, bounded to the context subtree),
-  and selector groups (``,`` — split at top level only, so commas inside
-  ``:is(...)``/``[...]`` nest correctly). Results in document order.
+  :empty :nth-child(an+b|odd|even [of sel-list]) :nth-last-child
+  :first-of-type :last-of-type :nth-of-type :nth-last-of-type
+  :not(compound)``), ``:lang(code, ...)``, ``:is(sel-list)``/
+  ``:where(sel-list)`` (any-of over complex selectors, matched
+  document-wide per CSS4), ``:has(rel-sel)`` (relative selector with
+  optional leading ``>``/``+``/``~`` combinator; descendant default),
+  compound selectors, combinators (descendant, ``>``, ``+``, ``~`` —
+  matched with backtracking, bounded to the context subtree) and selector
+  lists (``,``). Results in document order.
 - XPath — subset compiled once per expression by one tokenizer and one
   recursive-descent parser (grammar above :class:`_XPathParser`):
   ``.//``/``//``/``./`` paths over ``name``/``*``/``node()``/``..``/
@@ -53,13 +56,13 @@ import operator
 import re
 from functools import lru_cache as _lru_cache
 from html import unescape
-from typing import Iterator, List, Optional, Tuple, Union
+from typing import Callable, List, Optional, Tuple, Union
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
 
-__all__ = ["Element", "parse_html", "css_select", "xpath_select", "select"]
+__all__ = ["Element", "parse_html", "css_select", "xpath_select", "select", "compile_selector"]
 
 _ATTR = re.compile(
     r"([^\s=/>]+)(?:\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]*)))?"
@@ -325,21 +328,65 @@ def parse_html(html: Union[str, bytes]) -> Element:
 # ---------------------------------------------------------------------------
 # CSS subset engine
 # ---------------------------------------------------------------------------
+#
+# A selector list is compiled once per string (:func:`_compile_css`) by one
+# recursive-descent parser (:class:`_CSSParser`) into one matcher closure
+# ``f(el, scope) -> bool``. Each compound compiles to one closure; each
+# pseudo-class is parsed and built in one branch of
+# :meth:`_CSSParser.pseudo`; the nested lists of ``:not``, ``:is``/
+# ``:where``, ``:has`` and ``An+B of S`` compile with their parent.
+# Evaluation never reads the selector text again and a compiled matcher holds
+# no state, so one cached matcher serves every call and every thread.
+# Off-grammar input raises ValueError at compile time.
+#
+#   List     := Complex (',' Complex)*   any whitespace around ',' and at ends
+#   Complex  := Compound (Comb Compound)*
+#   Comb     := ' '+ | ' '* ('>' | '+' | '~') ' '*
+#   Compound := [tag | '*'] Simple*                       (non-empty)
+#   Simple   := .class | #id | [name] | [name Op value [i|s]] | :Pseudo
+#   Op       := = | ~= | |= | ^= | $= | *=   value: "..." | '...' | unquoted
+#   Pseudo   := root | empty | first-child | last-child | only-child
+#             | first-of-type | last-of-type
+#             | nth-child(AnB [of List]) | nth-last-child(AnB [of List])
+#             | nth-of-type(AnB) | nth-last-of-type(AnB)
+#             | not(Compound) | is(List) | where(List)
+#             | has([> | + | ~] Complex) | lang(code, ...)
+#   AnB      := odd | even | [+-]N | [+-][N]n [(+|-) N]
+#
+# ``scope`` bounds the combinators: ' ' and '>' land on scope-or-descendant
+# and '+'/'~' never match the scope itself (lxml's descendant-or-self
+# translation). ``:is``/``:where``, ``:has`` and ``of S`` match
+# document-wide; ``:has`` passes its anchor element as the scope of its
+# relative selector, whose leftmost step is the anchor itself.
 
 _CSS_TOKEN = re.compile(
     r"""
     (?P<tag>\*|[a-zA-Z][\w-]*)
   | \.(?P<cls>[\w-]+)
   | \#(?P<id>[\w-]+)
-  | \[(?P<attr>[\w-]+)(?:(?P<op>[~^$*|]?=)(?:"(?P<dval>[^"]*)"|'(?P<sval>[^']*)'|(?P<val>[^\]"'\s]*))(?:\s+(?P<aflag>[iIsS]))?)?\s*\]
-  | :(?P<pseudo>[\w-]+)(?:\((?P<parg>[^()"']*)\))?  # quoted/nested args → balanced rescan
+  | \[(?P<attr>[\w-]+)(?:(?P<op>[~^$*|]?=)(?:"(?P<dval>[^"]*)"|'(?P<sval>[^']*)'|(?P<val>[^\]\[()"'\s]*))(?:\s+(?P<aflag>[iIsS]))?)?\s*\]
+  | ::(?P<pelem>[\w-]+)
+  | :(?P<pseudo>[\w-]+)(?P<call>\()?
     """,
     re.VERBOSE,
 )
-
-_PSEUDO_ELEMENT = re.compile(r"::([\w-]+)")
-
+# after a compound: the end of its complex selector (any whitespace, then
+# ',', ')' or the end), a combinator, or descendant spaces
+_CSS_COMB = re.compile(r"\s*(?=[,)]|\Z)| *([>+~]) *|( +)")
+_CSS_WS = re.compile(r"\s*")
+_CSS_REL = re.compile(r"\s*([>+~]?)")
+# the An+B text up to ')' or a whitespace-delimited 'of'
+_CSS_NTH_ARG = re.compile(r"([^()]*?)(?:(\))|(?<=\s)of(?=\s))")
+_CSS_LANG_ARG = re.compile(r"((?:\"[^\"]*\"|'[^']*'|[^()\[\]\"'])*)\)")
 _NTH = re.compile(r"^\s*(?:(?P<a>[+-]?\d*)n\s*(?P<b>[+-]\s*\d+)?|(?P<idx>[+-]?\d+))\s*$")
+# parsel's ::text / ::attr(name) extract VALUES; selectors here return
+# elements — the handler reads the value
+_PSEUDO_ELEMENT_HINTS = {
+    "text": ": select the element and read its text in the handler "
+    "(kernels.text / Element.text_content())",
+    "attr": ": select the element and read the attribute in the handler "
+    "(kernels.attr / Element.get(name))",
+}
 
 
 def _parse_nth(arg: str) -> Tuple[int, int]:
@@ -360,505 +407,377 @@ def _parse_nth(arg: str) -> Tuple[int, int]:
     return a, b
 
 
-def _parse_nth_pseudo(kind: str, arg: str) -> tuple:
-    """``:nth-child()``/``:nth-last-child()`` argument → pseudo tuple.
-
-    Plain ``An+B|odd|even`` → ``(kind, a, b)``; the CSS4
-    ``An+B of <selector-list>`` form (index counted among siblings
-    matching the list) → ``(kind, a, b, [chain, ...])``.
-    """
-    cuts = [
-        i for i, c in _css_top(arg)
-        if arg.startswith("of", i) and arg[i - 1:i].isspace() and arg[i + 2:i + 3].isspace()
-    ]
-    if not cuts:
-        return (kind, *_parse_nth(arg))
-    if len(cuts) != 1:
-        raise ValueError(f"unsupported :{kind}-child() argument: {arg!r}")
-    a, b = _parse_nth(arg[: cuts[0]])
-    chains = [_parse_css_chain(p) for p in _split_selector_list(arg[cuts[0] + 2:])]
-    return (kind, a, b, chains)
-
-
-class _Compound:
-    __slots__ = ("tag", "classes", "id", "attrs", "root", "pseudos")
-
-    def __init__(self) -> None:
-        self.tag: Optional[str] = None
-        self.classes: List[str] = []
-        self.id: Optional[str] = None
-        # (name, op, val); op ∈ {'=', '~=', '^=', '$=', '*=', '|='}, val None
-        # for bare [attr]
-        self.attrs: List[Tuple[str, str, Optional[str]]] = []
-        self.root = False
-        # ('nth', a, b) | ('nth-type', a, b) | ('last',) | ('last-type',)
-        # | ('only',) | ('empty',) | ('not', _Compound)
-        self.pseudos: List[tuple] = []
-
-    @staticmethod
-    def _attr_op(av: str, op: str, val: str) -> bool:
-        if op.endswith("i"):  # `[attr=v i]` flag: val pre-lowercased at parse
-            av, op = av.lower(), op[:-1]
-        if op == "=":
-            return av == val
-        if op == "~=":
-            return val in av.split()
-        if op == "|=":
-            return av == val or av.startswith(val + "-")
-        if not val:
-            return False  # ^=/$=/*= with empty value match nothing (CSS spec)
-        if op == "^=":
-            return av.startswith(val)
-        if op == "$=":
-            return av.endswith(val)
-        return val in av  # *=
-
-    def _sibling_position(self, el: Element, of_type: bool) -> Tuple[int, int]:
-        """(1-based index, count) among the parent's element children
-        (optionally same-tag only)."""
-        p = el.parent
-        if p is None:
-            return 1, 1
-        sibs = [
-            c for c in p.children
-            if isinstance(c, Element) and (not of_type or c.tag == el.tag)
-        ]
-        return sibs.index(el) + 1, len(sibs)
-
-    def _pseudo_match(self, el: Element) -> bool:
-        for ps in self.pseudos:
-            kind = ps[0]
-            if kind in ("nth", "nth-type", "nth-last", "nth-last-type"):
-                a, b = ps[1], ps[2]
-                if len(ps) == 4:
-                    # An+B `of S`: index among siblings matching the
-                    # selector list (el itself must match S)
-                    root = _doc_root(el)
-                    chains = ps[3]
-
-                    def _of(x: Element) -> bool:
-                        return any(
-                            _css_chain_matches(x, ch, root) for ch in chains
-                        )
-
-                    if not _of(el):
-                        return False
-                    p = el.parent
-                    sibs = [
-                        c
-                        for c in (p.children if p is not None else [el])
-                        if isinstance(c, Element) and _of(c)
-                    ]
-                    idx, n = sibs.index(el) + 1, len(sibs)
-                else:
-                    idx, n = self._sibling_position(el, kind.endswith("type"))
-                if kind.startswith("nth-last"):
-                    idx = n - idx + 1  # :nth-last-*: position from the end
-                if a == 0:
-                    if idx != b:
-                        return False
-                else:
-                    d = idx - b
-                    if d % a != 0 or d // a < 0:
-                        return False
-            elif kind in ("last", "last-type"):
-                idx, n = self._sibling_position(el, kind == "last-type")
-                if idx != n:
-                    return False
-            elif kind == "only":
-                idx, n = self._sibling_position(el, False)
-                if n != 1:
-                    return False
-            elif kind == "empty":
-                for c in el.children:
-                    if isinstance(c, Element) or (isinstance(c, str) and c):
-                        return False
-            elif kind == "lang":
-                cur: Optional[Element] = el
-                av = None
-                while cur is not None:
-                    v = cur.get("lang")
-                    if v is not None:
-                        av = v.lower()
-                        break
-                    cur = cur.parent
-                if av is None or not any(
-                    av == c or av.startswith(c + "-") for c in ps[1]
-                ):
-                    return False
-            elif kind == "is":
-                # :is(sel-list) / :where(): matches if ANY selector in the
-                # list matches; complex selectors are matched against the
-                # whole document (CSS4 — :is args are not scope-bounded)
-                root = _doc_root(el)
-                if not any(
-                    _css_chain_matches(el, ch, root) for ch in ps[1]
-                ):
-                    return False
-            elif kind == "has":
-                full, marker, combin = ps[1]
-                root = _doc_root(el)
-                marker.target = el
-                try:
-                    if combin in (" ", ">"):
-                        cands = (d for d in el.iter() if d is not el)
-                    else:  # '+'/'~': following siblings' subtrees
-                        cands = []
-                        p = el.parent
-                        if p is not None:
-                            sibs = [
-                                c for c in p.children if isinstance(c, Element)
-                            ]
-                            for s in sibs[sibs.index(el) + 1:]:
-                                cands.extend(s.iter())
-                    # the marker compound pins the relative selector's anchor
-                    # to `el`; _css_chain_matches enforces the combinator
-                    if not any(
-                        _css_chain_matches(d, full, root) for d in cands
-                    ):
-                        return False
-                finally:
-                    marker.target = None
-            else:  # ('not', compound)
-                if ps[1].matches(el):
-                    return False
-        return True
-
-    def matches(self, el: Element) -> bool:
-        if self.tag is not None and self.tag != "*" and el.tag != self.tag:
-            return False
-        if self.root:
-            # :root = element whose parent is the document node
-            if el.parent is not None and el.parent.tag != "#document":
-                return False
-        if self.id is None and not self.classes and not self.attrs:
-            return self._pseudo_match(el) if self.pseudos else True
-        if el._attrib is None:
-            # attrs not parsed yet: cheap substring pre-reject on the raw tag
-            # slice (a matching id/class/attr name must appear literally in
-            # it) — only plausible candidates pay the dict build below.
-            # Skipped when the raw slice is entity-encoded ('&'): the decoded
-            # value may match even though the encoded text doesn't. Attribute
-            # NAMES are matched against the lowercased raw (the attrib dict
-            # lowercases names, so '<p DATA-FOO>' must not be pre-rejected
-            # for '[data-foo]'); id/class VALUES are case-sensitive, so the
-            # original-case test is a valid necessary condition for them.
-            raw = el._raw_attrs
-            if "&" not in raw:
-                if self.id is not None and self.id not in raw:
-                    return False
-                for c in self.classes:
-                    if c not in raw:
-                        return False
-                if self.attrs:
-                    raw_l = raw.lower()
-                    for name, _op, _val in self.attrs:
-                        if name not in raw_l:
-                            return False
-        attrib = el.attrib
-        if self.id is not None and attrib.get("id") != self.id:
-            return False
-        if self.classes:
-            cls = attrib.get("class", "").split()
-            for c in self.classes:
-                if c not in cls:
-                    return False
-        for name, op, val in self.attrs:
-            if name not in attrib:
-                return False
-            if val is not None and not self._attr_op(attrib[name], op, val):
-                return False
-        if self.pseudos and not self._pseudo_match(el):
-            return False
-        return True
-
-
-class _ScopeMarker:
-    """Pseudo-compound matching only the :has() anchor element; ``target``
-    is pinned per-candidate during evaluation (single-threaded per task)."""
-
-    __slots__ = ("target",)
-
-    def __init__(self) -> None:
-        self.target: Optional[Element] = None
-
-    def matches(self, el: Element) -> bool:
-        return el is self.target
-
-
 def _doc_root(el: Element) -> Element:
     while el.parent is not None:
         el = el.parent
     return el
 
 
-def _css_top(s: str, start: int = 0) -> Iterator[Tuple[int, str]]:
-    """``(index, char)`` of each character of ``s[start:]`` outside quotes,
-    ``(...)`` and ``[...]``: an opening bracket is reported before its
-    contents and its closer after them (so a ``:not(...)`` argument ends at
-    the next reported ``)``). Parens nest; an attribute selector runs to
-    its first unquoted ``]``."""
-    depth = 0
-    in_attr = False
-    q: Optional[str] = None
-    for i in range(start, len(s)):
-        c = s[i]
-        if q:
-            if c == q:
-                q = None
-            continue
-        if c in "\"'":
-            q = c
-        elif in_attr:
-            if c == "]":
-                in_attr = False
-                yield i, c
-            continue
-        elif c == "(":
-            depth += 1
-            if depth == 1:
-                yield i, c
-            continue
-        elif c == ")":
-            depth -= 1
-        elif c == "[" and depth == 0:
-            in_attr = True
-        if depth == 0:
-            yield i, c
+def _elem_siblings(el: Element) -> List[Element]:
+    if el.parent is None:
+        return [el]
+    return [c for c in el.parent.children if isinstance(c, Element)]
 
 
-def _split_selector_list(expr: str) -> List[str]:
-    """Split a selector list on top-level commas only (commas inside
-    ``()``/``[]`` — e.g. ``:is(a, b)`` — belong to the nested selector).
-    Quote-aware: brackets/commas inside ``"..."``/``'...'`` (attribute
-    values like ``[title="a]b"]``) don't affect nesting depth."""
-    parts: List[str] = []
-    depth = 0
-    q: Optional[str] = None
-    buf = ""
-    for ch in expr:
-        if q:
-            if ch == q:
-                q = None
-        elif ch in "\"'":
-            q = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0 and q is None:
-            parts.append(buf)
-            buf = ""
-        else:
-            buf += ch
-    parts.append(buf)
-    out = [s.strip() for s in parts]
-    if any(not p for p in out):
-        raise ValueError(f"empty selector in list: {expr!r}")
-    return out
+def _attr_test(op: str, val: str, fold: bool) -> Callable[[str], bool]:
+    """Test of one attribute value for ``[name op val]``; ``fold`` is the
+    ``i`` flag (ASCII case-insensitive: both sides lowercased)."""
+    if fold:
+        test = _attr_test(op, val.lower(), False)
+        return lambda av: test(av.lower())
+    if op == "=":
+        return lambda av: av == val
+    if op == "~=":
+        return lambda av: val in av.split()
+    if op == "|=":
+        return lambda av: av == val or av.startswith(val + "-")
+    if not val:
+        return lambda av: False  # ^=/$=/*= with empty value match nothing (CSS spec)
+    if op == "^=":
+        return lambda av: av.startswith(val)
+    if op == "$=":
+        return lambda av: av.endswith(val)
+    return lambda av: val in av  # *=
 
 
-def _parse_has_arg(arg: str):
-    """Parse a :has() relative selector: optional leading combinator
-    (``>``, ``+``, ``~``; default descendant) + complex selector. Returns
-    (chain-with-scope-marker, marker, combinator)."""
-    arg = arg.strip()
-    combin = " "
-    if arg and arg[0] in ">+~":
-        combin = arg[0]
-        arg = arg[1:].strip()
-    chain = _parse_css_chain(arg)
-    marker = _ScopeMarker()
-    full = [(" ", marker), (combin, chain[0][1])] + chain[1:]
-    return full, marker, combin
+def _compound(tag, id_, classes, attrs, tests):
+    """One compound's matcher ``f(el, scope=None)``; a compound tests one
+    element, so ``scope`` is unused. ``attrs``: ``(name, value test)``, the
+    test None for a bare ``[name]``; ``tests``: pseudo-class tests."""
+    names = [name for name, _ in attrs]
+    plain = id_ is None and not classes and not attrs
 
-
-def _parse_compound(s: str) -> _Compound:
-    comp = _Compound()
-    pos = 0
-    while pos < len(s):
-        m = _CSS_TOKEN.match(s, pos)
-        if not m:
-            pe = _PSEUDO_ELEMENT.match(s, pos)
-            if pe:
-                # parsel's ::text / ::attr(name) extract VALUES; selectors
-                # here return elements — the handler reads the value
-                hint = {
-                    "text": ": select the element and read its text in the "
-                    "handler (kernels.text / Element.text_content())",
-                    "attr": ": select the element and read the attribute in "
-                    "the handler (kernels.attr / Element.get(name))",
-                }.get(pe.group(1).lower(), "")
-                raise ValueError(f"unsupported CSS pseudo-element ::{pe.group(1)}{hint}")
-            raise ValueError(f"unsupported CSS selector fragment: {s[pos:]!r}")
-        next_pos = m.end()
-        if m.group("tag"):
-            # HTML element/attribute names are ASCII case-insensitive
-            # (lxml's HTML translator lowercases them); id/class values
-            # stay case-sensitive
-            comp.tag = m.group("tag").lower()
-        elif m.group("cls"):
-            comp.classes.append(m.group("cls"))
-        elif m.group("id"):
-            if comp.id is None:
-                comp.id = m.group("id")
-            else:
-                # a second #id in one compound is an AND (unsatisfiable
-                # unless equal), not an overwrite — keep it as an attr test
-                comp.attrs.append(("id", "=", m.group("id")))
-        elif m.group("attr"):
-            op = m.group("op") or "="
-            if m.group("dval") is not None:
-                val = m.group("dval")
-            elif m.group("sval") is not None:
-                val = m.group("sval")
-            else:
-                val = m.group("val")
-            # `[attr="v" i]`: ASCII case-insensitive value match (CSS4);
-            # `s` forces the case-sensitive default
-            if (m.group("aflag") or "").lower() == "i" and val is not None:
-                val = val.lower()
-                op = op + "i"
-            comp.attrs.append((m.group("attr").lower(), op, val))
-        elif m.group("pseudo"):
-            name = m.group("pseudo").lower()
-            arg = m.group("parg")
-            if arg is None and next_pos < len(s) and s[next_pos] == "(":
-                # nested parens (e.g. :not(em:nth-child(2))): the token
-                # regex's [^()]* arg can't span them — rescan balanced
-                end = next((i for i, c in _css_top(s, next_pos) if c == ")"), None)
-                if end is None:
-                    raise ValueError(f"unbalanced parens in {s!r}")
-                arg = s[next_pos + 1 : end]
-                next_pos = end + 1
-            if name == "root":
-                comp.root = True
-            elif name == "first-child":
-                comp.pseudos.append(("nth", 0, 1))
-            elif name == "last-child":
-                comp.pseudos.append(("last",))
-            elif name == "only-child":
-                comp.pseudos.append(("only",))
-            elif name == "empty":
-                comp.pseudos.append(("empty",))
-            elif name == "first-of-type":
-                comp.pseudos.append(("nth-type", 0, 1))
-            elif name == "last-of-type":
-                comp.pseudos.append(("last-type",))
-            elif name == "nth-child" and arg is not None:
-                comp.pseudos.append(_parse_nth_pseudo("nth", arg))
-            elif name == "nth-of-type" and arg is not None:
-                comp.pseudos.append(("nth-type", *_parse_nth(arg)))
-            elif name == "nth-last-child" and arg is not None:
-                comp.pseudos.append(_parse_nth_pseudo("nth-last", arg))
-            elif name == "nth-last-of-type" and arg is not None:
-                comp.pseudos.append(("nth-last-type", *_parse_nth(arg)))
-            elif name == "not" and arg is not None:
-                comp.pseudos.append(("not", _parse_compound(arg.strip())))
-            elif name in ("is", "where") and arg is not None:
-                comp.pseudos.append((
-                    "is",
-                    [_parse_css_chain(p) for p in _split_selector_list(arg)],
-                ))
-            elif name == "has" and arg is not None:
-                comp.pseudos.append(("has", _parse_has_arg(arg)))
-            elif name == "lang" and arg is not None:
-                # :lang(en) / CSS4 comma list :lang(fr, es). Matches when
-                # the element's inherited language (nearest ancestor-or-
-                # self @lang) equals a code or is a hyphen-extension of it
-                # (XPath lang() semantics, ASCII case-insensitive) — the
-                # lxml.cssselect translation target.
-                codes = [
-                    c.strip().strip("\"'").lower()
-                    for c in arg.split(",")
-                    if c.strip().strip("\"'")
-                ]
-                if not codes:
-                    raise ValueError(f"empty :lang() argument: {arg!r}")
-                comp.pseudos.append(("lang", codes))
-            else:
-                raise ValueError(f"unsupported CSS pseudo-class: :{name}")
-        pos = next_pos
-    return comp
-
-
-def _parse_css_chain(sel: str) -> List[Tuple[str, _Compound]]:
-    """Parse one complex selector into [(combinator, compound), ...].
-
-    combinator (the relation to the PREVIOUS compound): ' ' descendant,
-    '>' child, '+' adjacent sibling, '~' general sibling; first entry's
-    combinator is the 'self-or-descendant' scope marker.
-    """
-    parts: List[Tuple[str, _Compound]] = []
-    sel = sel.strip()
-    combin = " "
-    start = 0  # start of the current compound
-    for i, ch in _css_top(sel):
-        if ch in " >+~":
-            if i > start:
-                parts.append((combin, _parse_compound(sel[start:i])))
-                combin = " "
-            if ch in ">+~":
-                combin = ch
-            start = i + 1
-    if start < len(sel):
-        parts.append((combin, _parse_compound(sel[start:])))
-    if not parts:
-        raise ValueError(f"empty CSS selector: {sel!r}")
-    if parts[0][0] != " ":  # leading combinator ('> x') unsupported
-        raise ValueError(f"unsupported CSS selector start: {sel!r}")
-    return parts
-
-
-def _css_chain_matches(
-    el: Element, chain: List[Tuple[str, _Compound]], scope: Element, idx: int = -1
-) -> bool:
-    """Match ``el`` against ``chain[..idx]`` rightmost-first with
-    backtracking (needed for mixed sibling/descendant chains like
-    ``a + b c``), bounded to the ``scope`` subtree (lxml cssselect
-    translates 'div p' on an element to descendant-or-self steps, so every
-    compound must land on scope-or-descendant)."""
-    if idx < 0:
-        idx = len(chain) - 1
-    if not chain[idx][1].matches(el):
-        return False
-    if idx == 0:
-        return True
-    combin = chain[idx][0]
-    if combin == ">":
-        p = el.parent
-        return (
-            p is not None
-            and p.order >= scope.order
-            and _css_chain_matches(p, chain, scope, idx - 1)
-        )
-    if combin in "+~":
-        if el is scope or el.parent is None:
+    def matches(el: Element, scope: Optional[Element] = None) -> bool:
+        if tag is not None and el.tag != tag:
             return False
-        sibs = [c for c in el.parent.children if isinstance(c, Element)]
-        i = sibs.index(el)
-        if combin == "+":
-            return i > 0 and _css_chain_matches(sibs[i - 1], chain, scope, idx - 1)
-        return any(_css_chain_matches(s, chain, scope, idx - 1) for s in sibs[:i])
-    anc = el.parent
-    while anc is not None and anc.order >= scope.order:
-        if _css_chain_matches(anc, chain, scope, idx - 1):
-            return True
-        anc = anc.parent
-    return False
+        if not plain:
+            if el._attrib is None:
+                # attrs not parsed yet: cheap substring pre-reject on the raw
+                # tag slice (a matching id/class/attr name must appear
+                # literally in it) — only plausible candidates pay the dict
+                # build below. Skipped when the raw slice is entity-encoded
+                # ('&'): the decoded value may match even though the encoded
+                # text doesn't. Attribute NAMES are matched against the
+                # lowercased raw (the attrib dict lowercases names, so
+                # '<p DATA-FOO>' must not be pre-rejected for '[data-foo]');
+                # id/class VALUES are case-sensitive, so the original-case
+                # test is a valid necessary condition for them.
+                raw = el._raw_attrs
+                if "&" not in raw:
+                    if id_ is not None and id_ not in raw:
+                        return False
+                    for c in classes:
+                        if c not in raw:
+                            return False
+                    if names:
+                        raw_l = raw.lower()
+                        for name in names:
+                            if name not in raw_l:
+                                return False
+            attrib = el.attrib
+            if id_ is not None and attrib.get("id") != id_:
+                return False
+            if classes:
+                cls = attrib.get("class", "").split()
+                for c in classes:
+                    if c not in cls:
+                        return False
+            for name, test in attrs:
+                av = attrib.get(name)
+                if av is None or (test is not None and not test(av)):
+                    return False
+        for test in tests:
+            if not test(el):
+                return False
+        return True
+
+    return matches
+
+
+def _combine(left, comb: str, right):
+    """Matcher of the complex selector ``left comb right``: compound ``right``
+    matches ``el`` and ``left`` matches an element related to it by
+    ``comb``, tried with backtracking (needed for mixed sibling/descendant
+    chains like ``a + b c``)."""
+    if comb == ">":
+        def f(el: Element, scope: Element) -> bool:
+            p = el.parent
+            return right(el) and p is not None and p.order >= scope.order and left(p, scope)
+    elif comb == " ":
+        def f(el: Element, scope: Element) -> bool:
+            if not right(el):
+                return False
+            anc = el.parent
+            while anc is not None and anc.order >= scope.order:
+                if left(anc, scope):
+                    return True
+                anc = anc.parent
+            return False
+    else:
+        def f(el: Element, scope: Element) -> bool:
+            if not right(el) or el is scope or el.parent is None:
+                return False
+            sibs = _elem_siblings(el)
+            i = sibs.index(el)
+            if comb == "+":
+                return i > 0 and left(sibs[i - 1], scope)
+            return any(left(s, scope) for s in sibs[:i])
+    return f
+
+
+def _is_anchor(el: Element, scope: Element) -> bool:
+    """Leftmost step of a ``:has`` relative selector: the anchor itself."""
+    return el is scope
+
+
+def _has_test(comb: str, rel):
+    """``:has(comb rel)``: ``rel`` matches, with the anchor as its scope, an
+    element after the anchor — a descendant for ' '/'>', in a following
+    sibling's subtree (one flat-array slice) for '+'/'~'."""
+    def test(el: Element) -> bool:
+        if comb in " >":
+            cands = el.iterdescendants()
+        elif el.parent is None:
+            return False
+        else:
+            cands = el._nodes[el.end : el.parent.end]
+        return any(rel(d, el) for d in cands)
+
+    return test
+
+
+def _nth_test(a: int, b: int, last: bool, of_type: bool, of=None):
+    """The ``:nth-*`` family: ``el``'s 1-based index among its element
+    siblings — those with its tag for ``of_type``; those matching ``of``
+    (CSS4 ``An+B of S``), which ``el`` itself must match — counted from the
+    end for ``last``, is ``a*k + b`` for some k >= 0."""
+    def test(el: Element) -> bool:
+        if of is not None:
+            root = _doc_root(el)
+            if not of(el, root):
+                return False
+            sibs = [c for c in _elem_siblings(el) if of(c, root)]
+        elif of_type:
+            sibs = [c for c in _elem_siblings(el) if c.tag == el.tag]
+        else:
+            sibs = _elem_siblings(el)
+        idx = sibs.index(el) + 1
+        if last:
+            idx = len(sibs) - idx + 1
+        if a == 0:
+            return idx == b
+        d = idx - b
+        return d % a == 0 and d // a >= 0
+
+    return test
+
+
+def _lang_test(codes: List[str]):
+    """``:lang(codes)``: the inherited language (nearest ancestor-or-self
+    @lang, ASCII case-insensitive) equals a code or is a hyphen-extension
+    of it (XPath lang(), the lxml.cssselect translation target)."""
+    def test(el: Element) -> bool:
+        cur: Optional[Element] = el
+        while cur is not None:
+            v = cur.get("lang")
+            if v is not None:
+                v = v.lower()
+                return any(v == c or v.startswith(c + "-") for c in codes)
+            cur = cur.parent
+        return False
+
+    return test
+
+
+_CSS_SIMPLE = {
+    # :root = element whose parent is absent or the document node
+    "root": lambda el: el.parent is None or el.parent.tag == "#document",
+    "empty": lambda el: all(c == "" for c in el.children),
+    "first-child": _nth_test(0, 1, last=False, of_type=False),
+    "last-child": _nth_test(0, 1, last=True, of_type=False),
+    "only-child": lambda el: len(_elem_siblings(el)) == 1,
+    "first-of-type": _nth_test(0, 1, last=False, of_type=True),
+    "last-of-type": _nth_test(0, 1, last=True, of_type=True),
+}
+_CSS_NTH = {  # name -> (last, of_type)
+    "nth-child": (False, False),
+    "nth-last-child": (True, False),
+    "nth-of-type": (False, True),
+    "nth-last-of-type": (True, True),
+}
+
+
+class _CSSParser:
+    """One selector list → one matcher ``f(el, scope) -> bool`` (grammar
+    above). Methods advance ``pos`` through the selector text ``s``."""
+
+    def __init__(self, s: str):
+        self.s = s
+        self.pos = 0
+
+    def fail(self):
+        raise ValueError(f"unsupported CSS selector {self.s!r} at {self.s[self.pos:]!r}")
+
+    def skip_ws(self) -> None:
+        self.pos = _CSS_WS.match(self.s, self.pos).end()
+
+    def expect(self, c: str) -> None:
+        if not self.s.startswith(c, self.pos):
+            self.fail()
+        self.pos += len(c)
+
+    def top(self):
+        f = self.selector_list()
+        if self.pos != len(self.s):
+            self.fail()
+        return f
+
+    def selector_list(self, nth_of: bool = False):
+        fs = [self.complex(nth_of=nth_of)]
+        while self.s.startswith(",", self.pos):
+            self.pos += 1
+            fs.append(self.complex(nth_of=nth_of))
+        if len(fs) == 1:
+            return fs[0]
+        return lambda el, scope: any(f(el, scope) for f in fs)
+
+    def complex(self, f=None, comb: str = " ", nth_of: bool = False):
+        """A complex selector; a relative one (``:has``) continues the
+        matcher ``f`` by ``comb``. ``nth_of``: the top level of the ``S``
+        of ``An+B of S``."""
+        self.skip_ws()
+        right = self.compound(nth_of)
+        f = right if f is None else _combine(f, comb, right)
+        while True:
+            m = _CSS_COMB.match(self.s, self.pos)
+            if m is None:
+                self.fail()
+            self.pos = m.end()
+            if m.lastindex is None:
+                return f
+            f = _combine(f, m.group(1) or " ", self.compound(nth_of))
+
+    def compound(self, nth_of: bool = False):
+        s = self.s
+        start = self.pos
+        tag = id_ = None
+        classes: List[str] = []
+        attrs: list = []
+        tests: list = []
+        while True:
+            m = _CSS_TOKEN.match(s, self.pos)
+            if m is None:
+                break
+            self.pos = m.end()
+            if m.group("tag"):
+                if m.start() != start:  # a type selector leads its compound
+                    self.pos = m.start()
+                    self.fail()
+                # HTML element/attribute names are ASCII case-insensitive
+                # (lxml's HTML translator lowercases them); id/class values
+                # stay case-sensitive
+                tag = m.group("tag").lower()
+            elif m.group("cls"):
+                classes.append(m.group("cls"))
+            elif m.group("id"):
+                if id_ is None:
+                    id_ = m.group("id")
+                else:
+                    # a second #id in one compound is an AND (unsatisfiable
+                    # unless equal), not an overwrite
+                    attrs.append(("id", _attr_test("=", m.group("id"), False)))
+            elif m.group("attr"):
+                op = m.group("op")
+                test = None
+                if op is not None:
+                    val = next(v for v in m.group("dval", "sval", "val") if v is not None)
+                    # `[attr="v" i]`: ASCII case-insensitive value match
+                    # (CSS4); `s` keeps the case-sensitive default
+                    test = _attr_test(op, val, (m.group("aflag") or "").lower() == "i")
+                attrs.append((m.group("attr").lower(), test))
+            elif m.group("pelem"):
+                name = m.group("pelem")
+                hint = _PSEUDO_ELEMENT_HINTS.get(name.lower(), "")
+                raise ValueError(f"unsupported CSS pseudo-element ::{name}{hint}")
+            else:
+                tests.append(self.pseudo(m.group("pseudo").lower(), m.group("call")))
+        if self.pos == start:
+            self.fail()
+        if nth_of and s[start:self.pos] == "of" and s[start - 1].isspace() and (
+            s[self.pos:self.pos + 1].isspace()
+        ):
+            # 'An+B of S' has one whitespace-delimited 'of': S holds no other
+            self.fail()
+        return _compound(None if tag == "*" else tag, id_, classes, attrs, tests)
+
+    def pseudo(self, name: str, call: Optional[str]):
+        """Parse one pseudo-class — its argument runs from ``call``'s '('
+        through ')' — and build its test ``t(el) -> bool``."""
+        s = self.s
+        if not call:
+            if name in _CSS_SIMPLE:
+                return _CSS_SIMPLE[name]
+        elif name in _CSS_NTH:
+            last, of_type = _CSS_NTH[name]
+            m = _CSS_NTH_ARG.match(s, self.pos)
+            if m is None:
+                self.fail()
+            a, b = _parse_nth(m.group(1))
+            self.pos = m.end()
+            of = None
+            if m.group(2) is None:  # 'An+B of S': counted among S matches
+                if of_type:
+                    self.fail()
+                of = self.selector_list(nth_of=True)
+                self.expect(")")
+            return _nth_test(a, b, last, of_type, of)
+        elif name == "not":
+            self.skip_ws()
+            comp = self.compound()
+            self.skip_ws()
+            self.expect(")")
+            return lambda el: not comp(el)
+        elif name in ("is", "where"):
+            f = self.selector_list()
+            self.expect(")")
+            return lambda el: f(el, _doc_root(el))
+        elif name == "has":
+            m = _CSS_REL.match(s, self.pos)
+            self.pos = m.end()
+            comb = m.group(1) or " "
+            rel = self.complex(_is_anchor, comb)
+            self.expect(")")
+            return _has_test(comb, rel)
+        elif name == "lang":
+            # :lang(en) / CSS4 comma list :lang(fr, es)
+            m = _CSS_LANG_ARG.match(s, self.pos)
+            if m is None:
+                self.fail()
+            self.pos = m.end()
+            arg = m.group(1)
+            codes = [
+                c.strip().strip("\"'").lower()
+                for c in arg.split(",")
+                if c.strip().strip("\"'")
+            ]
+            if not codes:
+                raise ValueError(f"empty :lang() argument: {arg!r}")
+            return _lang_test(codes)
+        raise ValueError(f"unsupported CSS pseudo-class: :{name}")
+
+
+@_lru_cache(maxsize=2048)
+def _compile_css(expr: str):
+    """Compile once per distinct selector list (the extraction kernel
+    re-evaluates the same rule selectors on every page)."""
+    return _CSSParser(expr).top()
 
 
 def css_select(scope: Element, expr: str) -> List[Element]:
     """All elements under ``scope`` (self included — lxml descendant-or-self
     translation) matching ``expr``, in document order."""
-    chains = [_parse_css_chain(s) for s in _split_selector_list(expr)]
-    out: List[Element] = []
-    for el in scope.iter():
-        for chain in chains:
-            if _css_chain_matches(el, chain, scope):
-                out.append(el)
-                break
-    return out
+    f = _compile_css(expr)
+    return [el for el in scope.iter() if f(el, scope)]
 
 
 # ---------------------------------------------------------------------------
@@ -1417,12 +1336,6 @@ def _parse_xpath_cached(expr: str) -> List[List[_Step]]:
     return _XPathParser(expr).top()
 
 
-def _elem_siblings(el: Element) -> List[Element]:
-    if el.parent is None:
-        return [el]
-    return [c for c in el.parent.children if isinstance(c, Element)]
-
-
 def _union(scope: Element, branches: List[List[_Step]]) -> list:
     if len(branches) == 1:
         return _walk(scope, branches[0])
@@ -1547,6 +1460,20 @@ def _walk(scope: Element, steps: List[_Step]) -> list:
 # ---------------------------------------------------------------------------
 # Unified selector dispatch (reference: lxml_scraper.py:181-199)
 # ---------------------------------------------------------------------------
+
+def compile_selector(selector_type: str, selector_str: str) -> None:
+    """Compile a css/any/xpath selector into this process's cache (text and
+    regex selectors are not checked here); off-grammar input raises
+    ValueError naming the selector."""
+    t = selector_type.lower()
+    try:
+        if t in ("any", "css"):
+            _compile_css(selector_str)
+        elif t == "xpath":
+            _parse_xpath_cached(selector_str)
+    except ValueError as e:
+        raise ValueError(f"bad {t} selector {selector_str!r}: {e}") from None
+
 
 def select(scope: Element, selector_type: str, selector_str: str) -> List[Element]:
     """Evaluate a typed selector relative to ``scope``; elements only.

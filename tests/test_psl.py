@@ -98,3 +98,68 @@ def test_third_party_uses_psl(spark):
         ).collect()
     ]
     assert kept == ["https://shop.host-9.co.uk/p2.html"]
+
+
+def _naive_registrable(host, normal, wild, exc):
+    """publicsuffix.org algorithm over label lists: an exception rule wins
+    (its public suffix drops its first label), else the longest matching
+    normal or wildcard rule, else the implicit '*'; the registrable domain
+    is the public suffix plus one label. A host that is itself a public
+    suffix falls back to the longest rule it extends by a label (psl.py's
+    documented fallback)."""
+    labels = host.split(".")
+
+    def matches(rule_labels):
+        n = len(rule_labels)
+        return n <= len(labels) and all(
+            r in ("*", h) for r, h in zip(rule_labels, labels[-n:])
+        )
+
+    hits = [e.split(".") for e in exc if matches(e.split("."))]
+    if hits:
+        suffix_len = max(len(h) for h in hits) - 1
+    else:
+        rules = [r.split(".") for r in normal] + [["*"] + w.split(".") for w in wild]
+        suffix_len = max(
+            [len(r) for r in rules if matches(r) and len(r) < len(labels)] + [1]
+        )
+    return ".".join(labels[-(suffix_len + 1):])
+
+
+def test_registrable_at_psl_scale(spark):
+    """A 520-rule list (normal, 3-label, wildcard and exception rules)
+    loads, plans and evaluates over a DataFrame without a codegen failure,
+    and agrees with a label-list reading of the PSL algorithm on hosts of
+    every rule kind."""
+    normal = [f"c{i}.t{i % 25}" for i in range(400)]
+    normal += [f"a{i}.b{i}.t{i % 25}" for i in range(60)]
+    wild = [f"w{i}.t{i % 25}" for i in range(40)]
+    exc = [f"ex{i}.w{i}.t{i % 25}" for i in range(20)]
+    lines = ["// synthetic list", ""] + normal + [f"*.{w}" for w in wild] + [f"!{e}" for e in exc]
+    hosts = []
+    for i in range(0, 400, 37):
+        hosts += [f"www.shop{i}.c{i}.t{i % 25}", f"c{i}.t{i % 25}"]
+    for i in range(0, 60, 7):
+        hosts += [f"x.y{i}.a{i}.b{i}.t{i % 25}", f"z.b{i}.t{i % 25}"]
+    for i in range(0, 40, 5):
+        hosts += [f"deep.name.lab{i}.w{i}.t{i % 25}", f"lab{i}.w{i}.t{i % 25}"]
+    for i in range(0, 20, 3):
+        hosts += [f"www.ex{i}.w{i}.t{i % 25}", f"ex{i}.w{i}.t{i % 25}"]
+    hosts += ["a.b.unknown-tld", "localhost", "x.t3", "www.host-9.co.uk"]
+    old = psl._current
+    try:
+        assert psl.load_public_suffix_list(lines) == 520
+        df = spark.createDataFrame([(h,) for h in hosts], "host string")
+        got = dict(
+            df.select("host", psl.registrable(F.col("host")).alias("reg")).collect()
+        )
+    finally:
+        psl._current = old
+    assert len(got) == len(hosts)
+    for h in hosts:
+        assert got[h] == _naive_registrable(h, normal, wild, exc), h
+    assert got["www.shop0.c0.t0"] == "shop0.c0.t0"
+    assert got["deep.name.lab5.w5.t5"] == "name.lab5.w5.t5"   # wildcard
+    assert got["lab5.w5.t5"] == "w5.t5"                       # is a suffix
+    assert got["www.ex3.w3.t3"] == "ex3.w3.t3"                 # exception
+    assert got["www.host-9.co.uk"] == "co.uk"  # the list replaced DEFAULT_RULES

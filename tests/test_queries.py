@@ -53,3 +53,52 @@ def test_merged_query_matches_oracle(spark, duck, name):
     want = duck.execute(oracle_sql()[name]).fetchdf()
     assert len(got) > 0
     assert compare(got, want) is None, compare(got, want)
+
+
+# 40 distinct words; B replaces word 12 of A, C replaces word 28 of B
+CHAIN_A = (
+    "yankee willow amber charlie quebec grove fjord zulu tango ember whiskey "
+    "loam november thyme india sierra kelp golf umber juliet sage delta xray "
+    "vale victor kilo papa romeo dune lima moss reed heath cedar zinnia oscar "
+    "uniform iris echo alpha"
+).split()
+
+
+def test_dedup_minhash_cc_collapses_a_chain(spark, tmp_path):
+    """Chained near-duplicates in the production pipeline: A~B and B~C
+    verify (Jaccard 0.85), A~C does not (0.73), and LSH proposes both links
+    (seeded hashes: deterministic). The closure maps A, B, C and their
+    shifted copies to A's id; a one-hop keep-min would leave C at B."""
+    import pandas as pd
+
+    duckdb = pytest.importorskip("duckdb")
+    b = CHAIN_A[:12] + ["mutantone"] + CHAIN_A[13:]
+    c = b[:28] + ["mutanttwo"] + b[29:]
+    other = "jade foxtrot quartz opal yarrow nectar mike bravo basil " * 4
+    docs = pd.DataFrame({
+        "doc_id": [5, 10, 15, 20],
+        "text": [" ".join(CHAIN_A), " ".join(b), " ".join(c), other.strip()],
+        "lang": "en", "source": "s0",
+    })
+    docs["n_chars"] = docs.text.str.len()
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+
+    got = queries()["dedup_minhash_cc"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+        )
+        want = con.execute(oracle_sql()["dedup_minhash_cc"]).fetchdf()
+    finally:
+        con.close()
+    assert compare(got, want) is None, compare(got, want)
+
+    pairs = {
+        (r.doc_a % 10_000_000, int(r.doc_b) % 10_000_000)
+        for r in got[got.t == "pair"].itertuples()
+    }
+    assert {(5, 10), (10, 15)} <= pairs and (5, 15) not in pairs
+    keep = dict(zip(got[got.t == "doc"].doc_a, got[got.t == "doc"].keep_doc_id))
+    for d in (5, 10, 15):
+        assert keep[d] == keep[d + 10_000_000] == 5

@@ -2,6 +2,7 @@
 expectations (`tests/conftest.py:104-203`, `tests/test_bs4.py`)."""
 
 import itertools
+import re
 
 import pytest
 
@@ -199,3 +200,31 @@ def test_follow_url_reserved_key(dude_html):
     for r in rows:
         if r["kind"] == "data":
             assert "__follow__" not in r["data"]
+
+
+@pytest.mark.parametrize("kw, bad", [
+    ({"css": "div:hover"}, "div:hover"),
+    ({"selector": "div >"}, "div >"),
+    ({"xpath": ".//div[frob()]"}, ".//div[frob()]"),
+    ({"css": ".title", "group_css": "div:nth-col(2)"}, "div:nth-col(2)"),
+])
+def test_compile_rejects_off_grammar_selector_on_the_driver(tmp_path, kw, bad):
+    """compile() compiles every rule's and group's css/any/xpath selector,
+    so a bad one raises ValueError naming it before a crawl starts: a
+    CrawlJob fails in its constructor and leaves state_dir as it was."""
+    from dude_spark.crawl import CrawlConfig, CrawlJob
+
+    app = Scraper()
+
+    @app.select(**kw)
+    def h(element):
+        return {}
+
+    with pytest.raises(ValueError, match=re.escape(repr(bad))):
+        app.compile()
+    kept = tmp_path / "state" / "keep"
+    kept.parent.mkdir()
+    kept.write_text("x")
+    with pytest.raises(ValueError, match=re.escape(repr(bad))):
+        CrawlJob(None, app, None, config=CrawlConfig(state_dir=str(kept.parent)))
+    assert kept.read_text() == "x"

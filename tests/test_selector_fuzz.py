@@ -223,6 +223,15 @@ def render_compound(comp: dict) -> str:
             comb = part[1]
             pre = "" if comb == " " else f"{comb} "
             s += f":has({pre}{render_chain(part[2])})"
+        elif k == "anb":
+            s += f":{part[1]}({part[2]})"
+        elif k in WIDE_FLAGS:
+            s += WIDE_FLAGS[k]
+        elif k == "dash":
+            s += f'[{part[1]}|="{part[2]}"]'
+        elif k == "aflag":
+            _, name, op, val, flag = part
+            s += f'[{name}{op}"{val}" {flag}]'
         else:
             s += f":not({render_compound(part[1])})"
     return s or "*"
@@ -309,6 +318,44 @@ def match_compound(el: Element, comp: dict) -> bool:
             ok = any(match_chain(el, c, root) for c in part[1])
         elif k == "has":
             ok = naive_relative(el, part[1], part[2])
+        elif k == "anb":
+            _, name, _text, a, b = part
+            sibs = _elem_children(el.parent) if el.parent is not None else [el]
+            if name.endswith("of-type"):
+                sibs = [s for s in sibs if s.tag == el.tag]
+            if "-last-" in name:
+                sibs = sibs[::-1]
+            idx = sibs.index(el) + 1
+            # brute force over k >= 0, no modular arithmetic
+            ok = any(a * k + b == idx for k in range(len(sibs) + abs(b) + 2))
+        elif k in ("first_type", "last_type"):
+            same = [s for s in (_elem_children(el.parent) if el.parent is not None else [el])
+                    if s.tag == el.tag]
+            ok = same[0 if k == "first_type" else -1] is el
+        elif k == "only":
+            ok = el.parent is None or len(_elem_children(el.parent)) == 1
+        elif k == "empty":
+            ok = all(isinstance(c, str) and c == "" for c in el.children)
+        elif k == "root":
+            ok = el.parent is None or el.parent.tag == "#document"
+        elif k == "dash":
+            v = el.get(part[1])
+            ok = v is not None and (v == part[2] or v.startswith(part[2] + "-"))
+        elif k == "aflag":
+            _, name, op, val, flag = part
+            v = el.get(name)
+            if v is not None and flag in "iI":
+                v, val = v.lower(), val.lower()
+            if v is None:
+                ok = False
+            elif op == "=":
+                ok = v == val
+            elif op == "~=":
+                ok = val in v.split()
+            elif op == "|=":
+                ok = v == val or v.startswith(val + "-")
+            else:  # ^= $= *= with a non-empty value
+                ok = {"^=": v.startswith, "$=": v.endswith, "*=": v.__contains__}[op](val)
         else:  # not
             ok = not match_compound(el, part[1])
         if not ok:
@@ -451,6 +498,160 @@ def test_css_selector_parity_fuzz(block: int) -> None:
             f"seed={1000 + block}/{it} selector={sel!r}\n"
             f"got={[e.tag for e in got]} want={[e.tag for e in want]}"
         )
+
+
+# --------------------------------------------------------------------------
+# CSS, wider grammar: An+B forms, the *-of-type family, :only-child/:empty/
+# :root, [a|=v], case flags, quoted values holding ',', ')' and ']', and
+# combinators with and without spaces, evaluated from random scopes
+# --------------------------------------------------------------------------
+
+WIDE_VALS = ["a,b", "x)y", "p]q", "V", "v", "en", "en-us", "al-pha", "al"]
+WIDE_FLAGS = {
+    "first_type": ":first-of-type", "last_type": ":last-of-type",
+    "only": ":only-child", "empty": ":empty", "root": ":root",
+}
+NTH_NAMES = ["nth-child", "nth-last-child", "nth-of-type", "nth-last-of-type"]
+
+
+def gen_wide_tree(rng: random.Random) -> Element:
+    """Like gen_tree, with WIDE_VALS attribute values and more childless
+    elements (``:empty``)."""
+    def node(depth: int) -> str:
+        tag = rng.choice(TAGS)
+        attrs = []
+        if rng.random() < 0.5:
+            attrs.append(f'class="{rng.choice(CLASSES)}"')
+        for name in ("title", "data-x"):
+            if rng.random() < 0.5:
+                attrs.append(f'{name}="{rng.choice(WIDE_VALS)}"')
+        inner = f"t{rng.randint(0, 9)}" if rng.random() < 0.3 else ""
+        if depth < 3 and rng.random() < 0.6:
+            inner += "".join(node(depth + 1) for _ in range(rng.randint(1, 4)))
+        a = (" " + " ".join(attrs)) if attrs else ""
+        return f"<{tag}{a}>{inner}</{tag}>"
+
+    return parse_html(f"<html><body>{node(0)}{node(0)}</body></html>")
+
+
+def gen_anb(rng: random.Random) -> tuple:
+    """(text, a, b) of an An+B argument in one of its spellings."""
+    a, b = rng.randint(-2, 3), rng.randint(-2, 4)
+    return rng.choice([
+        ("odd", 2, 1), ("even", 2, 0), ("ODD", 2, 1), ("n", 1, 0),
+        (f"-n+{abs(b)}", -1, abs(b)), (str(b), 0, b), (f"+{abs(b)}", 0, abs(b)),
+        (f"{a}n", a, 0), (f"{a}n+{abs(b)}", a, abs(b)), (f"{a}N-{abs(b)}", a, -abs(b)),
+        (f" {a}n + {abs(b)} ", a, abs(b)), (f"-{abs(a)}n+{abs(b)}", -abs(a), abs(b)),
+    ])
+
+
+def gen_wide_part(rng: random.Random, nested: bool = False) -> tuple:
+    kind = rng.choice(
+        ["anb", "flag", "dash", "aflag", "quoted"] + ([] if nested else ["not"])
+    )
+    name = rng.choice(["title", "data-x"])
+    if kind == "anb":
+        return ("anb", rng.choice(NTH_NAMES), *gen_anb(rng))
+    if kind == "flag":
+        return (rng.choice(list(WIDE_FLAGS)),)
+    if kind == "dash":
+        return ("dash", name, rng.choice(["en", "al", "v", "a"]))
+    if kind == "aflag":
+        op = rng.choice(["=", "^=", "$=", "*=", "~=", "|="])
+        return ("aflag", name, op, rng.choice(WIDE_VALS + ["EN", "Al-PHA"]),
+                rng.choice("iIsS"))
+    if kind == "quoted":
+        op = rng.choice(["=", "^=", "$=", "*=", "~="])
+        return ("attr", name, op, rng.choice(WIDE_VALS[:3]))
+    return ("not", {"tag": None, "parts": [gen_wide_part(rng, nested=True)]})
+
+
+def gen_wide_chain(rng: random.Random) -> list:
+    """gen_chain with 0-2 wider-grammar parts added to each compound."""
+    chain = gen_chain(rng)
+    for comp in [chain[0]] + [c for _, c in chain[1:]]:
+        for _ in range(rng.randint(0, 2)):
+            comp["parts"].append(gen_wide_part(rng))
+    return chain
+
+
+def render_spaced(chain: list, rng: random.Random) -> str:
+    """render_chain with each combinator spaced at random: 'a>b',
+    'a  ~  b', 'a +b'."""
+    s = render_compound(chain[0])
+    for comb, comp in chain[1:]:
+        if comb == " ":
+            sep = rng.choice([" ", "  "])
+        else:
+            sep = rng.choice(["", " ", "  "]) + comb + rng.choice(["", " ", "  "])
+        s += sep + render_compound(comp)
+    return s
+
+
+@pytest.mark.parametrize("block", range(2))
+def test_css_wide_grammar_parity_fuzz(block: int) -> None:
+    rng = random.Random(4000 + block)
+    for it in range(N_ITER):
+        root = gen_wide_tree(rng)
+        scope = root if rng.random() < 0.6 else rng.choice(root.iter())
+        group = [gen_wide_chain(rng) for _ in range(rng.randint(1, 3))]
+        sel = ", ".join(render_spaced(c, rng) for c in group)
+        got = css_select(scope, sel)
+        want = naive_css(scope, group)
+        assert [id(e) for e in got] == [id(e) for e in want], (
+            f"seed={4000 + block}/{it} selector={sel!r} scope={scope.tag}\n"
+            f"got={[e.tag for e in got]} want={[e.tag for e in want]}"
+        )
+
+
+def test_css_selector_compiles_once() -> None:
+    from dude_spark import dom
+
+    root = gen_wide_tree(random.Random(7))
+    sel = 'li.alpha > a, :is(p, em):nth-child(odd of [title="a,b"])'
+    dom._compile_css.cache_clear()
+    first = css_select(root, sel)
+    for _ in range(99):
+        assert css_select(root, sel) == first
+    assert dom._compile_css.cache_info().misses == 1
+
+
+def test_css_compiled_selector_shared_across_threads() -> None:
+    """A cached selector holds no evaluation state: threads evaluating one
+    compiled ``:has``/``:is`` selector on different trees all get their
+    single-threaded answers."""
+    import sys
+    import threading
+
+    sel = "div:has(> p.alpha), span:has(~ em):is(body *), li:has(+ a)"
+    blocks = ['<div><p class="alpha">x</p></div>', "<div><p>y</p></div>",
+              "<li>a</li><a>b</a>", "<span>s</span><em>e</em>", "<span>t</span>"]
+    trees = [
+        parse_html("<html><body>" + "".join(
+            random.Random(8000 + i).choices(blocks, k=60)) + "</body></html>")
+        for i in range(8)
+    ]
+    want = [[id(e) for e in css_select(t, sel)] for t in trees]
+    bad = []
+
+    def work(i: int) -> None:
+        for _ in range(200):
+            if [id(e) for e in css_select(trees[i], sel)] != want[i]:
+                bad.append(i)
+                return
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert not bad and any(want)
 
 
 # --------------------------------------------------------------------------
@@ -894,6 +1095,7 @@ CSS_UNSUPPORTED = [
     "div:hover", "a:visited", "p::before", "p::after",
     "div:lang()", "div:nth-child(2n of)", "div:nth-col(2)",
     ":focus-within", "div:dir(ltr)", "div:has(a", ":is(div,, p)",
+    "div >", "div ~", ":not()",
 ]
 XPATH_UNSUPPORTED = [
     # substring-after/translate/number/boolean moved to SUPPORTED in r5
